@@ -92,25 +92,46 @@ def _size_bytes(v: str) -> int:
     return int(s)
 
 
-def scan_is_serial(spark: SparkSession, sf_dir: str, table: str) -> bool:
-    """True when ``table``'s file would scan in far fewer splits than
-    the cluster has cores — the same byte gate ``load_tables``'s
-    ``fan_out`` uses, exposed for operators that want to repartition a
-    NARROW projection of the table instead of the raw scan (fanning
-    out after a heavy column is dropped shuffles bytes the raw-scan
-    fan-out would have carried, e.g. document text). At real scale the
-    file splits properly and this returns False, leaving the classic
-    plan untouched."""
-    par = spark.sparkContext.defaultParallelism
+def under_split(splits: int | None, par: int) -> bool:
+    """The fan-out gate: True when an input scans in fewer than
+    ``max(par // 2, 2)`` splits on a cluster of ``par`` cores.
+    ``None`` (split count unknown: multi-file dir or remote path)
+    counts as splittable. The floor of 2 keeps the gate live on 2- and
+    3-core hosts, where ``par // 2`` would never exceed one split."""
+    return splits is not None and splits < max(par // 2, 2)
+
+
+def lake_splits(spark: SparkSession, sf_dir: str, table: str) -> int | None:
+    """Split-count estimate for ``table``'s single parquet file, from
+    its size and ``maxPartitionBytes`` — no scan is planned. ``None``
+    when the table is not one local file (multi-file dir or remote)."""
     max_split = _size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    path = os.path.join(sf_dir, f"{table}.parquet")
     try:
-        est_splits = max(1, os.path.getsize(path) // max_split)
+        size = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:
-        return False  # multi-file dir or remote: assume splittable
-    return est_splits < par // 2
+        return None
+    return max(1, size // max_split)
+
+
+def spread(df: DataFrame, splits: int | None, *keys: str) -> DataFrame:
+    """The one fan-out policy: repartition ``df`` to
+    ``defaultParallelism`` when its input is under-split
+    (:func:`under_split`), hashing on ``keys`` when given so a
+    downstream join or aggregate on them reuses the partitioning;
+    otherwise return ``df`` unchanged.
+
+    Parquet parallelism is capped by row-group count, and the sandbox
+    tables and small scratch intermediates are one row group per file,
+    so their scans run as one task whatever the split config says.
+    ``splits`` comes from :func:`lake_splits` for lake tables or from
+    the once-per-path scratch probe (``_helpers._scratch_splits``);
+    never from a per-call ``df.rdd.getNumPartitions()``, which plans a
+    physical scan on the Spark driver. At real scale inputs split
+    properly and the plan is unchanged."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par, *keys) if under_split(splits, par) else df
 
 
 def load_tables(
@@ -121,24 +142,12 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet tables as DataFrames keyed by name.
 
-    ``fan_out`` names tables whose scan should be repartitioned to
-    cluster parallelism when the file itself cannot split (guide §2.5:
-    "one huge unsplittable file … repartition immediately after the
-    read"). Parquet parallelism is capped by ROW-GROUP count, not by
-    split config — the bench tables are written as one row group per
-    file, so every scan is one task no matter what
-    ``maxPartitionBytes``/``openCostInBytes`` say (measured: q1's
-    scan+decimal-aggregate stage ran 3 tasks/1 effective at sf0.1;
-    fanning out cut the query 4x). Only callers whose downstream work
+    ``fan_out`` names tables whose scan goes through :func:`spread`
+    with the :func:`lake_splits` byte estimate: an under-split file is
+    repartitioned round-robin to ``defaultParallelism``, a splittable
+    one keeps the classic scan plan. Only callers whose downstream work
     is CPU-heavy per row opt in — for a scan feeding a shuffle join or
-    a cheap map-side aggregate the extra exchange is pure loss. The
-    byte gate keeps the repartition OUT of any plan where the scan
-    splits properly (a production table above ~16 splits), so at real
-    scale the plan is unchanged."""
-    par = spark.sparkContext.defaultParallelism
-    max_split = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
+    a cheap map-side aggregate the extra exchange is pure loss."""
     out: dict[str, DataFrame] = {}
     for t in names:
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -148,12 +157,7 @@ def load_tables(
             else _read_parquet_cached(spark, path)
         )
         if t in fan_out:
-            try:
-                est_splits = max(1, os.path.getsize(path) // max_split)
-            except OSError:
-                est_splits = par  # multi-file dir or remote: assume splittable
-            if est_splits < par // 2:
-                df = df.repartition(par)
+            df = spread(df, lake_splits(spark, sf_dir, t))
         out[t] = df
     return out
 

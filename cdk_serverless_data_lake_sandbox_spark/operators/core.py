@@ -143,11 +143,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary. Scan-filter-agg: the filter and the
     6-column projection push into the parquet scan; partial aggregation
     happens map-side so the shuffle carries only 6 grouped rows per
-    partition regardless of input size. The scan fans out when the file
-    cannot split (single row group — guide §2.5): the chained decimal
-    arithmetic is the cost here, and serializing it on one task ran 4x
-    slower at sf0.1; with a splittable production file the gate leaves
-    the classic scan→partial-agg plan untouched."""
+    partition regardless of input size. The scan fans out
+    (``load_tables`` fan_out): the chained decimal arithmetic is the
+    cost here."""
     li = load_tables(spark, sf_dir, ("lineitem",), fan_out=("lineitem",))["lineitem"]
     one = F.lit(1).cast("decimal(18,4)")
     disc_price = dec("l_extendedprice") * (one - dec("l_discount"))
@@ -399,9 +397,8 @@ def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: orders whose total quantity exceeds a threshold.
     The HAVING subquery becomes a semi-join on the aggregated keys —
     one shuffle on l_orderkey shared by both the filter and the agg.
-    (A q1-style lineitem fan-out was probed at 2.2x SLOWER here — the
-    scan feeds two shuffle consumers, so the added exchange is pure
-    loss, exactly the case the load_tables docstring warns about.)"""
+    No lineitem fan-out: the scan feeds two shuffle consumers, so an
+    added exchange is pure loss."""
     t = load_tables(spark, sf_dir, ("customer", "orders", "lineitem"))
     big = (
         t["lineitem"]

@@ -276,10 +276,8 @@ def decontaminate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row filter over the bound position list. Never
     O(corpus x bench); no shuffle of document text beyond the flagged
     position lists."""
-    # fan out (guide §2.5): the gram explode and the in-row strip fold
-    # are this query's CPU and ran serially on the single-row-group
-    # bench file (profiled: one 0.8 s single-task stage); the byte
-    # gate self-disables on splittable production files
+    # fan out: the gram explode and the in-row strip fold are this
+    # query's CPU
     d = load_tables(
         spark, sf_dir, ("documents",), fan_out=("documents",)
     )["documents"].select(

@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    lake_splits,
+    load_tables,
+    spread,
+)
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
     round_rat,
@@ -106,21 +110,12 @@ _BAND_ROWS = 4
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, spread across the session's shuffle parallelism.
-    The driver tables arrive as one parquet file, which would pin the
-    shingle explode and pair generation to a single task; at real
-    scale you get many input splits for free, here we repartition by
-    the stable key."""
+    """documents through the one fan-out policy (``catalog.spread``),
+    hashed on the stable key: an under-split scan (the sandbox tables
+    are one parquet file) would pin the shingle explode and pair
+    generation to a single task."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Only pay the redistribution shuffle when the scan is actually
-    # under-parallel (one small parquet file -> one task). At real
-    # scale the corpus arrives as thousands of splits and an
-    # unconditional repartition would be a full extra shuffle of the
-    # corpus for nothing.
-    if docs.rdd.getNumPartitions() >= max(n // 2, 2):
-        return docs
-    return docs.repartition(n, "doc_id")
+    return spread(docs, lake_splits(spark, sf_dir, "documents"), "doc_id")
 
 
 # ---------------------------------------------------------------- C1

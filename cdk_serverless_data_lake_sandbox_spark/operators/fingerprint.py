@@ -33,7 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    lake_splits,
+    load_tables,
+    spread,
+)
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize_lazy,
     round_rat,
@@ -54,10 +58,19 @@ _MIN_SHARED = 3
 _TOP_PAIRS = 50
 
 
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents through the fan-out policy (``catalog.spread``)."""
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    return spread(docs, lake_splits(spark, sf_dir, "documents"))
+
+
 def _fingerprints(docs: DataFrame, k: int = _K, w: int = _W) -> DataFrame:
     """Distinct selected fingerprints per document:
     (doc_id, n_grams, h, p). Extraction is fully in-row; the distinct
-    is the first shuffle (selected sets are ~2/(w+1) of gram count)."""
+    is the first shuffle (selected sets are ~2/(w+1) of gram count).
+    The extraction is CPU-bound (interpreted higher-order functions),
+    so callers hand in ``docs`` through the fan-out policy
+    (:func:`_docs`)."""
     # Gram hash: an explicit Horner polynomial over character codes
     # (base 257, 40-bit prime modulus applied per step so nothing
     # overflows int64) — pure codegen arithmetic, measured 2.4x faster
@@ -99,14 +112,6 @@ def _fingerprints(docs: DataFrame, k: int = _K, w: int = _W) -> DataFrame:
                     (acc, x) -> IF(acc.h IS NULL OR x.h <= acc.h, x, acc)) AS f,
                   size(gs) AS n))), 1)"""
     )
-    # The per-row extraction is CPU-bound (interpreted higher-order
-    # functions), so it must run at cluster parallelism even when the
-    # input is a handful of small files Spark bin-packs into one
-    # split. Fan out only in that case — a corpus that already has
-    # enough splits (the 100 TB case) must NOT pay a full shuffle.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par // 2:
-        docs = docs.repartition(par)
     return (
         docs.where(F.length("text") >= k + w - 1)
         .select("doc_id", F.explode(sel).alias("e"))
@@ -185,11 +190,9 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit reads before running pair detection. One corpus scan with
     in-row extraction, a distinct, one posting aggregation, one join
     back; every aggregation map-side combinable."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    docs = _docs(spark, sf_dir)
     # fp feeds two plan branches (posting counts + the join back) and
     # the pairs query: materialize the extraction once per corpus.
-    # materialize_lazy skips even the frame CONSTRUCTION on a cache
-    # hit (_fingerprints probes partition counts on the driver).
     fp = materialize_lazy(
         spark, f"winnow:{sf_dir}", lambda: _fingerprints(docs)
     )
@@ -256,7 +259,7 @@ def winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold means any >=19-char shared substring produces at least
     one shared fingerprint, so lightly-edited mirrors surface here
     even when exact-hash dedup misses them."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    docs = _docs(spark, sf_dir)
     dh = (
         materialize_lazy(spark, f"winnow:{sf_dir}", lambda: _fingerprints(docs))
         .select("doc_id", "h")

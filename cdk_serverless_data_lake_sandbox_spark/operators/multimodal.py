@@ -2259,10 +2259,8 @@ WHERE bit_count(xor(a.h, b.h)) <= {hamming_max}
 
 
 def _planted_band_sigs(spark: SparkSession, sf_dir: str, salt: str, col: str) -> DataFrame:
-    # NO fan-out here (r11 probe): the band twins derive ~3 md5s per
-    # doc — the added exchange measured 1.4-1.6x SLOWER than the
-    # serial scan. The video twin (10 md5s/doc) is heavy enough to
-    # win and fans out at its own site.
+    # no fan-out: ~3 md5s per doc are below the exchange's cost; the
+    # video twin (10 md5s/doc) is heavy enough and fans out at its site.
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     return docs.where(
         F.col("lang").isNotNull() & F.col("source").isNotNull()
@@ -2332,8 +2330,7 @@ def framehash_jaccard_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5) over engine-portable per-doc key sets, making the relational
     half of the perceptual video dedup hash-exact driver-gated (the
     frame decode stays pytest-pinned — C110)."""
-    # fan out: same rationale as _planted_band_sigs (10 md5s per doc
-    # map-side, serial on the bench file's single row group)
+    # fan out: 10 md5s per doc map-side (see _planted_band_sigs)
     docs = load_tables(
         spark, sf_dir, ("documents",), fan_out=("documents",)
     )["documents"]

@@ -22,6 +22,9 @@ from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     round_rat,
     sql_round_rat,
 )
+from cdk_serverless_data_lake_sandbox_spark.operators.dedup import (
+    _docs as _docs_by_id,  # documents hash-spread on doc_id when under-split
+)
 from cdk_serverless_data_lake_sandbox_spark.registry import register
 
 
@@ -778,12 +781,9 @@ def strip_dup_spans_frame(
     does). The Spark side hashes spans with xxhash64 (8-byte shuffle
     keys); the oracle groups raw span strings — identical results
     modulo a ~2^-64 collision probability, the same trade
-    ``dup_span_profile`` documents."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par // 2:
-        # hash by doc_id (see strip_dup_chars_frame): extraction fans
-        # out AND the rebuild join reuses the partitioning
-        docs = docs.repartition(par, "doc_id")
+    ``dup_span_profile`` documents. The extraction is CPU-bound per
+    row, so hand ``docs`` in through ``catalog.spread`` hashed on
+    doc_id (the registered entry uses ``dedup._docs``)."""
     base = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w")
     )
@@ -873,7 +873,7 @@ def strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus documents table (k=8, position-span index shared per
     sf_dir)."""
     return strip_dup_spans_frame(
-        _docs(spark, sf_dir), scratch_key=f"{sf_dir}:spans{_SPAN_K}pos"
+        _docs_by_id(spark, sf_dir), scratch_key=f"{sf_dir}:spans{_SPAN_K}pos"
     )
 
 
@@ -1074,24 +1074,17 @@ def strip_dup_chars_frame(docs: DataFrame, k: int = _CHAR_K) -> DataFrame:
     string — a second fold, no per-char shuffle. The oracle rebuilds
     per-character (quadratic-ish but exact) from raw span strings;
     Spark ships 8-byte hashes, the usual 2^-64 collision trade."""
-    # Fan the extraction out when the corpus arrives in too few
-    # splits (the fingerprint precedent), then PIN the position rows
-    # for the two consumers (r11: the previous scratch-parquet
-    # materialization re-read AND re-repartitioned the ~16-bytes-per-
-    # character pos table once per consumer — measured 1.25 s per
-    # re-read at sf0.1, more than the extraction itself; at scale the
-    # pos table is ~1.6x the corpus bytes, so pinning instead of
-    # parqueting it is the cheaper discipline there too — reliable
-    # mode still lands it on storage once).
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par // 2:
-        # HASH by doc_id, not round-robin (r11): same fan-out for the
-        # extraction, but the rebuild join on doc_id then REUSES this
-        # partitioning for the docs side (no second docs exchange), it
-        # needs no pre-repartition sort, and the user-pinned partition
-        # count stops AQE from coalescing the CPU-heavy rebuild-fold
-        # stage down to the 1-2 tasks its byte size suggests.
-        docs = docs.repartition(par, "doc_id")
+    # The extraction is CPU-bound per row, so hand ``docs`` in through
+    # ``catalog.spread`` hashed on doc_id: the extraction fans out, the
+    # rebuild join on doc_id reuses the partitioning (no second docs
+    # exchange), and the user-pinned partition count stops AQE from
+    # coalescing the CPU-heavy rebuild fold to the 1-2 tasks its byte
+    # size suggests. PIN the position rows for the two consumers: a
+    # scratch-parquet materialization would re-read the
+    # ~16-bytes-per-character pos table once per consumer, and at
+    # scale the pos table is ~1.6x the corpus bytes, so pinning is the
+    # cheaper discipline there too (reliable mode still lands it on
+    # storage once).
     pos = pin(_char_kgram_rows_arrow(docs, k))
     own = (
         pos.groupBy("h")
@@ -1163,7 +1156,7 @@ def strip_dup_chars_frame(docs: DataFrame, k: int = _CHAR_K) -> DataFrame:
 def strip_dup_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`strip_dup_chars_frame` over the
     corpus documents table (k=50, char-span index keyed per sf_dir)."""
-    return strip_dup_chars_frame(_docs(spark, sf_dir))
+    return strip_dup_chars_frame(_docs_by_id(spark, sf_dir))
 
 
 # ---------------------------------------------------------------- D20

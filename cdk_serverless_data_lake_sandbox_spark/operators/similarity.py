@@ -14,7 +14,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    lake_splits,
+    load_tables,
+    spread,
+)
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
     round_rat,
@@ -796,18 +800,12 @@ def kmeans_assign(e: DataFrame, k: int, iters: int) -> DataFrame:
     the final assignment. Inlining the driver-collected centroids as
     a literal array removes every assignment Exchange; results are
     bit-identical (same fold order, same tie-break — see
-    :func:`_kmeans_argmin`)."""
-    # The argmin projection is CPU-bound per row (k x d interpreted
-    # fold), so it must run at cluster parallelism even when the
-    # corpus is a handful of small files Spark bin-packs into one
-    # split (the fingerprint-extraction precedent). Fan out ONLY in
-    # that case — a corpus with enough splits (the 100 TB case) must
-    # not pay the extra shuffle. Measured r11: without this, the
-    # no-shuffle assign serialized the whole Lloyd loop on one core
-    # and ran 1.6x SLOWER than the crossJoin+shuffle it replaced.
-    par = e.sparkSession.sparkContext.defaultParallelism
-    if e.rdd.getNumPartitions() < par // 2:
-        e = e.repartition(par)
+    :func:`_kmeans_argmin`).
+
+    The argmin projection is CPU-bound per row (k x d interpreted
+    fold) and nothing shuffles ``e`` before it, so callers hand in
+    ``e`` through the fan-out policy (``catalog.spread``); an
+    under-split input would run the whole Lloyd loop on one core."""
     cents = _kmeans_centroids(e, k, iters)
     # two-stage select: the outer project references the argmin struct
     # twice, and CollapseProject keeps non-cheap aliases un-inlined,
@@ -923,7 +921,10 @@ def _kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         f"kmeans-assign-fixed:{sf_dir}:{_KMEANS_K}x{_KMEANS_ITERS}",
         lambda: kmeans_assign(
-            _emb(spark, sf_dir).select("vec_id", "embedding"),
+            spread(
+                _emb(spark, sf_dir).select("vec_id", "embedding"),
+                lake_splits(spark, sf_dir, "embeddings"),
+            ),
             _KMEANS_K,
             _KMEANS_ITERS,
         ).select("vec_id", "cluster", "d2"),
@@ -1107,7 +1108,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # are unchanged; at larger corpora pair work stays O(n * 500).
         n = e.count()
         k = max(_KMEANS_K, min(256, n // 500))
-        return kmeans_assign(e, k, _KMEANS_ITERS).select(
+        fanned = spread(e, lake_splits(spark, sf_dir, "embeddings"))
+        return kmeans_assign(fanned, k, _KMEANS_ITERS).select(
             "vec_id", "embedding", "cluster", _norm("embedding").alias("nrm")
         )
 
@@ -2175,10 +2177,8 @@ def embedding_dim_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d=64 cosine doubles as cos_full, so no separate full-dim pass.
     One max_by aggregation per (dim, query) — no windows over the
     corpus, shuffle carries |dims| x |queries| rows. The corpus side
-    fans out (guide §2.5: the bench file is one row group, so the
-    scan is one task and the |dims| prefix dots per pair serialize on
-    it; the byte gate disables the repartition on splittable
-    production files), and the |dims| x |queries| pick frame is
+    fans out (``load_tables`` fan_out: the |dims| prefix dots per pair
+    are the cost), and the |dims| x |queries| pick frame is
     pinned — it feeds BOTH the dim=64 reference branch and the
     agreement join, and unpinned Spark executed the whole scoring
     pass twice (profiled: two ~1.3 s single-task stages per call,

@@ -15,7 +15,11 @@ from pyspark.sql.window import Window
 
 from decimal import Decimal
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    lake_splits,
+    load_tables,
+    spread,
+)
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     dec,
     materialize,
@@ -2606,9 +2610,8 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab^2-/vocab-bounded), and the pair/token totals are summed
     FROM them — the previous plan re-ran the pair explode for
     ``pp = pr.count()`` and the token explode for ``tt``, four corpus
-    passes where two suffice. The scan also fans out when the file
-    cannot split (single row group): the windowed pair transform is
-    the cost, and it serialized on one task."""
+    passes where two suffice. The scan fans out (``load_tables``
+    fan_out): the windowed pair transform is the cost."""
     docs = load_tables(spark, sf_dir, ("documents",), fan_out=("documents",))[
         "documents"
     ]
@@ -2729,8 +2732,8 @@ def skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r11: the frequency table PINS (vocab-bounded, consumed by the keep
     join AND the total — unpinned it re-ran the corpus token explode
-    per consumer), and the scan fans out when the file cannot split
-    (single row group serialized the posexplode)."""
+    per consumer), and the scan fans out (``load_tables`` fan_out):
+    the posexplode is the cost."""
     docs = load_tables(spark, sf_dir, ("documents",), fan_out=("documents",))[
         "documents"
     ]
@@ -2891,19 +2894,11 @@ def bootstrap_ci_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length("text").cast("bigint").alias("v")
     )
     # fan out the NARROW (doc_id, v) rows feeding the replicate
-    # expansion (guide §2.5): the per-(doc, replicate) md5 transform is
-    # the query's CPU, and on the single-row-group bench file it ran as
-    # ONE ~1 s task; repartitioning after the text column is projected
-    # away shuffles 16-byte rows, not documents. The byte gate keeps
-    # splittable production files on the classic scan plan, and the
-    # stats branch below keeps the un-fanned frame.
-    from cdk_serverless_data_lake_sandbox_spark.catalog import scan_is_serial
-
-    rep_src = (
-        x.repartition(spark.sparkContext.defaultParallelism)
-        if scan_is_serial(spark, sf_dir, "documents")
-        else x
-    )
+    # expansion: the per-(doc, replicate) md5 transform is the query's
+    # CPU, and spreading after the text column is projected away
+    # shuffles 16-byte rows, not documents. The stats branch below
+    # keeps the un-fanned frame.
+    rep_src = spread(x, lake_splits(spark, sf_dir, "documents"))
     u = _boot_u_spark("doc_id", "r")
     # hash ONCE per (doc, replicate); the 6-way CDF CASE then reads
     # the u COLUMN instead of re-inlining the hash per branch
@@ -2997,13 +2992,9 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     medians are nearest-rank element picks of in-row sorted arrays,
     so no cross-row float summation exists anywhere; slope/intercept
     are single IEEE-identical values, hash-exact vs the oracle."""
-    # fan_out: the single-row-group lineitem scan otherwise runs the
-    # two broadcast-join probes + month/decimal projection + partial
-    # aggregation on ONE task (r12 profile: the scan stage was the
-    # query); the scan feeds exactly one shuffle consumer (the
-    # brand-month groupBy), which is the profile the q1 precedent
-    # showed 4x under load. The byte gate self-disables on splittable
-    # production files.
+    # fan_out: the two broadcast-join probes, the month/decimal
+    # projection and the partial aggregation are the cost, and the scan
+    # feeds exactly one shuffle consumer (the brand-month groupBy).
     t = load_tables(
         spark, sf_dir, ("lineitem", "orders", "part"), fan_out=("lineitem",)
     )
@@ -3138,10 +3129,8 @@ def mann_whitney_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-group divisions/sqrt on identical integer inputs. The
     global rank table is one window over DISTINCT latency VALUES —
     value-domain-bounded (~130 day values), never corpus-sized."""
-    # fan_out probed and REJECTED (r12): the theil_sen recipe measured
-    # 1.043x/1.085x SLOWER on two one-boot A/Bs — the per-row work
-    # here (one datediff + broadcast probe) is below the exchange's
-    # cost, the dhash/afp per-row-weight floor from r11. Do not retry.
+    # no fan_out: the per-row work (one datediff + broadcast probe) is
+    # below the exchange's cost.
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
     lat = t["lineitem"].join(
         t["orders"].select("o_orderkey", "o_orderdate", "o_orderpriority"),

@@ -2989,11 +2989,8 @@ def unigram_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = materialize_lazy(
         spark, f"ulm-final-seg:{sf_dir}", lambda: _ulm_final_seg(docs, sf_dir)
     )
-    # fan out the stitch scan (guide §2.5): the map-stitch path is one
-    # corpus pass whose per-doc rebuild fold is CPU-heavy, and the
-    # bench corpus is a single row group — unfanned, the whole apply
-    # ran as ONE 2 s task (profiled); the byte gate keeps production
-    # splittable files on the classic scan plan
+    # fan out the stitch scan: the map-stitch path is one corpus pass
+    # whose per-doc rebuild fold is CPU-heavy
     stitch_docs = load_tables(
         spark, sf_dir, ("documents",), fan_out=("documents",)
     )["documents"]

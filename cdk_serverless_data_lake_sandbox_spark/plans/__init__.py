@@ -94,9 +94,11 @@ def plan_profile(df_or_plan: DataFrame | str) -> dict:
     """One-call physical-plan profile: the counters that decide 100 TB
     behavior (shuffle exchanges, single-partition exchanges, join
     strategies, cartesian products, single-reducer windows, scans and
-    pushdown coverage). Used by the registry-wide audit script and
-    available to user pipelines as a pre-flight check before
-    submitting a plan to a large cluster."""
+    pushdown coverage) plus the partition counts of user-pinned
+    exchanges (``REPARTITION_BY_NUM``: fan-outs and explicit keyed
+    repartitions, which AQE never coalesces). Used by the
+    registry-wide audit script and available to user pipelines as a
+    pre-flight check before submitting a plan to a large cluster."""
     plan = df_or_plan if isinstance(df_or_plan, str) else formatted_plan(df_or_plan)
     args = re.findall(r"^Arguments: (.*)$", plan, re.M)
     hash_ex = sum(
@@ -114,6 +116,9 @@ def plan_profile(df_or_plan: DataFrame | str) -> dict:
         "single_windows": len(single_reducer_window_nodes(plan)),
         "scans": plan.count(") Scan parquet"),
         "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
+        "pinned": [
+            int(n) for n in re.findall(r"(\d+)\), REPARTITION_BY_NUM", plan)
+        ],
     }
 
 

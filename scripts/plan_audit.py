@@ -1,7 +1,8 @@
 """Plan-hygiene audit: sweep EVERY registered query's physical plan
 and tabulate the properties that decide 100 TB behavior — shuffle
 count, broadcast vs sort-merge joins, cartesian products,
-single-partition exchanges feeding windows, and scan/pushdown counts.
+single-partition exchanges feeding windows, scan/pushdown counts, and
+the partition counts of user-pinned exchanges.
 
 Counting parses the formatted-explain DETAIL sections ("(id) Exchange
 / Arguments: hashpartitioning(...)") — the tree section prints bare
@@ -102,7 +103,9 @@ def main() -> None:
             f"{len(rows)} registered queries at sf0.01. Columns: shuffle\n"
             "exchanges (hash/range partitioning), single-partition\n"
             "exchanges, broadcast hash joins, sort-merge joins, parquet\n"
-            "scans, scans with pushed filters.\n\n"
+            "scans, scans with pushed filters, and the partition counts of\n"
+            "user-pinned exchanges (REPARTITION_BY_NUM: fan-outs and keyed\n"
+            "repartitions; AQE never coalesces them).\n\n"
         )
         f.write("## Flags\n\n" + ("\n".join(flags) + "\n" if flags else "none\n"))
         f.write(
@@ -122,13 +125,14 @@ def main() -> None:
         )
         f.write(
             "\n## Per-query plan shape\n\n"
-            "| query | shuffles | single-part | BHJ | SMJ | scans | pushed |\n"
-            "| --- | --- | --- | --- | --- | --- | --- |\n"
+            "| query | shuffles | single-part | BHJ | SMJ | scans | pushed | pinned |\n"
+            "| --- | --- | --- | --- | --- | --- | --- | --- |\n"
         )
         for name, a in rows:
+            pinned = ", ".join(map(str, a["pinned"])) or "-"
             f.write(
                 f"| {name} | {a['exchanges']} | {a['single_part']} | {a['bhj']} "
-                f"| {a['smj']} | {a['scans']} | {a['pushed']} |\n"
+                f"| {a['smj']} | {a['scans']} | {a['pushed']} | {pinned} |\n"
             )
     print(f"{len(rows)} audited, {len(flags)} flags, {len(bounded)} bounded-ok")
     spark.stop()

@@ -3,9 +3,9 @@
 Each test pins the CORRECTNESS side of a perf change (the perf side is
 adjudicated by one-boot probes recorded in OPTIMIZATION_r12.md):
 
-- the serial-scan gates (``scan_is_serial`` / ``load_tables`` fan_out)
-  must provably SELF-DISABLE on a file the split config can already
-  parallelize — the r11 verdict asked for this pin so the bench-layout
+- the fan-out policy (``catalog.spread``, behind ``load_tables``
+  fan_out and scratch reads) must provably SELF-DISABLE on an input
+  the split config can already parallelize, so the bench-layout
   repartition demonstrably never reaches a production plan.
 - ``_bm25_scored``'s document-length table is keyed scratch now: the
   scratch-hit path (second invocation in one application) must be
@@ -22,8 +22,10 @@ import os
 from pyspark.sql import functions as F
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    lake_splits,
     load_tables,
-    scan_is_serial,
+    spread,
+    under_split,
 )
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
@@ -38,10 +40,20 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _fan_out_exchanges(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        p for p in ("RoundRobinPartitioning", "hashpartitioning") if p in plan
+    ]
+
+
 def test_serial_scan_gates_self_disable_on_splittable_file(spark, tmp_path):
     """With maxPartitionBytes shrunk so the file is worth >= 16 splits,
-    both gates must report the scan as parallel: ``scan_is_serial`` is
-    False and ``load_tables(fan_out=...)`` adds NO repartition."""
+    the fan-out policy (``catalog.spread``) must leave the scan alone:
+    the gate reports the file as split, and neither the lake-table
+    entry (``load_tables(fan_out=...)``, plain or keyed ``spread``) nor
+    a scratch read of a multi-split directory adds a
+    RoundRobinPartitioning/hashpartitioning exchange."""
     sf_dir = str(tmp_path)
     staging = os.path.join(sf_dir, "_staging")
     spark.range(200_000).select(
@@ -53,7 +65,7 @@ def test_serial_scan_gates_self_disable_on_splittable_file(spark, tmp_path):
         if f.endswith(".parquet")
     ][0]
     # the driver's tables are SINGLE FILES (<table>.parquet), which is
-    # the layout the byte gates reason about — mirror it
+    # the layout the byte gate reasons about — mirror it
     os.replace(part, os.path.join(sf_dir, "documents.parquet"))
     size = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
     par = spark.sparkContext.defaultParallelism
@@ -63,25 +75,34 @@ def test_serial_scan_gates_self_disable_on_splittable_file(spark, tmp_path):
         spark.conf.set(
             "spark.sql.files.maxPartitionBytes", str(max(size // (2 * par), 1))
         )
-        assert scan_is_serial(spark, sf_dir, "documents") is False
+        splits = lake_splits(spark, sf_dir, "documents")
+        assert not under_split(splits, par)
         df = load_tables(spark, sf_dir, ("documents",), fan_out=("documents",))[
             "documents"
         ]
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "RoundRobinPartitioning" not in plan, (
+        assert _fan_out_exchanges(df) == [], (
             "fan_out gate fired on a splittable file — the bench-layout "
             "repartition must not reach a production plan"
         )
-        # and on the real single-row-group bench table the gates engage
+        keyed = spread(
+            load_tables(spark, sf_dir, ("documents",))["documents"], splits, "doc_id"
+        )
+        assert _fan_out_exchanges(keyed) == []
+        # and on the real single-row-group bench table the gate engages
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-        assert scan_is_serial(spark, SF_SMALL, "documents") is True
+        assert under_split(lake_splits(spark, SF_SMALL, "documents"), par)
         fanned = load_tables(
             spark, SF_SMALL, ("documents",), fan_out=("documents",)
         )["documents"]
-        fplan = fanned._jdf.queryExecution().executedPlan().toString()
-        assert "RoundRobinPartitioning" in fplan
+        assert _fan_out_exchanges(fanned) == ["RoundRobinPartitioning"]
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    # a scratch directory of 2 * par files scans in enough splits: the
+    # cached probe sees them and the read stays a plain scan
+    multi = materialize(
+        spark.range(0, 800, numPartitions=2 * par), key=f"multi-split:{uuid_hex()}"
+    )
+    assert _fan_out_exchanges(multi) == []
 
 
 def test_jaccard_containment_share_keyed_postings(spark):

@@ -246,7 +246,7 @@ def test_doc_chunking_is_shuffle_free(spark):
 def test_plan_profile_counters(spark):
     """plan_profile must count what the plan actually contains: q5 has
     broadcast dim joins and a shuffle; q6 is scan+agg with pushdown
-    and no join at all."""
+    and no join at all; dedup_exact pins one fan-out exchange."""
     from cdk_serverless_data_lake_sandbox_spark.plans import plan_profile
     from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
@@ -256,3 +256,7 @@ def test_plan_profile_counters(spark):
     q6 = plan_profile(qs["q6_forecast_revenue"](spark, SF_MEDIUM))
     assert q6["scans"] == 1 and q6["pushed"] >= 1
     assert q6["bhj"] == 0 and q6["smj"] == 0
+    assert q6["pinned"] == []
+    # the one-file documents scan fans out to the core count, keyed
+    dx = plan_profile(qs["dedup_exact"](spark, SF_MEDIUM))
+    assert dx["pinned"] == [spark.sparkContext.defaultParallelism]
