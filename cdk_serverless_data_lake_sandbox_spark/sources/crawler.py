@@ -7,19 +7,25 @@ one bare, one with a CSV classifier that forces header detection
 all-string columns is indistinguishable from data. This module
 reproduces both behaviors on Spark's readers:
 
-- without a classifier, a delimited file whose first row could be data
-  (every column parses as string either way) is read headerless with
-  synthesized ``col_N`` names — exactly the Glue failure mode the
-  reference's README documents for ``name.basics``;
+- without a classifier (or with ``contains_header="UNKNOWN"``), a
+  header is detected only when some column infers a non-string type,
+  so all-string data is read headerless with synthesized ``col_N``
+  names — exactly the Glue failure mode the reference's README
+  documents for ``name.basics``;
 - with :class:`CsvClassifier` (header PRESENT), the first row becomes
   the header and types are inferred from the remaining rows.
+
+A delimited crawl is one bounded sample of raw lines, cached in the
+JVM; one inference over it (two only when no header is detected); and
+one typed scan of the dataset.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StringType, StructType
 
 
 @dataclass(frozen=True)
@@ -28,64 +34,50 @@ class CsvClassifier:
 
     delimiter: str = "\t"
     quote_symbol: str = "'"
-    contains_header: str = "PRESENT"  # PRESENT | ABSENT | UNKNOWN
+    contains_header: str = "PRESENT"  # PRESENT | ABSENT | UNKNOWN (detect)
+
+    def __post_init__(self) -> None:
+        if self.contains_header not in ("PRESENT", "ABSENT", "UNKNOWN"):
+            raise ValueError(
+                f"contains_header={self.contains_header!r}: expected PRESENT|ABSENT|UNKNOWN"
+            )
 
 
-# Rows fed to schema inference. Glue crawlers classify from a sample,
-# not the full dataset — before round 7 this module's probe + read ran
-# TWO full inferSchema scans over the raw files, which at 100 TB of
-# TSV is two table scans for what should be a metadata operation.
+# Raw lines fed to schema inference: Glue crawlers classify from a
+# sample, so inference costs O(sample) at any dataset size.
 _SAMPLE_ROWS = 10_000
 
 
-def _sample_lines(spark: SparkSession, path: str, n: int = _SAMPLE_ROWS):
-    """Bounded probe: the first ``n`` raw lines of the dataset.
-    ``limit`` plans a CollectLimit over the text scan, so Spark stops
-    reading after the first partitions that satisfy it — the probe
-    cost is O(n), independent of dataset size."""
-    return [r.value for r in spark.read.text(path).limit(n).collect()]
+def _sample_lines(spark: SparkSession, path: str, n: int = _SAMPLE_ROWS) -> DataFrame:
+    """The first ``n`` raw lines of the dataset as a one-column string
+    frame. ``limit`` stops the text scan once ``n`` lines are read; the
+    ``select`` keeps Hive partition columns out."""
+    return spark.read.text(path).select("value").limit(n)
 
 
-def _infer_from_sample(
-    spark: SparkSession,
-    lines: list[str],
-    delimiter: str,
-    quote: str,
-    use_header: bool,
-):
-    """Run Spark's own CSV inference over the in-memory sample (the
-    reader accepts an RDD of lines), so sampled inference keeps the
-    exact type-widening rules of full inference."""
-    if use_header and lines:
-        # a multi-file dataset repeats its header at every file
-        # boundary; the full reader skips those per file, so the
-        # sample must too (a stray "age" inside an int column would
-        # otherwise demote the inferred type to string)
-        head = lines[0]
-        lines = [head] + [ln for ln in lines[1:] if ln != head]
-    rdd = spark.sparkContext.parallelize(lines or [""], 1)
+def _csv_reader(
+    spark: SparkSession, delimiter: str, quote: str, use_header: bool
+) -> DataFrameReader:
     return (
         spark.read.option("header", use_header)
         .option("sep", delimiter)
         .option("quote", quote)
-        .option("inferSchema", True)
-        .option("nullValue", "\\N")
-        .csv(rdd)
-        .schema
+        .option("nullValue", "\\N")  # IMDB-style nulls
     )
 
 
-def _header_is_detectable(
-    spark: SparkSession, path: str, delimiter: str, lines: list[str] | None = None
-) -> bool:
-    """Glue-style heuristic: a header is auto-detected only when at
-    least one column is non-string (then the header row, which never
-    parses as that type, stands out). All-string data -> no header.
-    Decided from the bounded sample, never a full scan."""
-    if lines is None:
-        lines = _sample_lines(spark, path)
-    schema = _infer_from_sample(spark, lines, delimiter, '"', True)
-    return any(f.dataType.simpleString() != "string" for f in schema.fields)
+def _infer_from_sample(
+    spark: SparkSession, sample: DataFrame, delimiter: str, quote: str, use_header: bool
+) -> StructType:
+    """Spark's own CSV inference over the sample, through the JVM
+    reader's ``csv(Dataset[String])`` entry: sampled inference keeps
+    the type-widening rules of full inference, and the lines never
+    reach Python. With ``use_header`` Spark drops every line equal to
+    the header, i.e. the header each file of a multi-file dataset
+    repeats."""
+    reader = _csv_reader(spark, delimiter, quote, use_header).option("inferSchema", True)
+    lines = getattr(sample._jdf, "as")(spark._jvm.Encoders.STRING())
+    return DataFrame(reader._jreader.csv(lines), spark).schema
 
 
 def crawl_delimited(
@@ -101,48 +93,48 @@ def crawl_delimited(
     crawler pair does. Returns the typed DataFrame; the caller
     registers it in a :class:`~cdk_serverless_data_lake_sandbox_spark.catalog.Lake` zone.
 
-    Inference runs over the first ``sample_rows`` lines only (the
-    Glue-crawler sampling contract, demo_stack.py:130-145); the full
-    dataset is then scanned ONCE with the inferred schema applied
-    explicitly. The sampled-inference tradeoff is the standard one: a
-    type that only widens past the sample horizon (e.g. ints that
-    become floats after row 10k) fails to parse on those rows. The
-    caller chooses how that surfaces (round-7 review: silent NULLs
-    with no detection hook were unacceptable at the scale this
-    targets):
+    The first ``sample_rows`` lines (the Glue-crawler sampling
+    contract, demo_stack.py:130-145) are cached for the crawl and
+    inferred once. Header detection (no classifier, or
+    ``contains_header="UNKNOWN"``, which uses the classifier's
+    delimiter and quote) keeps that ``header=True`` schema when some
+    column is non-string; otherwise it infers again headerless. The
+    returned frame scans the dataset once with the inferred schema
+    applied explicitly. A sample that infers no columns (empty input)
+    raises ``ValueError`` naming ``path``.
 
-    - ``mode="PERMISSIVE"`` (default) + ``corrupt_col="_corrupt"``
-      (DEFAULT — r8 advice: silent all-NULL rows must be opt-in, not
-      the default): malformed rows land their RAW line in the corrupt
+    A type that only widens past the sample horizon (e.g. ints that
+    become floats after row 10k) fails to parse on those rows. The
+    caller chooses how that surfaces:
+
+    - ``mode="PERMISSIVE"`` + ``corrupt_col="_corrupt"`` (the
+      default): malformed rows land their RAW line in the corrupt
       column, so a post-read ``WHERE _corrupt IS NOT NULL`` count is
       the detection / DLQ-routing hook. Callers that have validated
-      their sample horizon drop the column or pass
-      ``corrupt_col=None`` to opt out.
+      their sample horizon pass ``corrupt_col=None`` to opt out.
     - ``mode="FAILFAST"``: the scan raises on the first row the
       sampled schema cannot parse — the loud option for pipelines
       that would rather re-crawl with a bigger ``sample_rows``."""
-    lines = _sample_lines(spark, path, sample_rows)
+    header, quote = "UNKNOWN", '"'
     if classifier is not None:
-        use_header = classifier.contains_header == "PRESENT"
-        delimiter = classifier.delimiter
-        quote = classifier.quote_symbol
-    else:
-        quote = '"'
-        use_header = _header_is_detectable(spark, path, delimiter, lines)
-    schema = _infer_from_sample(spark, lines, delimiter, quote, use_header)
+        header = classifier.contains_header
+        delimiter, quote = classifier.delimiter, classifier.quote_symbol
+    # cached: uncached, every inference job re-runs the limit scan
+    sample = _sample_lines(spark, path, sample_rows).cache()
+    try:
+        use_header = header != "ABSENT"
+        schema = _infer_from_sample(spark, sample, delimiter, quote, use_header)
+        if header == "UNKNOWN" and all(isinstance(f.dataType, StringType) for f in schema.fields):
+            use_header = False
+            schema = _infer_from_sample(spark, sample, delimiter, quote, False)
+    finally:
+        sample.unpersist()
+    if not schema.fields:
+        raise ValueError(f"crawl_delimited: no columns inferred from {path!r} (empty input?)")
     n_data_cols = len(schema.fields)
     if corrupt_col is not None:
-        from pyspark.sql.types import StringType
-
         schema = schema.add(corrupt_col, StringType())
-    reader = (
-        spark.read.option("header", use_header)
-        .option("sep", delimiter)
-        .option("quote", quote)
-        .option("nullValue", "\\N")  # IMDB-style nulls
-        .option("mode", mode)
-        .schema(schema)
-    )
+    reader = _csv_reader(spark, delimiter, quote, use_header).option("mode", mode).schema(schema)
     if corrupt_col is not None:
         reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
     df = reader.csv(path)
@@ -385,8 +377,6 @@ def crawl_xml(
     inferred = reader.option("samplingRatio", sampling_ratio).load(path).schema
     schema = inferred
     if corrupt_col is not None:
-        from pyspark.sql.types import StringType
-
         if corrupt_col not in schema.fieldNames():
             schema = schema.add(corrupt_col, StringType())
     typed = (

@@ -16,7 +16,8 @@ ADVICE items:
    lazily-held pinned frames.
 4. crawl_delimited defaults corrupt_col="_corrupt": rows that widen
    past the sample horizon land loudly in the DLQ column instead of
-   becoming silent all-NULLs.
+   becoming silent all-NULLs (tested with the other crawler tests in
+   test_etl_sources.py).
 5. stream_minhash_dedup_gate stamps _format.json only on TRUE
    bootstrap (no sig/ yet); a pre-existing unstamped or cross-format
    index raises the rebuild error instead of being blessed.
@@ -154,33 +155,6 @@ def test_pin_reclaim_off_switch_keeps_every_generation(spark):
         assert sorted(r.id for r in df.collect()) == list(range(4, 14))
     finally:
         spark.conf.unset("spark.graft.materializer")
-
-
-# ------------------------------------------------------------- fix 4
-def test_crawler_widening_rows_land_in_default_dlq_column(spark, tmp_path):
-    """Types that widen past the sample horizon must be DETECTED by
-    default: the malformed rows carry their raw line in _corrupt
-    instead of silently becoming all-NULL."""
-    from cdk_serverless_data_lake_sandbox_spark.sources.crawler import (
-        CsvClassifier,
-        crawl_delimited,
-    )
-
-    p = tmp_path / "widen.tsv"
-    with open(p, "w") as fh:
-        fh.write("id\tval\n")
-        for i in range(200):
-            fh.write(f"{i}\t{i}\n")
-        fh.write("200\tnot_a_number\n")  # widens int -> string past sample
-    df = crawl_delimited(
-        spark, str(p), classifier=CsvClassifier(), sample_rows=100
-    )
-    assert "_corrupt" in df.columns
-    # collect()s, not count()s: Spark refuses aggregations whose only
-    # surviving referenced column is the internal corrupt column
-    bad = df.where(F.col("_corrupt").isNotNull()).collect()
-    assert len(bad) == 1 and "not_a_number" in bad[0]["_corrupt"]
-    assert len(df.where(F.col("_corrupt").isNull()).collect()) == 200
 
 
 # ------------------------------------------------------------- fix 5

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import Lake, load_tables
@@ -80,6 +81,228 @@ def test_crawler_all_string_no_classifier_misses_header(spark, tmp_path):
     with_cls = crawl_delimited(spark, str(p), classifier=CsvClassifier())
     assert with_cls.columns == ["nconst", "primaryName", "profession", "_corrupt"]
     assert with_cls.count() == 2
+
+
+def test_crawler_unknown_header_is_detected_with_classifier_dialect(spark, tmp_path):
+    """Glue's contains_header=UNKNOWN means "detect": a typed file's
+    header row becomes the header (not a data row under col_N names),
+    detection uses the classifier's delimiter and quote, all-string
+    data stays headerless, and any other value is refused."""
+    typed = tmp_path / "typed.csv"
+    typed.write_text("id,name\n1,'a,b'\n2,c\n")
+    unknown = CsvClassifier(delimiter=",", contains_header="UNKNOWN")
+    df = crawl_delimited(spark, str(typed), classifier=unknown, corrupt_col=None)
+    assert [f.simpleString() for f in df.schema.fields] == ["id:int", "name:string"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a,b"), (2, "c")]
+
+    allstr = tmp_path / "allstr.tsv"
+    allstr.write_text(_ALL_STRING_TSV)
+    df = crawl_delimited(
+        spark, str(allstr), classifier=CsvClassifier(contains_header="UNKNOWN")
+    )
+    assert df.columns == ["col_0", "col_1", "col_2", "_corrupt"]
+
+    with pytest.raises(ValueError, match="contains_header"):
+        CsvClassifier(contains_header="YES")
+
+
+def test_crawler_empty_input_names_path(spark, tmp_path):
+    """An empty input fails at crawl time with its path, not later as
+    a query over nothing but the corrupt-record column."""
+    p = tmp_path / "empty.tsv"
+    p.write_text("")
+    with pytest.raises(ValueError, match="empty.tsv"):
+        crawl_delimited(spark, str(p))
+    with pytest.raises(ValueError, match="empty.tsv"):
+        crawl_delimited(spark, str(p), classifier=CsvClassifier())
+
+
+def _python_side_inference(spark, path, delimiter, quote, header):
+    """Reference for the crawler's schema choice, computed the way it
+    once was: the sample is collected into Python, repeated headers
+    are filtered there, and inference runs through PySpark's
+    ``csv(RDD)`` (a Python-worker round trip)."""
+    lines = [r.value for r in spark.read.text(path).limit(10_000).collect()]
+
+    def infer(q, use_header):
+        sample = lines
+        if use_header and sample:
+            sample = [sample[0]] + [ln for ln in sample[1:] if ln != sample[0]]
+        rdd = spark.sparkContext.parallelize(sample or [""], 1)
+        return (
+            spark.read.option("header", use_header)
+            .option("sep", delimiter)
+            .option("quote", q)
+            .option("inferSchema", True)
+            .option("nullValue", "\\N")
+            .csv(rdd)
+            .schema
+        )
+
+    if header == "UNKNOWN":
+        probe = infer('"', True)
+        use_header = any(f.dataType.simpleString() != "string" for f in probe.fields)
+    else:
+        use_header = header == "PRESENT"
+    schema = infer(quote, use_header)
+    if not use_header:
+        return [(f"col_{i}", f.dataType) for i, f in enumerate(schema.fields)]
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_crawler_jvm_inference_matches_python_side_reference(spark, tmp_path):
+    """The JVM-side sample inference picks the same header and types
+    as the Python-side reference on name.basics, all-string data, a
+    multi-file dataset whose files each repeat the header, quoted
+    fields and \\N nulls, with and without a classifier."""
+    from cdk_serverless_data_lake_sandbox_spark.sources.crawler import (
+        _infer_from_sample,
+        _sample_lines,
+    )
+
+    multi = tmp_path / "multi"
+    multi.mkdir()
+    for i in range(3):
+        rows = "".join(f"u{i}_{j}\t{20 + j}\t{j / 4}\n" for j in range(40))
+        (multi / f"part-{i}.tsv").write_text("name\tage\tscore\n" + rows)
+    inputs = {
+        "name.basics.tsv": _NAME_BASICS_TSV,
+        "allstr.tsv": _ALL_STRING_TSV,
+        "quoted.tsv": 'id\ttitle\tscore\n1\t"a\tb"\t1.5\n2\t"say ""hi"""\t2\n',
+        "nulls.tsv": "id\tval\tnote\n1\t\\N\t\\N\n2\t3\t\\N\n\\N\t4\t\\N\n",
+    }
+    paths = [str(multi)]
+    for name, text in inputs.items():
+        (tmp_path / name).write_text(text)
+        paths.append(str(tmp_path / name))
+
+    for path in paths:
+        for cls in (None, CsvClassifier(quote_symbol='"')):
+            header = "UNKNOWN" if cls is None else cls.contains_header
+            want = _python_side_inference(spark, path, "\t", '"', header)
+            df = crawl_delimited(spark, path, classifier=cls, corrupt_col=None)
+            got = [(f.name, f.dataType) for f in df.schema.fields]
+            assert got == want, (path, cls, got, want)
+        # the sample stays a JVM frame; header=True inference matches too
+        sample = _sample_lines(spark, path)
+        assert isinstance(sample, DataFrame)
+        schema = _infer_from_sample(spark, sample, "\t", '"', True)
+        want = _python_side_inference(spark, path, "\t", '"', "PRESENT")
+        assert [(f.name, f.dataType) for f in schema.fields] == want, path
+
+
+def test_crawler_typed_crawl_runs_two_jobs_and_releases_its_sample(spark, tmp_path):
+    """A header-present typed crawl is one inference over one cached
+    sample: at most 2 Spark jobs (the header line, then the type
+    aggregate), with or without a classifier, and the sample's cache
+    is released before the crawl returns."""
+    p = tmp_path / "typed.tsv"
+    p.write_text("id\tname\tscore\n" + "".join(f"{i}\tn{i}\t{i / 3}\n" for i in range(500)))
+    sc = spark.sparkContext
+    for k, cls in enumerate((CsvClassifier(), None)):
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        group = f"crawl-job-probe-{k}"
+        sc.setJobGroup(group, "typed crawl")
+        try:
+            df = crawl_delimited(spark, str(p), classifier=cls)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 2, f"crawl ran {len(jobs)} jobs, expected <= 2"
+        assert set(sc._jsc.getPersistentRDDs().keys()) == before
+        assert df.schema.fieldNames() == ["id", "name", "score", "_corrupt"]
+
+
+def test_crawler_sampled_inference_bounded_probe(spark, tmp_path):
+    """Crawler schema inference is a bounded probe, not a full scan:
+    on a multi-file dataset far larger than the sample, the probe
+    reads at most sample_rows lines and the inferred schema matches
+    what full inference produces, including across file boundaries,
+    where every file repeats the header."""
+    from cdk_serverless_data_lake_sandbox_spark.sources.crawler import _sample_lines
+
+    root = tmp_path / "multi"
+    root.mkdir()
+    rows_per_file, n_files = 5000, 3
+    for i in range(n_files):
+        with open(root / f"part-{i}.tsv", "w") as f:
+            f.write("name\tage\tscore\n")
+            for j in range(rows_per_file):
+                f.write(f"user{i}_{j}\t{20 + j % 50}\t{j / 7.0}\n")
+
+    sample = _sample_lines(spark, str(root), 1000)
+    assert sample.count() <= 1000  # bounded probe, dataset has 15003 lines
+
+    df = crawl_delimited(
+        spark, str(root), classifier=CsvClassifier(), sample_rows=1000
+    )
+    assert [f.dataType.simpleString() for f in df.schema.fields] == [
+        "string",
+        "int",
+        "double",
+        "string",  # default _corrupt DLQ column
+    ], df.schema.simpleString()
+    # per-file headers skipped on the full read; no row lost or
+    # misparsed (a stray header line inside a typed column would be
+    # NULL under the explicit schema)
+    assert df.count() == rows_per_file * n_files
+    assert df.where(F.col("age").isNull() | F.col("score").isNull()).count() == 0
+
+    # headerless auto-detect path samples too
+    df2 = crawl_delimited(spark, str(root), sample_rows=1000)
+    assert df2.schema.fields[1].dataType.simpleString() == "int"
+
+
+def test_crawler_corrupt_record_hooks(spark, tmp_path):
+    """Type widening past the sample horizon is detectable: FAILFAST
+    raises, and corrupt_col captures the raw line under PERMISSIVE
+    instead of leaving silent NULLs."""
+    root = tmp_path / "widen"
+    root.mkdir()
+    with open(root / "data.tsv", "w") as f:
+        f.write("name\tage\n")
+        for j in range(200):
+            f.write(f"u{j}\t{20 + j}\n")
+        f.write("late\t99.5\n")  # widens int -> double past the sample
+
+    df = crawl_delimited(
+        spark, str(root), classifier=CsvClassifier(), sample_rows=100,
+        corrupt_col="_corrupt",
+    ).cache()  # Spark disallows corrupt-col-only queries on raw CSV
+    bad = df.where(F.col("_corrupt").isNotNull())
+    assert bad.count() == 1
+    assert "99.5" in bad.collect()[0]._corrupt
+    assert df.where(F.col("_corrupt").isNull()).count() == 200
+    df.unpersist()
+
+    with pytest.raises(Exception):
+        # collect, not count: count() prunes every data column, so the
+        # malformed value would never be parsed
+        crawl_delimited(
+            spark, str(root), classifier=CsvClassifier(), sample_rows=100,
+            mode="FAILFAST",
+        ).collect()
+
+
+def test_crawler_widening_rows_land_in_default_dlq_column(spark, tmp_path):
+    """Types that widen past the sample horizon must be DETECTED by
+    default: the malformed rows carry their raw line in _corrupt
+    instead of silently becoming all-NULL."""
+    p = tmp_path / "widen.tsv"
+    with open(p, "w") as fh:
+        fh.write("id\tval\n")
+        for i in range(200):
+            fh.write(f"{i}\t{i}\n")
+        fh.write("200\tnot_a_number\n")  # widens int -> string past sample
+    df = crawl_delimited(
+        spark, str(p), classifier=CsvClassifier(), sample_rows=100
+    )
+    assert "_corrupt" in df.columns
+    # collect()s, not count()s: Spark refuses aggregations whose only
+    # surviving referenced column is the internal corrupt column
+    bad = df.where(F.col("_corrupt").isNotNull()).collect()
+    assert len(bad) == 1 and "not_a_number" in bad[0]["_corrupt"]
+    assert len(df.where(F.col("_corrupt").isNull()).collect()) == 200
 
 
 # ---------------------------------------------------------------- A4
