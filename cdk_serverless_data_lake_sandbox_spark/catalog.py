@@ -126,7 +126,8 @@ def spread(df: DataFrame, splits: int | None, *keys: str) -> DataFrame:
     tables and small scratch intermediates are one row group per file,
     so their scans run as one task whatever the split config says.
     ``splits`` comes from :func:`lake_splits` for lake tables or from
-    the once-per-path scratch probe (``_helpers._scratch_splits``);
+    the probe taken once when a scratch intermediate is written
+    (``_helpers._write``);
     never from a per-call ``df.rdd.getNumPartitions()``, which plans a
     physical scan on the Spark driver. At real scale inputs split
     properly and the plan is unchanged."""

@@ -111,10 +111,27 @@ def sql_round_rat(num_sql: str, den_sql: str, dp: int, wide: bool = False) -> st
 # 100 TB corpus) the scale-safe form is a written intermediate that every
 # branch scans. On a cluster this would be a parquet table in a scratch
 # zone; locally it is a per-application directory under the repo.
+#
+# Keyed scratch (:func:`scratch`) is shared across queries in one
+# application. Its key is (application, name, identity of ``reads``):
+# the identity is Spark's canonicalized analyzed plan of the frame the
+# build reads (bucketed on ``semanticHash()``, confirmed with
+# ``sameSemantics()`` — the rule Spark's CacheManager applies), so two
+# sf_dirs, a filtered corpus and an in-memory corpus each get their own
+# entry without a hand-made key. Each entry also records the content
+# version of ``reads``: (path, size, mtime) of every input file. A
+# lookup whose version differs rebuilds, and the rebuilt entry replaces
+# its predecessor (whose directory is deleted). An input whose version
+# cannot be read (gone, or not a local file) is a miss, never a hit,
+# and its build is not recorded.
+# Driver-side values derived from the same inputs (:func:`remember`)
+# go through the same key into one sibling memo.
 import atexit as _atexit
 import os as _os
 import shutil as _shutil
 import uuid as _uuid
+from typing import NamedTuple as _NamedTuple
+from urllib.parse import unquote as _unquote, urlparse as _urlparse
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import spread
 
@@ -122,7 +139,6 @@ _SCRATCH_ROOT = _os.environ.get(
     "SPARK_GRAFT_SCRATCH",
     _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))), ".scratch"),
 )
-_MATERIALIZED: dict[tuple[str, str], str] = {}
 _CLEANUP_REGISTERED: set[str] = set()
 
 # Stale-tree age bound for vacuum_scratch (seconds). Scratch trees are
@@ -159,14 +175,80 @@ def vacuum_scratch(root: str | None = None, stale_secs: int | None = None) -> li
     return removed
 
 
-def materialize(df, key: str | None = None, fan_out: bool = True):
-    """Write ``df`` to a scratch parquet path once and return a frame
-    that scans it, truncating lineage so downstream multi-branch plans
-    pay for the derivation exactly once.
+class _Entry(_NamedTuple):
+    reads: object  # the frame the build read; confirms a bucket hit
+    version: tuple  # (path, size, mtime) of every input file of reads
+    value: object  # scratch: (path, schema, splits); memo: the value
 
-    ``key`` enables reuse across queries in one application (e.g. the
-    hashed-shingle frame for a given sf_dir, shared by the jaccard /
-    removal / components queries); keyless calls always write fresh.
+
+# (application, name, semanticHash of reads) -> _Entry
+_MATERIALIZED: dict[tuple, _Entry] = {}
+_MEMO: dict[tuple, _Entry] = {}
+
+
+def _input_version(reads) -> tuple | None:
+    """(path, size, mtime) of every input file of ``reads``, or None
+    when one of them is not a local file or cannot be stat'ed."""
+    out = []
+    for f in sorted(reads.inputFiles()):
+        u = _urlparse(f)
+        if u.scheme not in ("", "file"):
+            return None
+        try:
+            st = _os.stat(_unquote(u.path))
+        except OSError:
+            return None
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _lookup(store: dict, name: str, reads, make):
+    """The one keyed lookup behind :func:`scratch` and
+    :func:`remember`: return (value, replaced entry or None). ``make``
+    runs on a miss; its value is recorded only when the input version
+    is readable and the bucket holds no other plan."""
+    key = (reads.sparkSession.sparkContext.applicationId, name, reads.semanticHash())
+    version = _input_version(reads)
+    old = store.get(key)
+    same = old is not None and reads.sameSemantics(old.reads)
+    if same and old.version == version:  # recorded versions are never None
+        return old.value, None
+    value = make()
+    if version is None or (old is not None and not same):
+        return value, None
+    store[key] = _Entry(reads, version, value)
+    return value, old
+
+
+def scratch(name: str, reads, build, fan_out: bool = True):
+    """Keyed scratch: the frame ``build()`` returns, written once per
+    (application, ``name``, identity and version of ``reads``) and
+    re-scanned on every later call. ``reads`` is the frame the build
+    derives from; ``name`` tells apart the builds over one input and
+    carries their parameters. On a hit ``build`` never runs (eager
+    builders such as k-means collect while constructing their frame)
+    and no Spark job runs. ``fan_out`` as in :func:`materialize`."""
+    spark = reads.sparkSession
+    (path, schema, splits), old = _lookup(
+        _MATERIALIZED, name, reads, lambda: _write(build(), name)
+    )
+    if old is not None:
+        _shutil.rmtree(old.value[0], ignore_errors=True)
+    return _scratch_read(spark, path, schema, splits, fan_out)
+
+
+def remember(name: str, reads, compute):
+    """Driver-side value derived from ``reads`` (a count, a plan
+    decision), computed once per :func:`scratch` key."""
+    return _lookup(_MEMO, name, reads, compute)[0]
+
+
+def materialize(df, fan_out: bool = True):
+    """Write ``df`` to a fresh scratch parquet path and return a frame
+    that scans it, truncating lineage so downstream multi-branch plans
+    pay for the derivation exactly once. Use :func:`scratch` to share
+    the write across calls.
+
     The read applies the writer's schema explicitly so an empty frame
     round-trips, and goes through the one fan-out policy
     (``catalog.spread``: an under-split scan is repartitioned to
@@ -174,77 +256,39 @@ def materialize(df, key: str | None = None, fan_out: bool = True):
     dimension-sized intermediate whose consumers are broadcast builds
     or one-row aggregates, the exchange is pure overhead — the fan-out
     exists for CPU-heavy per-row consumers, not for these."""
-    return _materialize_with_path(df, key, fan_out)[0]
+    return _scratch_read(df.sparkSession, *_write(df), fan_out)
 
 
-def _materialize_with_path(df, key: str | None = None, fan_out: bool = True):
-    """Body of :func:`materialize`, additionally returning the
-    written scratch path (pin() uses it to reclaim superseded
-    iteration state)."""
+def _write(df, name: str = "tmp") -> tuple:
+    """Write ``df`` under this application's scratch directory; return
+    (path, schema, splits). The split count is probed here, once:
+    scratch files are immutable after the write, and the probe plans a
+    physical scan on the Spark driver."""
     spark = df.sparkSession
     app = spark.sparkContext.applicationId
-    if key is not None and (app, key) in _MATERIALIZED:
-        path = _MATERIALIZED[(app, key)]
-        return _scratch_read(spark, df.schema, path, fan_out), path
     app_dir = _os.path.join(_SCRATCH_ROOT, app)
     if app not in _CLEANUP_REGISTERED:
         _CLEANUP_REGISTERED.add(app)
         _atexit.register(_shutil.rmtree, app_dir, ignore_errors=True)
-    safe = (key or uuid_hex()).replace("/", "_").replace(":", "_")
-    path = _os.path.join(app_dir, safe)
+    safe = name.replace("/", "_").replace(":", "_")
+    path = _os.path.join(app_dir, f"{safe}-{_uuid.uuid4().hex}")
     # Snappy, not the session's zstd: scratch intermediates are
     # write-once read-few and deleted at exit — cheap encode beats
     # compression ratio here.
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
-    if key is not None:
-        _MATERIALIZED[(app, key)] = path
-        _SCRATCH_SCHEMA[(app, key)] = df.schema
-    return _scratch_read(spark, df.schema, path, fan_out), path
+    splits = spark.read.schema(df.schema).parquet(path).rdd.getNumPartitions()
+    return path, df.schema, splits
 
 
-_SCRATCH_SCHEMA: dict[tuple[str, str], object] = {}
-
-
-def materialize_lazy(spark, key: str, builder, fan_out: bool = True):
-    """Keyed materialization whose DERIVATION is also skipped on a
-    cache hit. ``materialize(df, key)`` can only short-circuit the
-    write — the caller has already paid for constructing ``df``, which
-    for eager-plan builders (kmeans_assign collects centroids per
-    Lloyd round) is the expensive part. Here the builder runs only on
-    a miss; hits re-scan the scratch parquet directly."""
-    app = spark.sparkContext.applicationId
-    if (app, key) in _MATERIALIZED:
-        return _scratch_read(
-            spark, _SCRATCH_SCHEMA[(app, key)], _MATERIALIZED[(app, key)], fan_out
-        )
-    return materialize(builder(), key=key, fan_out=fan_out)
-
-
-_SCRATCH_NPART: dict[str, int] = {}
-
-
-def _scratch_splits(df, path) -> int:
-    """Split count of a scratch scan, probed once per path and cached:
-    scratch files are immutable after the write, and the probe plans a
-    physical scan on the Spark driver."""
-    if path not in _SCRATCH_NPART:
-        _SCRATCH_NPART[path] = df.rdd.getNumPartitions()
-    return _SCRATCH_NPART[path]
-
-
-def _scratch_read(spark, schema, path, fan_out: bool = True):
+def _scratch_read(spark, path, schema, splits, fan_out: bool = True):
     """Scan a scratch intermediate through the one fan-out policy,
-    ``catalog.spread``, with the :func:`_scratch_splits` probe: Spark
-    bin-packs small files into few splits, which would serialize every
-    stage consuming the materialized frame, so an under-split scan is
-    repartitioned to ``defaultParallelism``. At real scale the files
-    split properly and the gate never fires."""
+    ``catalog.spread``: Spark bin-packs small files into few splits,
+    which would serialize every stage consuming the materialized
+    frame, so an under-split scan is repartitioned to
+    ``defaultParallelism``. At real scale the files split properly and
+    the gate never fires."""
     out = spark.read.schema(schema).parquet(path)
-    return spread(out, _scratch_splits(out, path)) if fan_out else out
-
-
-def uuid_hex() -> str:
-    return _uuid.uuid4().hex
+    return spread(out, splits) if fan_out else out
 
 
 def pin(df):
@@ -295,9 +339,9 @@ def pin(df):
     )
     if mode == "local":
         return df.localCheckpoint()
-    out, path = _materialize_with_path(df)
+    path, schema, splits = _write(df, "pin")
     _reclaim_pin_scratch(spark, path)
-    return out
+    return _scratch_read(spark, path, schema, splits)
 
 
 # Per (application, call-site) history of reliable-pin scratch paths.
@@ -324,9 +368,7 @@ def _reclaim_pin_scratch(spark, path: str) -> None:
     hist = _PIN_HISTORY.setdefault((app, site), [])
     hist.append(path)
     while len(hist) > _PIN_KEEP:
-        dead = hist.pop(0)
-        _SCRATCH_NPART.pop(dead, None)
-        _shutil.rmtree(dead, ignore_errors=True)
+        _shutil.rmtree(hist.pop(0), ignore_errors=True)
 
 
 def _caller_site() -> str:

@@ -22,7 +22,9 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import (
 )
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
+    remember,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
@@ -156,18 +158,16 @@ WHERE CAST(LEN(list_intersect(a.sh, b.sh)) AS DOUBLE)
 
 
 
-def _hashed_shingles(docs: DataFrame, scratch_key: str | None) -> DataFrame:
+def _hashed_shingles(docs: DataFrame, reuse: bool) -> DataFrame:
     """doc_id + sorted xxhash64 shingle array + size, materialized to
-    scratch once per (app, key) — the shared physical input of the
-    Jaccard AND containment pair generators (same key -> the corpus
-    is tokenized+hashed once even across the two operators)."""
-    return materialize(
-        _shingled(docs).select(
-            "doc_id",
-            F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias("hs"),
-        ).select("doc_id", "hs", F.size("hs").alias("n_sh")),
-        key=scratch_key,
-    )
+    scratch — the shared physical input of the Jaccard AND containment
+    pair generators (``reuse``: one keyed entry per corpus, so it is
+    tokenized+hashed once even across the two operators)."""
+    hashed = _shingled(docs).select(
+        "doc_id",
+        F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias("hs"),
+    ).select("doc_id", "hs", F.size("hs").alias("n_sh"))
+    return scratch("ngram-hashed", docs, lambda: hashed) if reuse else materialize(hashed)
 
 
 # Auto-mode posting-size bound: the in-lambda pair flatten allocates
@@ -179,12 +179,8 @@ def _hashed_shingles(docs: DataFrame, scratch_key: str | None) -> DataFrame:
 _HOT_AUTO_BOUND = 1024
 
 
-_HOT_MISS = object()
-_HOT_CACHE: dict[tuple, DataFrame | None] = {}
-
-
 def _resolve_hot(
-    inv: DataFrame, hot_threshold, scratch_key: str | None = None
+    docs: DataFrame, inv: DataFrame, hot_threshold, reuse: bool
 ) -> DataFrame | None:
     """Shared hot-shingle policy for the jaccard/containment pair
     generators. ``"auto"`` (the default): one cheap map-side-combined
@@ -200,65 +196,53 @@ def _resolve_hot(
     materialized to scratch: three plan branches consume it (anti,
     semi, and the emptiness probe) and the count agg should run once.
 
-    The resolved decision is CACHED per (app, scratch_key, bound) —
-    posting sizes are a property of the materialized shingle scratch,
-    so every query deriving from the same corpus intermediate (jaccard
-    / containment / removal / components / source-matrix over one
-    sf_dir) pays the probe aggregation exactly once, the same
-    pay-once discipline as the scratch itself."""
+    With ``reuse`` the decision is remembered under the scratch key
+    of ``docs`` (:func:`_helpers.remember`): posting sizes are a
+    property of the corpus, so every query deriving from it (jaccard /
+    containment / removal / components / source-matrix) pays the
+    probe aggregation once per corpus version, like the scratch
+    itself."""
     if hot_threshold is None:
         return None
     bound = _HOT_AUTO_BOUND if hot_threshold == "auto" else int(hot_threshold)
-    ck = None
-    if scratch_key is not None:
-        app = inv.sparkSession.sparkContext.applicationId
-        ck = (app, scratch_key, bound)
-        cached = _HOT_CACHE.get(ck, _HOT_MISS)
-        if cached is not _HOT_MISS:
-            return cached
-    hot = materialize(
-        inv.groupBy("shingle")
-        .agg(F.count("*").alias("psz"))
-        .where(F.col("psz") > bound)
-        .select("shingle")
-    )
-    if hot_threshold == "auto" and hot.isEmpty():
-        hot = None
-    if ck is not None:
-        _HOT_CACHE[ck] = hot
-    return hot
+
+    def probe() -> DataFrame | None:
+        hot = materialize(
+            inv.groupBy("shingle")
+            .agg(F.count("*").alias("psz"))
+            .where(F.col("psz") > bound)
+            .select("shingle")
+        )
+        return None if hot_threshold == "auto" and hot.isEmpty() else hot
+
+    return remember(f"ngram-hot:{hot_threshold}", docs, probe) if reuse else probe()
 
 
 def _raw_postings(
-    docs: DataFrame, scratch_key: str | None, hot_threshold
+    docs: DataFrame, reuse: bool, hot_threshold
 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """(postings_raw, inv, hot) — the inverted shingle index shared by
     the Jaccard and containment pair generators: shingle -> UNSORTED
     member structs (doc_id, n_sh, pos), hot shingles excluded,
     single-member postings dropped.
 
-    Keyed per (application, scratch key, hot bound) through
-    ``materialize_lazy`` (r12, the r11 bitext-postings precedent):
-    eight registered queries walk this index per sf_dir and each
-    re-ran the corpus-wide explode + shingle shuffle per invocation.
+    With ``reuse`` it is keyed scratch per (corpus, hot bound): eight
+    registered queries walk this index per sf_dir and each would
+    re-run the corpus-wide explode + shingle shuffle per invocation.
     Members are tau-FREE (position instead of a precomputed prefix
     flag) so every threshold derives its own prefix in-row, and
     UNSORTED so each consumer applies its own in-row array_sort —
     collection order never reaches a result. At 100 TB this scratch
     is the one posting shuffle a query would have paid anyway, written
     once per application instead of re-shuffled per query."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    hashed = _hashed_shingles(docs, scratch_key)
+    hashed = _hashed_shingles(docs, reuse)
     inv = (
         hashed.select(
             "doc_id", "n_sh", F.posexplode_outer("hs").alias("pos", "shingle")
         )
         .where(F.col("shingle").isNotNull())
     )
-    hot = _resolve_hot(inv, hot_threshold, scratch_key)
+    hot = _resolve_hot(docs, inv, hot_threshold, reuse)
 
     def build() -> DataFrame:
         src = (
@@ -272,12 +256,7 @@ def _raw_postings(
             .where(F.size("mr") > 1)
         )
 
-    if scratch_key is None:
-        return build(), inv, hot
-    bound = "auto" if hot_threshold == "auto" else str(hot_threshold)
-    raw = materialize_lazy(
-        docs.sparkSession, f"{scratch_key}:postings:h{bound}", build
-    )
+    raw = scratch(f"ngram-postings:{hot_threshold}", docs, build) if reuse else build()
     return raw, inv, hot
 
 
@@ -290,7 +269,7 @@ def _pref_expr(tau: float) -> str:
 def ngram_jaccard_pairs(
     docs: DataFrame,
     tau: float = _JACCARD_TAU,
-    scratch_key: str | None = None,
+    reuse: bool = False,
     hot_threshold: int | str | None = "auto",
 ) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (jaccard >= tau) over any
@@ -315,13 +294,13 @@ def ngram_jaccard_pairs(
     corpus three times, so it is materialized once (a written scratch
     intermediate, not an in-memory cache — at 100 TB the corpus does
     not fit executor memory) and every branch scans the parquet.
-    ``scratch_key`` additionally shares the intermediate across
-    queries deriving from the same input (jaccard / removal /
-    components over one sf_dir)."""
+    ``reuse`` additionally shares the intermediate across queries
+    deriving from the same input (jaccard / removal / components over
+    one sf_dir) as keyed scratch."""
     # Hash shingles to 8-byte keys (collisions are 2^-64 per pair;
     # the oracle parity test would catch one) and sort for the global
     # prefix order.
-    hashed = _hashed_shingles(docs, scratch_key)
+    hashed = _hashed_shingles(docs, reuse)
     # AUTO hybrid pair generation for saturated feature spaces.
     # Normal corpora obey Heaps' law — the shingle space grows with
     # the corpus, postings stay bounded (sf0.1 max posting: 25) — and
@@ -343,7 +322,7 @@ def ngram_jaccard_pairs(
     # keyed :func:`_raw_postings` intermediate; this consumer sorts
     # members and derives its tau-prefix flag IN-ROW, so pairs come
     # out with a_id < b_id exactly as before.
-    raw, inv, hot = _raw_postings(docs, scratch_key, hot_threshold)
+    raw, inv, hot = _raw_postings(docs, reuse, hot_threshold)
     postings = raw.select(
         F.expr(
             f"array_sort(transform(mr, m -> struct("
@@ -436,29 +415,25 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     so cost is O(sum of posting^2), never O(n_docs^2). The DuckDB
     oracle computes the same thing the quadratic way — exact
     agreement is the test that the indexed plan loses nothing."""
-    return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), scratch_key=f"ngram-hashed:{sf_dir}"
-    )
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), reuse=True)
 
 
 # ---------------------------------------------------------------- C2
-def _portable_hashed_shingles(docs: DataFrame, scratch_key: str | None) -> DataFrame:
+def _portable_hashed_shingles(docs: DataFrame, reuse: bool) -> DataFrame:
     """doc_id + Horner-hashed shingle array, materialized to scratch
-    once per (app, key). The exact-jaccard family keeps its own
-    xxhash64 frame (:func:`_hashed_shingles`): its oracles never see
+    (keyed per corpus with ``reuse``). The exact-jaccard family keeps
+    its own xxhash64 frame (:func:`_hashed_shingles`): its oracles never see
     hash VALUES (only set sizes), so the 64-bit JVM hash is the right
     perf/collision tradeoff there — whereas the minhash signature IS
     made of hash values, so its frame must be engine-portable."""
-    return materialize(
-        _shingled(docs).select(
-            "doc_id",
-            F.expr(f"transform(sh, s -> {_horner_spark('s')})").alias("hs"),
-        ),
-        key=scratch_key,
+    hashed = _shingled(docs).select(
+        "doc_id",
+        F.expr(f"transform(sh, s -> {_horner_spark('s')})").alias("hs"),
     )
+    return scratch("ngram-phashed", docs, lambda: hashed) if reuse else materialize(hashed)
 
 
-def _minhash_signatures(docs: DataFrame, scratch_key: str | None = None) -> DataFrame:
+def _minhash_signatures(docs: DataFrame, reuse: bool = False) -> DataFrame:
     """doc_id + array<long> MinHash signature, entirely JVM-side.
     Shingles are Horner-hashed to longs once (materialized); each
     permutation is a columnar ``min((a_i*h + b_i) % p)`` universal-
@@ -471,7 +446,7 @@ def _minhash_signatures(docs: DataFrame, scratch_key: str | None = None) -> Data
     # triggers a pushed-down size(sh) > 0 filter that duplicates the
     # shingle computation.
     hashes = (
-        _portable_hashed_shingles(docs, scratch_key)
+        _portable_hashed_shingles(docs, reuse)
         .select("doc_id", F.explode_outer("hs").alias("h"))
         .where(F.col("h").isNotNull())
     )
@@ -544,7 +519,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature re-join; bucket sizes are bounded by collision rate, so
     candidate generation is near-linear in corpus size."""
     docs = _docs(spark, sf_dir)
-    sigs = _minhash_signatures(docs, scratch_key=f"ngram-phashed:{sf_dir}")
+    sigs = _minhash_signatures(docs, reuse=True)
 
     n_bands = _N_PERM // _BAND_ROWS
     band_arrays = ", ".join(
@@ -800,19 +775,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- C31
-def _hashed_side(df: DataFrame, side: str, key: str | None = None) -> DataFrame:
+def _hashed_side(df: DataFrame, side: str, reuse: bool = False) -> DataFrame:
     """Sorted shingle-hash arrays for one side of the incremental
     join, materialized once (each side feeds its inverted index AND
-    the verify join — two plan branches). ``key`` additionally shares
-    the scratch across calls — the static-corpus side of a streaming
-    gate is hashed once, not once per micro-batch."""
-    return materialize(
-        _shingled(df).select(
-            F.col("doc_id").alias(f"{side}_id"),
-            F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias(f"hs_{side}"),
-        ),
-        key=key,
+    the verify join — two plan branches). ``reuse`` additionally
+    shares the scratch across calls — the static-corpus side of a
+    streaming gate is hashed once, not once per micro-batch."""
+    hs = _shingled(df).select(
+        F.col("doc_id").alias(f"{side}_id"),
+        F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias(f"hs_{side}"),
     )
+    return scratch(f"hashed-side:{side}", df, lambda: hs) if reuse else materialize(hs)
 
 
 def _side_inv(h: DataFrame, side: str, tau: float) -> DataFrame:
@@ -861,7 +834,7 @@ def dedup_incremental(
     new_docs: DataFrame,
     corpus: DataFrame,
     tau: float = _JACCARD_TAU,
-    corpus_key: str | None = None,
+    reuse_corpus: bool = False,
 ) -> DataFrame:
     """Incremental ingest dedup: drop new documents that exactly match
     or near-duplicate (jaccard >= tau) anything in the existing
@@ -872,21 +845,19 @@ def dedup_incremental(
     filters as the self-join variant bound the candidate count; both
     sides' hashed-shingle frames are materialized once.
 
-    ``corpus_key`` keys the corpus-side intermediates (content-hash
-    set + hashed shingles) so repeated calls against the same corpus
-    — a streaming gate's micro-batches — hash the corpus once and
-    re-scan the scratch."""
+    ``reuse_corpus`` keeps the corpus-side intermediates (content-hash
+    set + hashed shingles) as keyed scratch, so repeated calls against
+    the same corpus — a streaming gate's micro-batches — hash the
+    corpus once and re-scan the scratch."""
     # exact: content-hash anti join
     corpus_hashes = corpus.select(F.md5("text").alias("_h")).distinct()
-    if corpus_key is not None:
-        corpus_hashes = materialize(corpus_hashes, key=f"{corpus_key}:md5")
+    if reuse_corpus:
+        corpus_hashes = scratch("corpus-md5", corpus, lambda: corpus_hashes)
     fresh = new_docs.join(
         corpus_hashes, F.md5(new_docs["text"]) == corpus_hashes["_h"], "left_anti"
     )
     new_h = _hashed_side(fresh, "new")
-    old_h = _hashed_side(
-        corpus, "old", key=f"{corpus_key}:hs" if corpus_key is not None else None
-    )
+    old_h = _hashed_side(corpus, "old", reuse_corpus)
     candidates = incremental_candidates(new_h, old_h, tau)
     n_common = F.size(F.array_intersect("hs_new", "hs_old"))
     jaccard = n_common.cast("double") / (
@@ -927,7 +898,7 @@ WHERE CAST(LEN(list_intersect(a.sh, b.sh)) AS DOUBLE) / LEN(a.sh)
 def containment_pairs(
     docs: DataFrame,
     tau: float = _CONTAIN_TAU,
-    scratch_key: str | None = None,
+    reuse: bool = False,
     hot_threshold: int | str | None = "auto",
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT pairs: C(a in b) = |a ∩ b| / |a|
@@ -940,8 +911,8 @@ def containment_pairs(
     behind.
 
     Scale: same inverted-index shape as ngram_jaccard_pairs, sharing
-    its materialized hashed-shingle intermediate (same scratch key ->
-    one tokenize+hash pass feeds both operators). Prefix filtering
+    its materialized hashed-shingle intermediate (with ``reuse``, one
+    keyed tokenize+hash pass feeds both operators). Prefix filtering
     adapts to the asymmetric threshold: only the CONTAINED side needs
     a prefix — postings sort by (n_sh, doc_id) so the opener x is the
     smaller doc, and a pair opens only on x's first
@@ -966,7 +937,7 @@ def containment_pairs(
     term is what bites, e.g. when a's prefix matches only near the
     END of b.) Rides the same 2^-64 hash-collision assumption as the
     Jaccard family."""
-    hashed = _hashed_shingles(docs, scratch_key)
+    hashed = _hashed_shingles(docs, reuse)
     # Auto hybrid generation, same policy and rationale as
     # ngram_jaccard_pairs (see :func:`_resolve_hot`): hot shingles are
     # broadcast-excluded from the posting build; their pairs come
@@ -979,7 +950,7 @@ def containment_pairs(
     # only x's prefix can open a pair. Each posting keeps its
     # in-document position so the candidate filter can apply the
     # positional bound.
-    raw, inv, hot = _raw_postings(docs, scratch_key, hot_threshold)
+    raw, inv, hot = _raw_postings(docs, reuse, hot_threshold)
     postings = raw.select(
         F.expr(
             f"array_sort(transform(mr, m -> struct("
@@ -1061,10 +1032,8 @@ def containment_pairs(
 @register("containment_dedup", oracle=_CONTAIN_ORACLE)
 def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`containment_pairs` (tau=0.8),
-    sharing the ngram-hashed scratch intermediate per sf_dir."""
-    return containment_pairs(
-        _docs(spark, sf_dir), scratch_key=f"ngram-hashed:{sf_dir}"
-    )
+    sharing the keyed ngram-hashed scratch intermediate."""
+    return containment_pairs(_docs(spark, sf_dir), reuse=True)
 
 
 # ---------------------------------------------------------------- C66
@@ -1107,17 +1076,13 @@ def near_dup_review_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-k-per-group pattern (B76); the ranking window partitions
     by decile, bounded at 6 buckets whose populations are the pair
     set, not the corpus."""
-    return near_dup_review_sample_frame(
-        _docs(spark, sf_dir), scratch_key=f"ngram-hashed:{sf_dir}"
-    )
+    return near_dup_review_sample_frame(_docs(spark, sf_dir), reuse=True)
 
 
-def near_dup_review_sample_frame(
-    docs: DataFrame, scratch_key: str | None = None
-) -> DataFrame:
+def near_dup_review_sample_frame(docs: DataFrame, reuse: bool = False) -> DataFrame:
     """Frame-level body of :func:`near_dup_review_sample` (the soak's
     slice check drives it on a corpus subset)."""
-    pairs = ngram_jaccard_pairs(docs, scratch_key=scratch_key)
+    pairs = ngram_jaccard_pairs(docs, reuse=reuse)
     bucket = (F.floor(F.col("jaccard") * 10) / 10).cast("double")
     order_key = F.md5(
         F.concat(
@@ -1234,7 +1199,7 @@ FROM per GROUP BY source
 
 
 def cdc_chunk_dedup_frame(
-    docs: DataFrame, mod: int = _CDC_MOD, scratch_key: str | None = None
+    docs: DataFrame, mod: int = _CDC_MOD, reuse: bool = False
 ) -> DataFrame:
     """Content-defined-chunking dedup profile (the rolling-hash
     boundary trick of LBFS/rsync applied at word granularity): a word
@@ -1280,7 +1245,9 @@ def cdc_chunk_dedup_frame(
             F.length("ctext").alias("chunk_bytes"),
         )
     )
-    chunks = materialize(chunks, key=scratch_key)
+    chunks = (
+        scratch(f"cdc-chunks:{mod}", docs, lambda: chunks) if reuse else materialize(chunks)
+    )
     hs = chunks.groupBy("chunk_hash").agg(
         F.count_distinct("source").alias("n_sources")
     )
@@ -1313,8 +1280,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`cdc_chunk_dedup_frame` over the
     documents table."""
     return cdc_chunk_dedup_frame(
-        load_tables(spark, sf_dir, ("documents",))["documents"],
-        scratch_key=f"{sf_dir}:cdcchunks{_CDC_MOD}",
+        load_tables(spark, sf_dir, ("documents",))["documents"], reuse=True
     )
 
 
@@ -1487,9 +1453,7 @@ def near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized joins to attach sources and one
     map-side-combinable rollup — the matrix is |sources|^2 at most."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    pairs = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), scratch_key=f"ngram-hashed:{sf_dir}"
-    )
+    pairs = ngram_jaccard_pairs(_docs(spark, sf_dir), reuse=True)
     src = docs.select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("a_id"), F.col("source").alias("_sa"))
     sb = src.select(F.col("doc_id").alias("b_id"), F.col("source").alias("_sb"))

@@ -39,8 +39,8 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import (
     spread,
 )
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-    materialize_lazy,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
@@ -193,9 +193,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # fp feeds two plan branches (posting counts + the join back) and
     # the pairs query: materialize the extraction once per corpus.
-    fp = materialize_lazy(
-        spark, f"winnow:{sf_dir}", lambda: _fingerprints(docs)
-    )
+    fp = scratch("winnow", docs, lambda: _fingerprints(docs))
     post = fp.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
     per_doc = (
         fp.join(post, "h")
@@ -261,7 +259,7 @@ def winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     even when exact-hash dedup misses them."""
     docs = _docs(spark, sf_dir)
     dh = (
-        materialize_lazy(spark, f"winnow:{sf_dir}", lambda: _fingerprints(docs))
+        scratch("winnow", docs, lambda: _fingerprints(docs))
         .select("doc_id", "h")
         .distinct()
     )

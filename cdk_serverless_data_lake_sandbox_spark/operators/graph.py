@@ -27,6 +27,7 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
@@ -48,47 +49,36 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, deduplicated, symmetrized, with the source node's degree
     attached (``src``, ``dst``, ``src_deg``).
 
-    Built ONCE per (application, sf_dir) through ``materialize_lazy``
-    — the kNN-graph precedent (similarity.py `_knn_graph_shared`):
+    Built ONCE per version of ``lineitem`` as keyed scratch — the
+    kNN-graph precedent (similarity.py `_knn_graph_shared`):
     eight graph ops (B93–B96, B99, B109, B110, B113's static siblings)
     walk the SAME edge set, so one application run pays the
     three-shuffle build once and every later caller re-scans the
     scratch parquet (r9 verdict item 1). At production scale the
     equivalent is the persisted D23 graph artifact; this keyed scratch
     is its per-application twin."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    return materialize_lazy(
-        spark,
-        f"copurchase-edges:{sf_dir}",
-        lambda: _copurchase_edges_frame(spark, sf_dir),
-    )
+    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
+    return scratch("copurchase-edges", li, lambda: _copurchase_edges_frame(li))
 
 
 def copurchase_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, deg) — one row per graph node, derived from the shared
-    edge list ONCE per (application, sf_dir) and materialized (r11:
+    edge list ONCE per version of ``lineitem`` and materialized (r11:
     pagerank, PPR, BFS, triangles and the D23 artifact build each ran
     their own distinct over the 2m-row edge list per call; the node
     table is exactly the second artifact the D23 build already
     persists, so per-application it is keyed scratch like the edges)."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
     edges = copurchase_edges(spark, sf_dir)
-    return materialize_lazy(
-        spark,
-        f"copurchase-nodes:{sf_dir}",
+    return scratch(
+        "copurchase-nodes",
+        load_tables(spark, sf_dir, ("lineitem",))["lineitem"],
         lambda: edges.select(
             F.col("src").alias("node"), F.col("src_deg").alias("deg")
         ).distinct(),
     )
 
 
-def _copurchase_edges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _copurchase_edges_frame(li: DataFrame) -> DataFrame:
     """The edge-list dataflow (always reached via the keyed
     :func:`copurchase_edges` wrapper).
 
@@ -102,7 +92,6 @@ def _copurchase_edges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a pure filter; in a symmetrized list dst_deg of (a,b) equals
     src_deg of its twin (b,a), but reading the twin is exactly the
     join being avoided). Four shuffles total, each load-bearing."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     sets = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
     sym = (
         sets.select(
@@ -116,7 +105,7 @@ def _copurchase_edges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.src", "e.dst")
         .distinct()
     )
-    # No pin() here: the keyed materialize_lazy wrapper lands the
+    # No pin() here: the keyed scratch wrapper lands the
     # result in scratch parquet, which both truncates lineage and is
     # executor-loss-safe — a second checkpoint would be pure waste.
     return sym.withColumn(

@@ -89,7 +89,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         keeps, gated.doc_id == keeps.keep_id, "left_semi"
     )
     drops = (
-        ngram_jaccard_pairs(survivors, scratch_key=f"ngram-hashed-gated:{sf_dir}")
+        ngram_jaccard_pairs(survivors, reuse=True)
         .select(F.col("b_id").alias("drop_id"))
         .distinct()
     )
@@ -271,9 +271,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what a cluster-level dedup keep-one policy consumes. The
     DuckDB oracle computes the same fixpoint with a recursive CTE."""
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
-        docs, scratch_key=f"ngram-hashed:{sf_dir}"
-    ).select("a_id", "b_id")
+    pairs = ngram_jaccard_pairs(docs, reuse=True).select("a_id", "b_id")
     labels = min_label_components(docs, pairs)
     return labels.groupBy("label").agg(F.count("*").alias("n_docs")).select(
         F.col("label").alias("component"), "n_docs"
@@ -337,9 +335,7 @@ def near_dup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     sensitivity to giant clusters. The oracle expresses the same
     argmax with a window over the recursive-CTE fixpoint."""
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
-        docs, scratch_key=f"ngram-hashed:{sf_dir}"
-    ).select("a_id", "b_id")
+    pairs = ngram_jaccard_pairs(docs, reuse=True).select("a_id", "b_id")
     labels = min_label_components(docs, pairs)
     q = F.size(F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))).cast("long")
     scored = docs.select("doc_id", q.alias("q")).join(labels, "doc_id")
@@ -435,7 +431,7 @@ def training_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     survivors = gated.join(keeps, gated.doc_id == keeps.keep_id, "left_semi")
     drops = (
-        ngram_jaccard_pairs(survivors, scratch_key=f"ngram-hashed-gated:{sf_dir}")
+        ngram_jaccard_pairs(survivors, reuse=True)
         .select(F.col("b_id").alias("drop_id"))
         .distinct()
     )

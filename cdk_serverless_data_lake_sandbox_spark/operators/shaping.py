@@ -20,6 +20,7 @@ from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
     pin,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.operators.dedup import (
@@ -175,7 +176,7 @@ GROUP BY p.doc_id
 
 
 def dup_span_profile(
-    docs: DataFrame, k: int = _SPAN_K, scratch_key: str | None = None
+    docs: DataFrame, k: int = _SPAN_K, reuse: bool = False
 ) -> DataFrame:
     """Exact-substring duplication profile at word-``k``-gram
     granularity (the scalable approximation of suffix-array dedup,
@@ -200,7 +201,7 @@ def dup_span_profile(
         .where(F.size("_w") >= k)
         .select("doc_id", F.explode_outer(spans).alias("span_h"))
     )
-    pos = materialize(pos, key=scratch_key)
+    pos = scratch(f"span-hashes:{k}", docs, lambda: pos) if reuse else materialize(pos)
     cnt = pos.groupBy("span_h").agg(F.count_distinct("doc_id").alias("nd"))
     n_dup = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0)).cast("bigint")
     return (
@@ -220,10 +221,8 @@ def dup_span_profile(
 @register("dup_span_fraction", oracle=_SPAN_ORACLE)
 def dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`dup_span_profile` over the corpus
-    documents table (k=8, span index shared per sf_dir)."""
-    return dup_span_profile(
-        _docs(spark, sf_dir), scratch_key=f"{sf_dir}:spans{_SPAN_K}"
-    )
+    documents table (k=8, span index kept as keyed scratch)."""
+    return dup_span_profile(_docs(spark, sf_dir), reuse=True)
 
 
 # ---------------------------------------------------------------- C48
@@ -440,7 +439,7 @@ def segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Two consumers (winner agg + mark join): materialize so the
     # tokenize+slice pass runs once, not once per branch (SURVEY §6).
-    segs = materialize(segs, key=f"{sf_dir}:segs{_SEG_SIZE}")
+    segs = scratch(f"segments:{_SEG_SIZE}", d, lambda: segs)
     winners = segs.groupBy("seg").agg(
         F.min(F.struct("doc_id", "seg_idx")).alias("_w")
     )
@@ -755,7 +754,7 @@ FROM w LEFT JOIN agg a USING (doc_id)
 
 
 def strip_dup_spans_frame(
-    docs: DataFrame, k: int = _SPAN_K, scratch_key: str | None = None
+    docs: DataFrame, k: int = _SPAN_K, reuse: bool = False
 ) -> DataFrame:
     """The REMOVAL step of exact-substring dedup (Lee et al. 2022,
     arXiv:2107.06499 — ``dup_span_fraction`` is the matching profile
@@ -801,7 +800,7 @@ def strip_dup_spans_frame(
     # the keyed scratch is shared across CALLS in one application —
     # an r11 A/B of pin-per-call here measured 1.14x slower than the
     # cached scratch re-read.
-    pos = materialize(pos, key=scratch_key)
+    pos = scratch(f"span-starts:{k}", docs, lambda: pos) if reuse else materialize(pos)
     own = (
         pos.groupBy("span_h")
         .agg(
@@ -872,9 +871,7 @@ def strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`strip_dup_spans_frame` over the
     corpus documents table (k=8, position-span index shared per
     sf_dir)."""
-    return strip_dup_spans_frame(
-        _docs_by_id(spark, sf_dir), scratch_key=f"{sf_dir}:spans{_SPAN_K}pos"
-    )
+    return strip_dup_spans_frame(_docs_by_id(spark, sf_dir), reuse=True)
 
 
 # ---------------------------------------------------------------- C93
@@ -1155,7 +1152,7 @@ def strip_dup_chars_frame(docs: DataFrame, k: int = _CHAR_K) -> DataFrame:
 @register("strip_dup_chars", oracle=_STRIP_CHARS_ORACLE)
 def strip_dup_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`strip_dup_chars_frame` over the
-    corpus documents table (k=50, char-span index keyed per sf_dir)."""
+    corpus documents table (k=50)."""
     return strip_dup_chars_frame(_docs_by_id(spark, sf_dir))
 
 

@@ -22,6 +22,7 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import (
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
@@ -145,16 +146,18 @@ def near_dup_embedding_frame(
     small = e.where(~F.col("label").isin(big)) if big else e
     out = _pairwise_block_join(side(small, "a", ["label"]), side(small, "b", ["label"]), ["label"])
     if big:
-        from cdk_serverless_data_lake_sandbox_spark.operators._helpers import materialize
-
         hot = e.where(F.col("label").isin(big))
-        n_hot = hot.count()
-        k = max(2, -(-n_hot // subblock_target))
-        assign = materialize(
-            kmeans_assign(hot.select("vec_id", "embedding"), k, 2)
-            .select("vec_id", "cluster")
-            .join(hot.select("vec_id", "label"), "vec_id"),
-            key=f"neardup-hot-assign:{id(e)}",
+
+        def fit() -> DataFrame:
+            k = max(2, -(-hot.count() // subblock_target))
+            return (
+                kmeans_assign(hot.select("vec_id", "embedding"), k, 2)
+                .select("vec_id", "cluster")
+                .join(hot.select("vec_id", "label"), "vec_id")
+            )
+
+        assign = scratch(
+            f"neardup-hot-assign:{pair_budget}:{subblock_target}", e, fit
         ).join(e.select("vec_id", "embedding"), "vec_id")
         approx = _pairwise_block_join(
             side(assign, "a", ["label", "cluster"]),
@@ -905,7 +908,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (k=_KMEANS_K, iters=_KMEANS_ITERS) Lloyd's assignment,
-    fitted ONCE per (application, sf_dir) and materialized to scratch
+    fitted ONCE per embeddings version and kept as keyed scratch
     (r11 optimization; the `kmeans-assign:{sf_dir}` precedent one
     operator down): `kmeans_clusters` and `cluster_balanced_sample`
     run the IDENTICAL deterministic fit, so two operators in one
@@ -913,16 +916,13 @@ def _kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog is a persisted model/assignment table both consumers scan.
     Embeddings are projected OUT before the write — neither consumer
     reads them, and they are ~30x the row's bytes."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    return materialize_lazy(
-        spark,
-        f"kmeans-assign-fixed:{sf_dir}:{_KMEANS_K}x{_KMEANS_ITERS}",
+    e = _emb(spark, sf_dir)
+    return scratch(
+        f"kmeans-assign-fixed:{_KMEANS_K}x{_KMEANS_ITERS}",
+        e,
         lambda: kmeans_assign(
             spread(
-                _emb(spark, sf_dir).select("vec_id", "embedding"),
+                e.select("vec_id", "embedding"),
                 lake_splits(spark, sf_dir, "embeddings"),
             ),
             _KMEANS_K,
@@ -1094,10 +1094,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation round, and the composed plan tree grows without
     bound. Tests pin determinism, exactness of emitted pairs, and
     recall against the unblocked brute-force pair set."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
 
     def _fit():
@@ -1113,10 +1109,10 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding", "cluster", _norm("embedding").alias("nrm")
         )
 
-    # materialize_lazy, not materialize: kmeans_assign collects
-    # centroids per Lloyd round while BUILDING its frame, so on a
-    # cache hit the whole fit must be skipped, not just the write.
-    assign = materialize_lazy(spark, f"kmeans-assign:{sf_dir}", _fit)
+    # kmeans_assign collects centroids per Lloyd round while BUILDING
+    # its frame, so on a scratch hit the whole fit is skipped, not
+    # just the write.
+    assign = scratch("kmeans-assign", e, _fit)
     a = assign.select(
         F.col("vec_id").alias("a_id"), F.col("embedding").alias("ea"),
         F.col("nrm").alias("na"), "cluster",
@@ -1431,13 +1427,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-exact; recall vs exact brute force is pinned by test; the
     32x index compression is the 100 TB story."""
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    encoded = materialize_lazy(
-        spark, f"pq-encode:{sf_dir}", lambda: pq_encode(e, pq_codebooks(e))
-    )
+    encoded = scratch("pq-encode", e, lambda: pq_encode(e, pq_codebooks(e)))
     q = e.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -2668,14 +2658,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe/cells, float reads only for the shortlist. Recall@k vs
     brute force is pinned by test and must dominate plain PQ (the
     rerank can only help)."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    encoded = materialize_lazy(
-        spark, f"pq-encode:{sf_dir}", lambda: pq_encode(e, pq_codebooks(e))
-    )
+    encoded = scratch("pq-encode", e, lambda: pq_encode(e, pq_codebooks(e)))
     cents = (
         e.orderBy("vec_id")
         .limit(_N_CENTROIDS)
@@ -2866,44 +2850,35 @@ def knn_graph_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_graph_shared(
     spark: SparkSession, sf_dir: str, ev: DataFrame | None = None
 ) -> DataFrame:
-    """The per-application kNN graph, built ONCE per sf_dir and keyed
-    through ``materialize_lazy`` (the kmeans-assign precedent): the
+    """The per-application kNN graph, built ONCE per embeddings version
+    as keyed scratch (the kmeans-assign precedent): the
     C129 query, C130's search, and C134's recall report all walk the
     SAME deterministic edge set, so a bench run pays the NN-Descent
     rounds once instead of three times (r8 verdict item 4). On a hit
     the builder never runs — the edges re-scan from scratch parquet."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    return materialize_lazy(
-        spark,
-        f"knn-graph:{sf_dir}",
+    e = _emb(spark, sf_dir)
+    return scratch(
+        "knn-graph",
+        e,
         lambda: _knn_graph_frame(
-            _emb(spark, sf_dir),
-            ev=ev if ev is not None else _emb_norms_shared(spark, sf_dir),
+            e, ev=ev if ev is not None else _emb_norms_shared(spark, sf_dir)
         ),
     )
 
 
 def _emb_norms_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The norm-augmented vector frame (vec_id, embedding, nrm), keyed
-    per (application, sf_dir): the NN-Descent build, the beam search's
+    scratch per embeddings version: the NN-Descent build, the beam search's
     scoring joins, and the D30 index build all score against the SAME
     frame, so computing the norms and materializing them is paid once
     per application instead of one pin per call (r11: the per-call
     pin was one localCheckpoint job plus a norm recompute on every
     invocation of graph_ann_search)."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    return materialize_lazy(
-        spark,
-        f"emb-norms:{sf_dir}",
-        lambda: _emb(spark, sf_dir).select(
-            "vec_id", "embedding", _norm("embedding").alias("nrm")
-        ),
+    e = _emb(spark, sf_dir)
+    return scratch(
+        "emb-norms",
+        e,
+        lambda: e.select("vec_id", "embedding", _norm("embedding").alias("nrm")),
     )
 
 
@@ -3485,15 +3460,11 @@ d{r} AS MATERIALIZED (
 @register("coreset_kcenter", oracle=_kcenter_oracle())
 def coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed entry for :func:`_kcenter_select`: the greedy selection
-    runs ONCE per application per sf_dir (materialize_lazy — the
+    runs ONCE per embeddings version (keyed scratch — the
     shared-knn-graph precedent), so the C138 assignment profile and a
     bench run never pay the k driver passes twice."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    return materialize_lazy(
-        spark, f"kcenter:{sf_dir}", lambda: _kcenter_select(spark, sf_dir)
+    return scratch(
+        "kcenter", _emb(spark, sf_dir), lambda: _kcenter_select(spark, sf_dir)
     )
 
 
@@ -3775,14 +3746,10 @@ def bitext_margin_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked SF; past the _bitext_planes occupancy gate more
     hyperplanes keep the candidate volume linear — see the gate
     comment)."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
     e = _emb(spark, sf_dir).where(F.col("label").isin(0, 1))
 
     def _postings():
-        # Built at most once per (application, sf_dir) — the capped
+        # Built at most once per corpus version — the capped
         # posting table is a pure function of the corpus, like the
         # kmeans-assign scratch (r9-endorsed): repeat invocations scan
         # the materialized table instead of re-running the side count,
@@ -3838,7 +3805,7 @@ def bitext_margin_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
         return pre.where(F.col("_pk") <= _BITEXT_MAX_POSTING).drop("_pk")
 
-    bk = materialize_lazy(spark, f"bitext-postings:{sf_dir}", _postings)
+    bk = scratch("bitext-postings", e, _postings)
     cand = (
         bk.where(F.col("label") == 0)
         .select(F.col("vec_id").alias("src_id"), "tbl", "bucket")

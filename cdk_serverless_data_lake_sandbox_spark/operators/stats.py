@@ -27,6 +27,7 @@ from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     money_sum,
     pin,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
@@ -1527,7 +1528,7 @@ def brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "p_brand")
         .distinct()
     )
-    ob = materialize(ob, key=f"{sf_dir}:order-brands")
+    ob = scratch("order-brands", ob, lambda: ob)
     n_baskets = ob.select(
         F.count_distinct("l_orderkey").alias("n_baskets")
     )

@@ -14,9 +14,10 @@ from pyspark.sql import functions as F
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-    materialize,
     pin,
+    remember,
     round_rat,
+    scratch,
     sql_round_rat,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
@@ -849,27 +850,25 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, dl) document-length table, materialized once per
-    (application, sf_dir). It feeds TWO branches of the BM25 plan (the
-    per-doc norm join AND the avgdl/n_docs aggregate), each of which
-    otherwise re-tokenizes the whole corpus (`size(split(text))` under
-    two separate document scans in the r12 before-plan) — and the
+def _bm25_dl(d: DataFrame) -> DataFrame:
+    """(doc_id, dl) document-length table of the documents frame ``d``,
+    keyed scratch per version of ``d``. It feeds TWO branches of the
+    BM25 plan (the per-doc norm join AND the avgdl/n_docs aggregate),
+    each of which otherwise re-tokenizes the whole corpus
+    (`size(split(text))` under two separate document scans in the r12
+    before-plan) — and the
     hybrid RRF leg replays both. 16 bytes/doc in scratch; consumers
     are a broadcast build and a one-row aggregate, so the small-file
     re-parallelize is skipped (guide §1.2 don't-recompute, §2.3
     shuffle proxies not payloads)."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    def build() -> DataFrame:
-        d = load_tables(spark, sf_dir, ("documents",))["documents"]
-        return d.select(
+    return scratch(
+        "bm25-dl",
+        d,
+        lambda: d.select(
             "doc_id", F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("dl")
-        )
-
-    return materialize_lazy(spark, f"{sf_dir}:bm25-dl", build, fan_out=False)
+        ),
+        fan_out=False,
+    )
 
 
 def _bm25_query_table(spark: SparkSession) -> DataFrame:
@@ -902,13 +901,14 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (docs x |query vocab| rows at most), so the scratch write is
     # tiny and the second tokenize pass disappears. fan_out=False:
     # both consumers are broadcast-side/tiny aggregates (r12).
-    tf = materialize(
-        toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf")),
-        key=f"{sf_dir}:bm25-tf",
+    tf = scratch(
+        "bm25-tf",
+        d,
+        lambda: toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf")),
         fan_out=False,
     )
     df = tf.groupBy("token").agg(F.count("*").alias("df"))
-    dl = _bm25_dl(spark, sf_dir)
+    dl = _bm25_dl(d)
     stats = dl.agg(
         F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs")
     )
@@ -2270,9 +2270,6 @@ FROM (
 """
 
 
-_N_VECS_CACHE: dict[tuple[str, str], int] = {}
-
-
 @register("hybrid_retrieval_rrf", oracle=_HYBRID_ORACLE)
 def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via reciprocal-rank fusion (Cormack et al.
@@ -2310,15 +2307,9 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    # one bounded scalar per (application, table): the doc->vec link
-    # modulus. Cached like the schema cache — the count job re-ran per
-    # invocation (r12); the table is immutable for the app's lifetime.
-    app = spark.sparkContext.applicationId
-    ck = (app, sf_dir)
-    n_vecs = _N_VECS_CACHE.get(ck)
-    if n_vecs is None:
-        n_vecs = e.count()
-        _N_VECS_CACHE[ck] = n_vecs
+    # one bounded scalar per version of the embeddings table: the
+    # doc->vec link modulus, remembered so the count job runs once
+    n_vecs = remember("row-count", e, e.count)
     qids = sorted(_BM25_QUERIES)
     qv = e.where(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").cast("int").alias("query_id"),
@@ -2712,22 +2703,16 @@ def _ulm_train_counts(words: DataFrame) -> DataFrame:
     return counts
 
 
-def _ulm_counts_keyed(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
-    """Hard-EM piece counts trained ONCE per (application, sf_dir)
-    and materialized to scratch (r11 optimization, the ulm-final-seg /
+def _ulm_counts_keyed(docs: DataFrame) -> DataFrame:
+    """Hard-EM piece counts trained ONCE per corpus version and kept
+    as keyed scratch (r11 optimization, the ulm-final-seg /
     kmeans-assign precedent): C132 (tokenizer), C133/C135 (corpus
     apply via `_ulm_final_seg`) and D31 (artifact build) all train the
     IDENTICAL model, so the 2-round EM loop ran up to three times per
     application. The builder runs only on a miss; the words pin lives
     inside it so a hit skips the word-table build too."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
-    return materialize_lazy(
-        spark,
-        f"ulm-train-counts:{sf_dir}",
-        lambda: _ulm_train_counts(pin(_ulm_words(docs))),
+    return scratch(
+        "ulm-train-counts", docs, lambda: _ulm_train_counts(pin(_ulm_words(docs)))
     )
 
 
@@ -2751,7 +2736,7 @@ def unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     every inter-round statistic is an exact int64 map-side-combined
     sum, so hard-EM rounds compose without float drift and the DuckDB
     oracle replays the identical expression tree."""
-    counts = _ulm_counts_keyed(spark, sf_dir, _docs(spark, sf_dir))
+    counts = _ulm_counts_keyed(_docs(spark, sf_dir))
     tot = counts.agg(F.sum("c").alias("tot"))
     return (
         counts.crossJoin(F.broadcast(tot))
@@ -2947,7 +2932,7 @@ def _ulm_assemble_shuffle(docs: DataFrame, wseg: DataFrame) -> DataFrame:
 
 
 
-def _ulm_final_seg(docs: DataFrame, sf_dir: str) -> DataFrame:
+def _ulm_final_seg(docs: DataFrame) -> DataFrame:
     """Train the unigram model and segment every distinct word once
     under the FINAL piece probabilities — the round the oracle chain
     calls ubt{ITERS+1}. ONE definition of the train-then-apply
@@ -2955,7 +2940,7 @@ def _ulm_final_seg(docs: DataFrame, sf_dir: str) -> DataFrame:
     hand-kept copies could silently train different models than the
     shared oracle CTE chain assumes)."""
     words = pin(_ulm_words(docs))
-    counts = _ulm_counts_keyed(docs.sparkSession, sf_dir, docs)
+    counts = _ulm_counts_keyed(docs)
     return _ulm_segment(words, _ulm_lp(counts))
 
 
@@ -2977,18 +2962,12 @@ def unigram_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row fold over the POSITION-ORDERED word array — never a
     float sum across unordered rows, which would be partition-order
     dependent and break the oracle."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
     docs = _docs(spark, sf_dir)
-    # the trained final segmentation is deterministic per sf_dir: key
-    # it once per application (the shared-knn-graph precedent) so the
-    # assemble gate's vocab count and any repeat execution read the
-    # vocabulary-sized scratch instead of re-running EM + Viterbi
-    seg = materialize_lazy(
-        spark, f"ulm-final-seg:{sf_dir}", lambda: _ulm_final_seg(docs, sf_dir)
-    )
+    # the trained final segmentation is deterministic per corpus: key
+    # it (the shared-knn-graph precedent) so the assemble gate's vocab
+    # count and any repeat execution read the vocabulary-sized scratch
+    # instead of re-running EM + Viterbi
+    seg = scratch("ulm-final-seg", docs, lambda: _ulm_final_seg(docs))
     # fan out the stitch scan: the map-stitch path is one corpus pass
     # whose per-doc rebuild fold is CPU-heavy
     stitch_docs = load_tables(
@@ -3023,7 +3002,7 @@ def tokenizer_index_build(
     import os
 
     docs = _docs(spark, sf_dir)
-    counts = _ulm_counts_keyed(spark, sf_dir, docs)
+    counts = _ulm_counts_keyed(docs)
     tot = counts.agg(F.sum("c").alias("tot"))
     pieces = counts.crossJoin(F.broadcast(tot)).select(
         "piece",
@@ -3113,16 +3092,10 @@ def tokenizer_compression_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-keyed, AQE broadcasts), aggregated by language with
     map-side combine over exact int64s; the two ratios are final
     divisions."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        materialize_lazy,
-    )
-
     docs = _docs(spark, sf_dir)
     # same keyed frame as unigram_tokenize_corpus: one training per
-    # application serves both ops (r9 review)
-    seg = materialize_lazy(
-        spark, f"ulm-final-seg:{sf_dir}", lambda: _ulm_final_seg(docs, sf_dir)
-    )
+    # corpus serves both ops (r9 review)
+    seg = scratch("ulm-final-seg", docs, lambda: _ulm_final_seg(docs))
     wseg = seg.select("w", F.size("toks").cast("bigint").alias("np"))
     dtoks = (
         docs.select(

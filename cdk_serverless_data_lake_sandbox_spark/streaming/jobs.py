@@ -271,7 +271,7 @@ def stream_dedup_gate(
     stream: DataFrame,
     corpus: DataFrame,
     target_path: str,
-    corpus_key: str = "stream-dedup-corpus",
+    reuse_corpus: bool = True,
 ):
     """Streaming near-dup gate: each micro-batch of incoming documents
     is checked against a static reference corpus — exact content-hash
@@ -284,8 +284,9 @@ def stream_dedup_gate(
     to each micro-batch, so stream and batch semantics are identical
     by construction (the test pins it). The corpus-side intermediates
     (content-hash set, hashed shingle postings) are KEYED scratch
-    tables: hashed on the first micro-batch, re-scanned by every
-    later one — the static side never pays per-batch recompute. Each
+    tables (``reuse_corpus``, keyed on the corpus frame itself): hashed
+    on the first micro-batch, re-scanned by every later one — the
+    static side never pays per-batch recompute. Each
     micro-batch pays |batch| x (posting overlap), never a corpus
     self-join. Returns the StreamingQuery handle (caller awaits)."""
     from cdk_serverless_data_lake_sandbox_spark.operators.dedup import (
@@ -293,7 +294,7 @@ def stream_dedup_gate(
     )
 
     def gate(batch: DataFrame, batch_id: int) -> None:
-        survivors = dedup_incremental(batch, corpus, corpus_key=corpus_key)
+        survivors = dedup_incremental(batch, corpus, reuse_corpus=reuse_corpus)
         survivors.write.mode("append").parquet(target_path)
 
     return stream.writeStream.foreachBatch(gate).trigger(availableNow=True).start()

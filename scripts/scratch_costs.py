@@ -1,13 +1,16 @@
 """First-invocation (build) vs repeat-invocation (serve) cost for
-every query backed by a keyed-scratch artifact (r11 verdict item 7:
-the bench's warm-up + best-of-2 reports steady-state serving cost, so
-the build cost of each per-(application, sf_dir) materialization must
-stay auditable somewhere).
+every query backed by keyed scratch (``_helpers.scratch``): the
+bench's warm-up + best-of-2 reports steady-state serving cost, so the
+build cost of each per-application entry must stay auditable
+somewhere.
 
-One fresh session, sf0.1: each query is timed on its FIRST invocation
-(which pays its keyed builders) and then best-of-2 warm (the bench's
-number). Queries are ordered so shared keys are attributed to the
-first query that builds them (noted in the table).
+One fresh session, sf0.1 by default. Every registered query runs once,
+in registry order; the queries whose first call added keyed scratch
+entries are the scratch-backed ones, and that call is their build
+time. Those queries are then timed best-of-2 warm (serve). An entry
+shared by several queries is attributed to the first query that
+builds it; its later consumers are hits on their first call and do not
+appear.
 
 Usage: python scripts/scratch_costs.py [--sf DIR]
 Prints a markdown table for SURVEY §7 plus one JSON line.
@@ -16,31 +19,13 @@ Prints a markdown table for SURVEY §7 plus one JSON line.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
 sys.path.insert(0, ".")
+from cdk_serverless_data_lake_sandbox_spark.operators import _helpers  # noqa: E402
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries  # noqa: E402
 from cdk_serverless_data_lake_sandbox_spark.session import get_spark  # noqa: E402
-
-# (query, keyed artifacts its first invocation builds)
-TARGETS = [
-    ("dedup_ngram_jaccard", "ngram-hashed:{sf} (+hot probe)"),
-    ("containment_dedup", "(shares ngram-hashed)"),
-    ("cluster_balanced_sample", "kmeans-assign-fixed:{sf}"),
-    ("kmeans_clusters", "(shares kmeans-assign-fixed)"),
-    ("semantic_dedup", "kmeans-assign:{sf}"),
-    ("unigram_lm_tokenizer", "ulm-train-counts:{sf}"),
-    ("unigram_tokenize_corpus", "ulm-final-seg:{sf}"),
-    ("copurchase_pagerank", "copurchase-edges + copurchase-nodes"),
-    ("copurchase_triangles", "(shares copurchase-edges)"),
-    ("bitext_margin_mining_lsh", "bitext-postings:{sf}"),
-    ("knn_graph_nn_descent", "emb-norms:{sf} + knn-graph:{sf}"),
-    ("bm25_retrieval", "bm25-tf + bm25-dl (r12)"),
-    ("hybrid_retrieval_rrf", "(shares bm25-tf/dl)"),
-    ("cdc_chunk_dedup", "{sf}:cdcchunks"),
-]
 
 
 def main() -> None:
@@ -50,28 +35,33 @@ def main() -> None:
     spark = get_spark(app_name="scratch-costs")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
-    rows = []
-    for name, keys in TARGETS:
-        fn = qs[name]
+
+    def run(name: str) -> float:
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        build = time.perf_counter() - t0
-        serve = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            serve = dt if serve is None else min(serve, dt)
-        rows.append((name, keys.replace("{sf}", "{sf_dir}"), build, serve))
-    print("| query | keyed artifact built | first-invocation s | warm best-of-2 s |")
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    built = []  # (query, names of the entries its first call added, build s)
+    for name in qs:
+        before = set(_helpers._MATERIALIZED)
+        try:
+            dt = run(name)
+        except Exception as exc:  # report and keep surveying
+            print(f"{name}: {type(exc).__name__}: {exc}", file=sys.stderr)
+            continue
+        added = sorted(k[1] for k in set(_helpers._MATERIALIZED) - before)
+        if added:
+            built.append((name, added, dt))
+    rows = [(n, added, b, min(run(n) for _ in range(2))) for n, added, b in built]
+    print("| query | keyed entries built | first-invocation s | warm best-of-2 s |")
     print("| --- | --- | --- | --- |")
-    for name, keys, build, serve in rows:
-        print(f"| {name} | {keys} | {build:.2f} | {serve:.2f} |")
+    for name, added, build, serve in rows:
+        print(f"| {name} | {', '.join(added)} | {build:.2f} | {serve:.2f} |")
     print(json.dumps({
         "metric": "scratch_build_vs_serve",
         "sf_dir": sf_dir,
-        "queries": {n: {"build_s": round(b, 3), "serve_s": round(s, 3)}
-                    for n, _, b, s in rows},
+        "queries": {n: {"entries": a, "build_s": round(b, 3), "serve_s": round(s, 3)}
+                    for n, a, b, s in rows},
     }))
     spark.stop()
 

@@ -33,11 +33,23 @@ def prop_examples(full_n: int) -> int:
     return full_n if FULL_TIER else max(2, full_n // 3)
 
 
+# Driver heap of the test session unless SPARK_DRIVER_MEMORY is set.
+# The JVM grows its heap toward the maximum before collecting, so under
+# the session's 16g default the default tier reached 15.2 GB resident
+# and was OOM-killed on a 16 GB host (at 6g it peaks at 7.4 GB). The
+# heaviest module, test_streaming.py, keeps at most 3.2 GB of heap
+# after a collection; at 4g the whole tier peaks at 5.3 GB resident.
+TEST_DRIVER_MEMORY = "4g"
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile
 
     wh = tempfile.mkdtemp(prefix="spark-wh-")
+    extra_conf = {"spark.sql.warehouse.dir": wh}
+    if "SPARK_DRIVER_MEMORY" not in os.environ:
+        extra_conf["spark.driver.memory"] = TEST_DRIVER_MEMORY
     s = get_spark(
         app_name="tests",
         # default tier: 4 shuffle partitions — still multi-partition
@@ -47,7 +59,7 @@ def spark():
         # 2-batch stateful availableNow query is 4.7 s at 8
         # partitions, 2.4 s at 2). Full tier keeps the r11 config.
         shuffle_partitions=8 if FULL_TIER else 4,
-        extra_conf={"spark.sql.warehouse.dir": wh},
+        extra_conf=extra_conf,
     )
     yield s
     s.stop()

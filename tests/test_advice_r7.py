@@ -440,29 +440,3 @@ def test_minhash_index_format_stamp(spark, tmp_path):
     os.remove(os.path.join(idx, "_format.json"))  # pre-stamp index
     with pytest.raises(ValueError, match="rebuild"):
         minhash_index_query(spark, idx, probe)
-
-
-def test_pin_reliable_reclaims_superseded_iterations(spark):
-    """Reliable-mode pin() keeps at most _PIN_KEEP scratch dirs per
-    call site: a 6-round loop must not leave 6 frames on disk (review
-    finding: unbounded disk growth over long iterative jobs), and the
-    immediately-previous generation stays readable."""
-    from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
-
-    spark.conf.set("spark.graft.materializer", "reliable")
-    try:
-        app = spark.sparkContext.applicationId
-        before = {s for (a, s) in H._PIN_HISTORY if a == app}
-        frames = []
-        for i in range(6):
-            frames.append(H.pin(spark.range(i, i + 3)))  # one call site
-        site_hists = [
-            h for (a, s), h in H._PIN_HISTORY.items()
-            if a == app and s not in before
-        ]
-        assert site_hists and max(len(h) for h in site_hists) <= H._PIN_KEEP
-        # newest and previous generation both readable
-        assert frames[-1].count() == 3
-        assert frames[-2].count() == 3
-    finally:
-        spark.conf.unset("spark.graft.materializer")

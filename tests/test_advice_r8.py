@@ -121,42 +121,6 @@ def test_jdbc_parquet_load_skips_sidecars_and_old_versions(spark, tmp_path):
         store.load_table_from_parquet("nothing", str(empty))
 
 
-# ------------------------------------------------------------- fix 3
-def test_pin_reclaim_off_switch_keeps_every_generation(spark):
-    from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
-
-    spark.conf.set("spark.graft.materializer", "reliable")
-    spark.conf.set("spark.graft.pin_reclaim", "off")
-    before = {k: list(v) for k, v in H._PIN_HISTORY.items()}
-    try:
-        df = spark.range(10)
-        for _ in range(4):
-            df = H.pin(df.withColumn("id", F.col("id") + 1))
-        # reclamation is fully disabled: no history recorded, so no
-        # generation of this lineage can ever be deleted from under a
-        # live frame (deletion only happens when history rolls)
-        assert H._PIN_HISTORY == before
-        assert sorted(r.id for r in df.collect()) == list(range(4, 14))
-    finally:
-        spark.conf.unset("spark.graft.pin_reclaim")
-    # with reclaim back on (default), the same loop records history
-    # and keeps only _PIN_KEEP generations per site
-    try:
-        df = spark.range(10)
-        for _ in range(4):
-            df = H.pin(df.withColumn("id", F.col("id") + 1))
-        app = spark.sparkContext.applicationId
-        new_hists = [
-            hist
-            for (a, site), hist in H._PIN_HISTORY.items()
-            if a == app and hist != before.get((a, site))
-        ]
-        assert new_hists and all(len(h) <= H._PIN_KEEP for h in new_hists)
-        assert sorted(r.id for r in df.collect()) == list(range(4, 14))
-    finally:
-        spark.conf.unset("spark.graft.materializer")
-
-
 # ------------------------------------------------------------- fix 5
 def test_minhash_gate_refuses_unstamped_preexisting_index(spark, tmp_path):
     from cdk_serverless_data_lake_sandbox_spark.streaming.jobs import (

@@ -6,10 +6,7 @@ from __future__ import annotations
 import pytest
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, under_split
-from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-    materialize,
-    uuid_hex,
-)
+from cdk_serverless_data_lake_sandbox_spark.operators._helpers import materialize
 from cdk_serverless_data_lake_sandbox_spark.operators.dedup import _docs
 
 from .conftest import SF_SMALL
@@ -37,9 +34,7 @@ def test_fan_out_targets_core_count_not_shuffle_partitions(spark):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
-        tiny = materialize(
-            spark.range(10).coalesce(1), key=f"fan-out-tiny:{uuid_hex()}"
-        )
+        tiny = materialize(spark.range(10).coalesce(1))
         assert tiny.rdd.getNumPartitions() == par
         assert _docs(spark, SF_SMALL).rdd.getNumPartitions() == par
         lake = load_tables(spark, SF_SMALL, ("documents",), fan_out=("documents",))

@@ -7,12 +7,9 @@ adjudicated by one-boot probes recorded in OPTIMIZATION_r12.md):
   fan_out and scratch reads) must provably SELF-DISABLE on an input
   the split config can already parallelize, so the bench-layout
   repartition demonstrably never reaches a production plan.
-- ``_bm25_scored``'s document-length table is keyed scratch now: the
-  scratch-hit path (second invocation in one application) must be
-  value-identical, for the BM25 entry and the hybrid fusion that
-  shares it.
-- ``materialize(..., fan_out=False)`` must skip the small-file
-  re-parallelize but never change values.
+- the BM25 query table is an inline VALUES relation.
+
+The keyed-scratch hit-path tests live in ``test_scratch.py``.
 """
 
 from __future__ import annotations
@@ -27,11 +24,7 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import (
     spread,
     under_split,
 )
-from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-    materialize,
-    uuid_hex,
-)
-from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
+from cdk_serverless_data_lake_sandbox_spark.operators._helpers import materialize
 
 from .conftest import SF_SMALL
 
@@ -98,54 +91,9 @@ def test_serial_scan_gates_self_disable_on_splittable_file(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     # a scratch directory of 2 * par files scans in enough splits: the
-    # cached probe sees them and the read stays a plain scan
-    multi = materialize(
-        spark.range(0, 800, numPartitions=2 * par), key=f"multi-split:{uuid_hex()}"
-    )
+    # write-time probe sees them and the read stays a plain scan
+    multi = materialize(spark.range(0, 800, numPartitions=2 * par))
     assert _fan_out_exchanges(multi) == []
-
-
-def test_jaccard_containment_share_keyed_postings(spark):
-    """The r12 keyed posting table: repeat invocations (scratch-hit
-    path) must be value-identical for both consumers, and the two
-    generators must resolve to the SAME keyed artifact (one inverted
-    index per (application, sf_dir, hot bound))."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        _MATERIALIZED,
-    )
-
-    qs = all_queries()
-    j1 = _rows(qs["dedup_ngram_jaccard"](spark, SF_SMALL))
-    c1 = _rows(qs["containment_dedup"](spark, SF_SMALL))
-    app = spark.sparkContext.applicationId
-    # exact-prefix match: other tests build gated variants
-    # (ngram-hashed-gated:...) whose posting scratch is legitimately
-    # separate
-    posting_keys = [
-        k
-        for (a, k) in _MATERIALIZED
-        if a == app and k.startswith(f"ngram-hashed:{SF_SMALL}:postings:")
-    ]
-    assert len(posting_keys) == 1, posting_keys  # shared, not per-consumer
-    assert _rows(qs["dedup_ngram_jaccard"](spark, SF_SMALL)) == j1
-    assert _rows(qs["containment_dedup"](spark, SF_SMALL)) == c1
-    assert len(j1) > 0 and len(c1) > 0
-
-
-def test_bm25_scratch_hit_path_identical(spark):
-    q = all_queries()["bm25_retrieval"]
-    first = _rows(q(spark, SF_SMALL))
-    second = _rows(q(spark, SF_SMALL))  # tf + dl scratch hits
-    assert first == second
-    assert len(first) > 0
-
-
-def test_hybrid_rrf_scratch_hit_path_identical(spark):
-    q = all_queries()["hybrid_retrieval_rrf"]
-    first = _rows(q(spark, SF_SMALL))
-    second = _rows(q(spark, SF_SMALL))
-    assert first == second
-    assert len(first) > 0
 
 
 def test_bm25_query_table_is_local_relation(spark):
@@ -163,15 +111,3 @@ def test_bm25_query_table_is_local_relation(spark):
     }
     # LocalRelation, not a Python-RDD scan
     assert "ExistingRDD" not in qt._jdf.queryExecution().executedPlan().toString()
-
-
-def test_materialize_fan_out_off_skips_repartition_keeps_values(spark):
-    src = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).alias("k")
-    )
-    key = f"test-fanout-{uuid_hex()}"
-    on = materialize(src, key=f"{key}-on", fan_out=True)
-    off = materialize(src, key=f"{key}-off", fan_out=False)
-    assert _rows(on) == _rows(off)
-    off_plan = off._jdf.queryExecution().executedPlan().toString()
-    assert "RoundRobinPartitioning" not in off_plan

@@ -69,17 +69,16 @@ def test_auto_hot_guard_stays_off_on_bounded_postings(spark):
     )
 
     docs = load_tables(spark, SF_SMALL, ("documents",))["documents"]
-    # one scratch key -> both calls scan the same materialized
+    # keyed scratch -> both calls scan the same materialized
     # intermediate, so the plans are comparable as strings
-    key = "r4-auto-guard-bounded"
     auto_plan = (
-        ngram_jaccard_pairs(docs, scratch_key=key)
+        ngram_jaccard_pairs(docs, reuse=True)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
     )
     off_plan = (
-        ngram_jaccard_pairs(docs, scratch_key=key, hot_threshold=None)
+        ngram_jaccard_pairs(docs, reuse=True, hot_threshold=None)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()

@@ -24,7 +24,7 @@ def test_ulm_assemble_map_equals_shuffle(spark):
     from pyspark.sql import functions as F
 
     docs = _docs(spark, SF_SMALL)
-    seg = _ulm_final_seg(docs, SF_SMALL)
+    seg = _ulm_final_seg(docs)
     wseg = seg.select(
         "w",
         F.size("toks").cast("bigint").alias("np"),
@@ -49,7 +49,7 @@ def test_ulm_assemble_map_drops_unknown_words_like_join(spark):
     from pyspark.sql import functions as F
 
     docs = _docs(spark, SF_SMALL)
-    seg = _ulm_final_seg(docs, SF_SMALL)
+    seg = _ulm_final_seg(docs)
     wseg = seg.select(
         "w",
         F.size("toks").cast("bigint").alias("np"),

@@ -423,9 +423,7 @@ def test_stream_dedup_gate_matches_batch_incremental(spark, tmp_path):
         .parquet(drop)
     )
     target = str(tmp_path / "admitted")
-    q = stream_dedup_gate(
-        stream, corpus, target, corpus_key=f"test-gate:{tmp_path}"
-    )
+    q = stream_dedup_gate(stream, corpus, target)
     await_stream_done(q)
 
     got = sorted(r.doc_id for r in spark.read.parquet(target).collect())
