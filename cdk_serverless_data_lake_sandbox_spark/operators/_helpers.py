@@ -119,19 +119,22 @@ def sql_round_rat(num_sql: str, den_sql: str, dp: int, wide: bool = False) -> st
 # ``sameSemantics()`` — the rule Spark's CacheManager applies), so two
 # sf_dirs, a filtered corpus and an in-memory corpus each get their own
 # entry without a hand-made key. Each entry also records the content
-# version of ``reads``: (path, size, mtime) of every input file. A
-# lookup whose version differs rebuilds, and the rebuilt entry replaces
-# its predecessor (whose directory is deleted). An input whose version
-# cannot be read (gone, or not a local file) is a miss, never a hit,
-# and its build is not recorded.
+# version of ``reads``: (path, size, mtime) of every input file, read
+# through Hadoop's FileSystem. A lookup whose version differs rebuilds,
+# and the rebuilt entry replaces every entry of the same name that
+# recorded another state of the directories it read (their scratch
+# directories are deleted). An input whose version cannot be
+# read is a miss, never a hit, and its build is returned unwritten.
 # Driver-side values derived from the same inputs (:func:`remember`)
 # go through the same key into one sibling memo.
 import atexit as _atexit
+import functools as _functools
 import os as _os
 import shutil as _shutil
 import uuid as _uuid
 from typing import NamedTuple as _NamedTuple
-from urllib.parse import unquote as _unquote, urlparse as _urlparse
+
+from py4j.protocol import Py4JJavaError
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import spread
 
@@ -187,37 +190,69 @@ _MEMO: dict[tuple, _Entry] = {}
 
 
 def _input_version(reads) -> tuple | None:
-    """(path, size, mtime) of every input file of ``reads``, or None
-    when one of them is not a local file or cannot be stat'ed."""
+    """(path, size, mtime) of every input file of ``reads``, read
+    through the Hadoop FileSystem of each path (file:, hdfs:, s3a:
+    alike), or None when one of them cannot be stat'ed."""
+    spark = reads.sparkSession
+    conf = spark._jsc.hadoopConfiguration()
+    path_cls = _hadoop_path(spark._jvm)
     out = []
-    for f in sorted(reads.inputFiles()):
-        u = _urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            st = _os.stat(_unquote(u.path))
-        except OSError:
-            return None
-        out.append((f, st.st_size, st.st_mtime_ns))
+    try:
+        for f in sorted(reads.inputFiles()):
+            p = path_cls(f)
+            st = p.getFileSystem(conf).getFileStatus(p)
+            out.append((f, st.getLen(), st.getModificationTime()))
+    except Py4JJavaError:
+        return None
     return tuple(out)
 
 
-def _lookup(store: dict, name: str, reads, make):
+@_functools.cache
+def _hadoop_path(jvm):
+    """Hadoop's Path class: resolving it through the gateway costs a
+    reflection round trip (~1.4 ms), more than the stat itself."""
+    return jvm.org.apache.hadoop.fs.Path
+
+
+def _lookup(store: dict, name: str, reads) -> tuple:
     """The one keyed lookup behind :func:`scratch` and
-    :func:`remember`: return (value, replaced entry or None). ``make``
-    runs on a miss; its value is recorded only when the input version
-    is readable and the bucket holds no other plan."""
+    :func:`remember`: (key, version, hit entry or None). ``key`` is
+    None when a miss must not be recorded: the input version cannot be
+    read, or the hash bucket holds another plan."""
     key = (reads.sparkSession.sparkContext.applicationId, name, reads.semanticHash())
     version = _input_version(reads)
     old = store.get(key)
-    same = old is not None and reads.sameSemantics(old.reads)
-    if same and old.version == version:  # recorded versions are never None
-        return old.value, None
-    value = make()
-    if version is None or (old is not None and not same):
-        return value, None
+    if version is None or (old is not None and not reads.sameSemantics(old.reads)):
+        return None, version, None
+    return key, version, old if old is not None and old.version == version else None
+
+
+def _record(store: dict, key: tuple, reads, version: tuple, value) -> None:
+    """Record a build and drop the entries of this application and
+    ``name`` it makes stale: any that recorded a different state of a
+    directory ``version`` lists — the table was rewritten or grown
+    since, whichever plan read it (a filter, or a fan-out the new size
+    turned on or off). Entries over the same files at the same version
+    (two filters of one table) stay."""
+    now = _by_dir(version)
+    for k in [k for k in store if k[:2] == key[:2]]:
+        old = _by_dir(store[k].version)
+        if k == key or any(now[d] != fs for d, fs in old.items() if d in now):
+            _drop(store, k)
     store[key] = _Entry(reads, version, value)
-    return value, old
+
+
+def _by_dir(version: tuple) -> dict:
+    out: dict[str, set] = {}
+    for v in version:
+        out.setdefault(_os.path.dirname(v[0]), set()).add(v)
+    return out
+
+
+def _drop(store: dict, key: tuple) -> None:
+    e = store.pop(key)
+    if store is _MATERIALIZED:
+        _shutil.rmtree(e.value[0], ignore_errors=True)
 
 
 def scratch(name: str, reads, build, fan_out: bool = True):
@@ -227,20 +262,29 @@ def scratch(name: str, reads, build, fan_out: bool = True):
     derives from; ``name`` tells apart the builds over one input and
     carries their parameters. On a hit ``build`` never runs (eager
     builders such as k-means collect while constructing their frame)
-    and no Spark job runs. ``fan_out`` as in :func:`materialize`."""
+    and no Spark job runs. A miss that cannot be recorded returns
+    ``build()`` unwritten. ``fan_out`` as in :func:`materialize`."""
     spark = reads.sparkSession
-    (path, schema, splits), old = _lookup(
-        _MATERIALIZED, name, reads, lambda: _write(build(), name)
-    )
-    if old is not None:
-        _shutil.rmtree(old.value[0], ignore_errors=True)
-    return _scratch_read(spark, path, schema, splits, fan_out)
+    key, version, hit = _lookup(_MATERIALIZED, name, reads)
+    if hit is not None:
+        return _scratch_read(spark, *hit.value, fan_out)
+    if key is None:
+        return build()
+    written = _write(build(), name)
+    _record(_MATERIALIZED, key, reads, version, written)
+    return _scratch_read(spark, *written, fan_out)
 
 
 def remember(name: str, reads, compute):
     """Driver-side value derived from ``reads`` (a count, a plan
     decision), computed once per :func:`scratch` key."""
-    return _lookup(_MEMO, name, reads, compute)[0]
+    key, version, hit = _lookup(_MEMO, name, reads)
+    if hit is not None:
+        return hit.value
+    value = compute()
+    if key is not None:
+        _record(_MEMO, key, reads, version, value)
+    return value
 
 
 def materialize(df, fan_out: bool = True):

@@ -196,26 +196,32 @@ def _resolve_hot(
     materialized to scratch: three plan branches consume it (anti,
     semi, and the emptiness probe) and the count agg should run once.
 
-    With ``reuse`` the decision is remembered under the scratch key
-    of ``docs`` (:func:`_helpers.remember`): posting sizes are a
-    property of the corpus, so every query deriving from it (jaccard /
-    containment / removal / components / source-matrix) pays the
-    probe aggregation once per corpus version, like the scratch
-    itself."""
+    With ``reuse`` the "auto" decision is remembered per corpus
+    version (:func:`_helpers.remember`) and an engaged hot set is
+    keyed scratch: posting sizes are a property of the corpus, so
+    every query deriving from it (jaccard / containment / removal /
+    components / source-matrix) pays the probe aggregation once per
+    corpus version, like the postings themselves. An engaged "auto"
+    guard then aggregates twice on its first call (probe, then
+    write)."""
     if hot_threshold is None:
         return None
     bound = _HOT_AUTO_BOUND if hot_threshold == "auto" else int(hot_threshold)
 
-    def probe() -> DataFrame | None:
-        hot = materialize(
+    def hot_set() -> DataFrame:
+        return (
             inv.groupBy("shingle")
             .agg(F.count("*").alias("psz"))
             .where(F.col("psz") > bound)
             .select("shingle")
         )
-        return None if hot_threshold == "auto" and hot.isEmpty() else hot
 
-    return remember(f"ngram-hot:{hot_threshold}", docs, probe) if reuse else probe()
+    if not reuse:
+        hot = materialize(hot_set())
+        return None if hot_threshold == "auto" and hot.isEmpty() else hot
+    if hot_threshold == "auto" and remember(f"ngram-hot:{bound}", docs, lambda: hot_set().isEmpty()):
+        return None
+    return scratch(f"ngram-hot:{bound}", docs, hot_set)
 
 
 def _raw_postings(
@@ -1198,9 +1204,7 @@ FROM per GROUP BY source
 """
 
 
-def cdc_chunk_dedup_frame(
-    docs: DataFrame, mod: int = _CDC_MOD, reuse: bool = False
-) -> DataFrame:
+def cdc_chunk_dedup_frame(docs: DataFrame, mod: int = _CDC_MOD) -> DataFrame:
     """Content-defined-chunking dedup profile (the rolling-hash
     boundary trick of LBFS/rsync applied at word granularity): a word
     whose 16-bit hash is 0 mod {mod} closes a chunk, so chunk
@@ -1245,9 +1249,7 @@ def cdc_chunk_dedup_frame(
             F.length("ctext").alias("chunk_bytes"),
         )
     )
-    chunks = (
-        scratch(f"cdc-chunks:{mod}", docs, lambda: chunks) if reuse else materialize(chunks)
-    )
+    chunks = scratch(f"cdc-chunks:{mod}", docs, lambda: chunks)
     hs = chunks.groupBy("chunk_hash").agg(
         F.count_distinct("source").alias("n_sources")
     )
@@ -1279,9 +1281,7 @@ def cdc_chunk_dedup_frame(
 def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`cdc_chunk_dedup_frame` over the
     documents table."""
-    return cdc_chunk_dedup_frame(
-        load_tables(spark, sf_dir, ("documents",))["documents"], reuse=True
-    )
+    return cdc_chunk_dedup_frame(load_tables(spark, sf_dir, ("documents",))["documents"])
 
 
 # ---------------------------------------------------------------- D19

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-    materialize,
     pin,
     round_rat,
     scratch,
@@ -175,9 +174,7 @@ GROUP BY p.doc_id
 """
 
 
-def dup_span_profile(
-    docs: DataFrame, k: int = _SPAN_K, reuse: bool = False
-) -> DataFrame:
+def dup_span_profile(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     """Exact-substring duplication profile at word-``k``-gram
     granularity (the scalable approximation of suffix-array dedup,
     Lee et al. 2022 "Deduplicating Training Data Makes Language
@@ -201,7 +198,7 @@ def dup_span_profile(
         .where(F.size("_w") >= k)
         .select("doc_id", F.explode_outer(spans).alias("span_h"))
     )
-    pos = scratch(f"span-hashes:{k}", docs, lambda: pos) if reuse else materialize(pos)
+    pos = scratch(f"span-hashes:{k}", docs, lambda: pos)
     cnt = pos.groupBy("span_h").agg(F.count_distinct("doc_id").alias("nd"))
     n_dup = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0)).cast("bigint")
     return (
@@ -222,7 +219,7 @@ def dup_span_profile(
 def dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`dup_span_profile` over the corpus
     documents table (k=8, span index kept as keyed scratch)."""
-    return dup_span_profile(_docs(spark, sf_dir), reuse=True)
+    return dup_span_profile(_docs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------- C48
@@ -753,9 +750,7 @@ FROM w LEFT JOIN agg a USING (doc_id)
 """
 
 
-def strip_dup_spans_frame(
-    docs: DataFrame, k: int = _SPAN_K, reuse: bool = False
-) -> DataFrame:
+def strip_dup_spans_frame(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     """The REMOVAL step of exact-substring dedup (Lee et al. 2022,
     arXiv:2107.06499 — ``dup_span_fraction`` is the matching profile
     step): every word-k-gram span occurring in >= 2 distinct documents
@@ -796,11 +791,11 @@ def strip_dup_spans_frame(
         .select("doc_id", F.explode(spans).alias("s"))
         .select("doc_id", F.col("s.p0").alias("p0"), F.col("s.span_h").alias("span_h"))
     )
-    # materialize, not pin: the extraction is word-level (cheap) and
+    # keyed scratch, not pin: the extraction is word-level (cheap) and
     # the keyed scratch is shared across CALLS in one application —
     # an r11 A/B of pin-per-call here measured 1.14x slower than the
     # cached scratch re-read.
-    pos = scratch(f"span-starts:{k}", docs, lambda: pos) if reuse else materialize(pos)
+    pos = scratch(f"span-starts:{k}", docs, lambda: pos)
     own = (
         pos.groupBy("span_h")
         .agg(
@@ -870,8 +865,8 @@ def strip_dup_spans_frame(
 def strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered entry for :func:`strip_dup_spans_frame` over the
     corpus documents table (k=8, position-span index shared per
-    sf_dir)."""
-    return strip_dup_spans_frame(_docs_by_id(spark, sf_dir), reuse=True)
+    corpus)."""
+    return strip_dup_spans_frame(_docs_by_id(spark, sf_dir))
 
 
 # ---------------------------------------------------------------- C93

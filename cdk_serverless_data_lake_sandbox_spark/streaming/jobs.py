@@ -271,7 +271,6 @@ def stream_dedup_gate(
     stream: DataFrame,
     corpus: DataFrame,
     target_path: str,
-    reuse_corpus: bool = True,
 ):
     """Streaming near-dup gate: each micro-batch of incoming documents
     is checked against a static reference corpus — exact content-hash
@@ -284,7 +283,7 @@ def stream_dedup_gate(
     to each micro-batch, so stream and batch semantics are identical
     by construction (the test pins it). The corpus-side intermediates
     (content-hash set, hashed shingle postings) are KEYED scratch
-    tables (``reuse_corpus``, keyed on the corpus frame itself): hashed
+    tables, keyed on the corpus frame itself: hashed
     on the first micro-batch, re-scanned by every later one — the
     static side never pays per-batch recompute. Each
     micro-batch pays |batch| x (posting overlap), never a corpus
@@ -294,7 +293,7 @@ def stream_dedup_gate(
     )
 
     def gate(batch: DataFrame, batch_id: int) -> None:
-        survivors = dedup_incremental(batch, corpus, reuse_corpus=reuse_corpus)
+        survivors = dedup_incremental(batch, corpus, reuse_corpus=True)
         survivors.write.mode("append").parquet(target_path)
 
     return stream.writeStream.foreachBatch(gate).trigger(availableNow=True).start()

@@ -125,6 +125,68 @@ def test_table_change_mid_application_rebuilds(spark, tmp_path):
     assert not any(os.path.exists(d) for _, d in built)
 
 
+def test_table_growth_past_fan_out_gate_replaces_entries(spark, tmp_path):
+    """A rewrite that grows the table past the fan-out gate changes the
+    plan the builds read (``dedup._docs`` no longer spreads it), so
+    the rebuilt entries land under new keys: they still replace the
+    entries of the old table state, whose directories are deleted."""
+    from cdk_serverless_data_lake_sandbox_spark.catalog import lake_splits, under_split
+
+    lake, fresh = str(tmp_path / "lake"), str(tmp_path / "fresh")
+    shutil.copytree(SF_SMALL, lake)
+    doc_path = os.path.join(lake, "documents.parquet")
+    staged = str(tmp_path / "documents.parquet")
+    duckdb.sql(
+        f"""COPY (
+          SELECT * FROM read_parquet('{doc_path}')
+          UNION ALL
+          SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
+          FROM read_parquet('{doc_path}')
+        ) TO '{staged}' (FORMAT PARQUET)"""
+    )
+    # every document copied once more; a split size the grown file
+    # fills to the gate and the old one does not
+    par = spark.sparkContext.defaultParallelism
+    split = os.path.getsize(staged) // max(par // 2, 2)
+    names = ("dedup_ngram_jaccard", "containment_dedup")
+    qs = all_queries()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        assert under_split(lake_splits(spark, lake, "documents"), par)
+        before = {n: _rows(qs[n](spark, lake)) for n in names}
+        built = _entries(spark, doc_path)
+        os.replace(staged, doc_path)
+        assert not under_split(lake_splits(spark, lake, "documents"), par)
+        shutil.copytree(lake, fresh)
+        after = {n: _rows(qs[n](spark, lake)) for n in names}
+        for n in names:
+            assert after[n] == _rows(qs[n](spark, fresh)), n
+        rebuilt = _entries(spark, doc_path)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert len(after["dedup_ngram_jaccard"]) > len(before["dedup_ngram_jaccard"])
+    assert [n for n, _ in rebuilt] == [n for n, _ in built]
+    assert not any(os.path.exists(d) for _, d in built)
+
+
+def test_unreadable_input_version_builds_unwritten(spark, tmp_path):
+    """An input whose version cannot be read is a miss that records
+    nothing and writes no scratch directory."""
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    reads = spark.read.parquet(path)  # lists the files now
+    shutil.rmtree(path)
+    frame = spark.range(3)
+    before = dict(H._MATERIALIZED)
+    app_dir = os.path.join(H._SCRATCH_ROOT, spark.sparkContext.applicationId)
+    dirs = set(os.listdir(app_dir)) if os.path.isdir(app_dir) else set()
+    assert H.scratch("unreadable", reads, lambda: frame) is frame
+    assert H._MATERIALIZED == before
+    assert (set(os.listdir(app_dir)) if os.path.isdir(app_dir) else set()) == dirs
+    assert H.remember("unreadable", reads, lambda: 7) == 7
+    assert not any(k[1] == "unreadable" for k in H._MEMO)
+
+
 def test_two_corpora_through_one_gate(spark, tmp_path):
     """One application gates the same new documents against two
     corpora (the even and the odd doc_id halves of one table): each
