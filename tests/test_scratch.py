@@ -12,9 +12,10 @@ import os
 import shutil
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import lake_splits, load_tables, under_split
 from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
@@ -87,85 +88,63 @@ def test_materialize_fan_out_off_skips_repartition_keeps_values(spark):
     assert "RoundRobinPartitioning" not in off_plan
 
 
-def test_table_change_mid_application_rebuilds(spark, tmp_path):
+@pytest.mark.parametrize(
+    "copied, split_at_gate",
+    [("doc_id < 5", False), ("true", True)],
+    ids=["five-copies", "past-fan-out-gate"],
+)
+def test_table_change_mid_application_rebuilds(spark, tmp_path, copied, split_at_gate):
     """Rewriting a lake table inside one application: the next calls
     of the scratch-backed queries rebuild and equal a fresh build over
-    the new table, and each rebuilt entry replaces its predecessor."""
+    the new table, and each rebuilt entry replaces its predecessor.
+    ``past-fan-out-gate`` copies every document and sets a split size
+    the grown file fills to the fan-out gate and the old one does not,
+    so ``dedup._docs`` stops spreading the table: the plan the builds
+    read changes, and the rebuilt entries (under new keys) must still
+    replace the old ones."""
     lake, fresh = str(tmp_path / "lake"), str(tmp_path / "fresh")
     shutil.copytree(SF_SMALL, lake)
+    doc_path = os.path.join(lake, "documents.parquet")
+    # append exact copies of documents under new ids
+    staged = str(tmp_path / "documents.parquet")
+    duckdb.sql(
+        f"""COPY (
+          SELECT * FROM read_parquet('{doc_path}')
+          UNION ALL
+          SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
+          FROM read_parquet('{doc_path}') WHERE {copied}
+        ) TO '{staged}' (FORMAT PARQUET)"""
+    )
+    par = spark.sparkContext.defaultParallelism
+    old_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    if split_at_gate:
+        split = os.path.getsize(staged) // max(par // 2, 2)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     names = ("dedup_ngram_jaccard", "containment_dedup", "bm25_retrieval")
     qs = all_queries()
-    before = {n: _rows(qs[n](spark, lake)) for n in names}
-    doc_path = os.path.join(lake, "documents.parquet")
-    built = _entries(spark, doc_path)
-    names_built = [n for n, _ in built]
-    assert names_built == ["bm25-dl", "bm25-tf", "ngram-hashed", "ngram-postings:auto"]
-
-    # append exact copies of five documents under new ids
-    staged = str(tmp_path / "documents.parquet")
-    duckdb.sql(
-        f"""COPY (
-          SELECT * FROM read_parquet('{doc_path}')
-          UNION ALL
-          SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-          FROM read_parquet('{doc_path}') WHERE doc_id < 5
-        ) TO '{staged}' (FORMAT PARQUET)"""
-    )
-    os.replace(staged, doc_path)
-    shutil.copytree(lake, fresh)
-
-    after = {n: _rows(qs[n](spark, lake)) for n in names}
-    for n in names:
-        assert after[n] == _rows(qs[n](spark, fresh)), n
-    assert len(before["dedup_ngram_jaccard"]) == 28
-    assert len(after["dedup_ngram_jaccard"]) == 35
-    # one entry per name: each rebuild replaced its predecessor and
-    # deleted the stale directory
-    assert [n for n, _ in _entries(spark, doc_path)] == names_built
-    assert not any(os.path.exists(d) for _, d in built)
-
-
-def test_table_growth_past_fan_out_gate_replaces_entries(spark, tmp_path):
-    """A rewrite that grows the table past the fan-out gate changes the
-    plan the builds read (``dedup._docs`` no longer spreads it), so
-    the rebuilt entries land under new keys: they still replace the
-    entries of the old table state, whose directories are deleted."""
-    from cdk_serverless_data_lake_sandbox_spark.catalog import lake_splits, under_split
-
-    lake, fresh = str(tmp_path / "lake"), str(tmp_path / "fresh")
-    shutil.copytree(SF_SMALL, lake)
-    doc_path = os.path.join(lake, "documents.parquet")
-    staged = str(tmp_path / "documents.parquet")
-    duckdb.sql(
-        f"""COPY (
-          SELECT * FROM read_parquet('{doc_path}')
-          UNION ALL
-          SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-          FROM read_parquet('{doc_path}')
-        ) TO '{staged}' (FORMAT PARQUET)"""
-    )
-    # every document copied once more; a split size the grown file
-    # fills to the gate and the old one does not
-    par = spark.sparkContext.defaultParallelism
-    split = os.path.getsize(staged) // max(par // 2, 2)
-    names = ("dedup_ngram_jaccard", "containment_dedup")
-    qs = all_queries()
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     try:
-        assert under_split(lake_splits(spark, lake, "documents"), par)
+        gated_before = under_split(lake_splits(spark, lake, "documents"), par)
         before = {n: _rows(qs[n](spark, lake)) for n in names}
         built = _entries(spark, doc_path)
         os.replace(staged, doc_path)
-        assert not under_split(lake_splits(spark, lake, "documents"), par)
+        gated_after = under_split(lake_splits(spark, lake, "documents"), par)
+        assert gated_before and gated_after != split_at_gate
         shutil.copytree(lake, fresh)
         after = {n: _rows(qs[n](spark, lake)) for n in names}
         for n in names:
             assert after[n] == _rows(qs[n](spark, fresh)), n
         rebuilt = _entries(spark, doc_path)
     finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_split)
+    names_built = [n for n, _ in built]
+    assert names_built == ["bm25-dl", "bm25-tf", "ngram-hashed", "ngram-postings:auto"]
+    if not split_at_gate:
+        assert len(before["dedup_ngram_jaccard"]) == 28
+        assert len(after["dedup_ngram_jaccard"]) == 35
     assert len(after["dedup_ngram_jaccard"]) > len(before["dedup_ngram_jaccard"])
-    assert [n for n, _ in rebuilt] == [n for n, _ in built]
+    # one entry per name: each rebuild replaced its predecessor and
+    # deleted the stale directory
+    assert [n for n, _ in rebuilt] == names_built
     assert not any(os.path.exists(d) for _, d in built)
 
 
