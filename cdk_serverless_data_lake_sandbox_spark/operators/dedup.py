@@ -219,7 +219,9 @@ def _resolve_hot(
     if not reuse:
         hot = materialize(hot_set())
         return None if hot_threshold == "auto" and hot.isEmpty() else hot
-    if hot_threshold == "auto" and remember(f"ngram-hot:{bound}", docs, lambda: hot_set().isEmpty()):
+    if hot_threshold == "auto" and remember(
+        f"ngram-hot:{bound}", docs, lambda: hot_set().isEmpty()
+    ):
         return None
     return scratch(f"ngram-hot:{bound}", docs, hot_set)
 
