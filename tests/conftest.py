@@ -38,7 +38,8 @@ def prop_examples(full_n: int) -> int:
 # the session's 16g default the default tier reached 15.2 GB resident
 # and was OOM-killed on a 16 GB host (at 6g it peaks at 7.4 GB). The
 # heaviest module, test_streaming.py, keeps at most 3.2 GB of heap
-# after a collection; at 4g the whole tier peaks at 5.3 GB resident.
+# after a collection; at 4g the default and the full tier (8 shuffle
+# partitions, full example counts) both peak at 5.3 GB resident.
 TEST_DRIVER_MEMORY = "4g"
 
 
