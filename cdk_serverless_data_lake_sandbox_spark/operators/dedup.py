@@ -163,11 +163,14 @@ def _hashed_shingles(docs: DataFrame, reuse: bool) -> DataFrame:
     scratch — the shared physical input of the Jaccard AND containment
     pair generators (``reuse``: one keyed entry per corpus, so it is
     tokenized+hashed once even across the two operators)."""
-    hashed = _shingled(docs).select(
-        "doc_id",
-        F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias("hs"),
-    ).select("doc_id", "hs", F.size("hs").alias("n_sh"))
-    return scratch("ngram-hashed", docs, lambda: hashed) if reuse else materialize(hashed)
+
+    def build() -> DataFrame:
+        return _shingled(docs).select(
+            "doc_id",
+            F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias("hs"),
+        ).select("doc_id", "hs", F.size("hs").alias("n_sh"))
+
+    return scratch("ngram-hashed", docs, build) if reuse else materialize(build())
 
 
 # Auto-mode posting-size bound: the in-lambda pair flatten allocates
@@ -227,12 +230,13 @@ def _resolve_hot(
 
 
 def _raw_postings(
-    docs: DataFrame, reuse: bool, hot_threshold
+    docs: DataFrame, hashed: DataFrame, reuse: bool, hot_threshold
 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """(postings_raw, inv, hot) — the inverted shingle index shared by
     the Jaccard and containment pair generators: shingle -> UNSORTED
     member structs (doc_id, n_sh, pos), hot shingles excluded,
-    single-member postings dropped.
+    single-member postings dropped. ``hashed`` is the caller's
+    :func:`_hashed_shingles` frame of ``docs``.
 
     With ``reuse`` it is keyed scratch per (corpus, hot bound): eight
     registered queries walk this index per sf_dir and each would
@@ -243,7 +247,6 @@ def _raw_postings(
     collection order never reaches a result. At 100 TB this scratch
     is the one posting shuffle a query would have paid anyway, written
     once per application instead of re-shuffled per query."""
-    hashed = _hashed_shingles(docs, reuse)
     inv = (
         hashed.select(
             "doc_id", "n_sh", F.posexplode_outer("hs").alias("pos", "shingle")
@@ -330,7 +333,7 @@ def ngram_jaccard_pairs(
     # keyed :func:`_raw_postings` intermediate; this consumer sorts
     # members and derives its tau-prefix flag IN-ROW, so pairs come
     # out with a_id < b_id exactly as before.
-    raw, inv, hot = _raw_postings(docs, reuse, hot_threshold)
+    raw, inv, hot = _raw_postings(docs, hashed, reuse, hot_threshold)
     postings = raw.select(
         F.expr(
             f"array_sort(transform(mr, m -> struct("
@@ -434,11 +437,14 @@ def _portable_hashed_shingles(docs: DataFrame, reuse: bool) -> DataFrame:
     hash VALUES (only set sizes), so the 64-bit JVM hash is the right
     perf/collision tradeoff there — whereas the minhash signature IS
     made of hash values, so its frame must be engine-portable."""
-    hashed = _shingled(docs).select(
-        "doc_id",
-        F.expr(f"transform(sh, s -> {_horner_spark('s')})").alias("hs"),
-    )
-    return scratch("ngram-phashed", docs, lambda: hashed) if reuse else materialize(hashed)
+
+    def build() -> DataFrame:
+        return _shingled(docs).select(
+            "doc_id",
+            F.expr(f"transform(sh, s -> {_horner_spark('s')})").alias("hs"),
+        )
+
+    return scratch("ngram-phashed", docs, build) if reuse else materialize(build())
 
 
 def _minhash_signatures(docs: DataFrame, reuse: bool = False) -> DataFrame:
@@ -789,11 +795,14 @@ def _hashed_side(df: DataFrame, side: str, reuse: bool = False) -> DataFrame:
     the verify join — two plan branches). ``reuse`` additionally
     shares the scratch across calls — the static-corpus side of a
     streaming gate is hashed once, not once per micro-batch."""
-    hs = _shingled(df).select(
-        F.col("doc_id").alias(f"{side}_id"),
-        F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias(f"hs_{side}"),
-    )
-    return scratch(f"hashed-side:{side}", df, lambda: hs) if reuse else materialize(hs)
+
+    def build() -> DataFrame:
+        return _shingled(df).select(
+            F.col("doc_id").alias(f"{side}_id"),
+            F.array_sort(F.expr("transform(sh, s -> xxhash64(s))")).alias(f"hs_{side}"),
+        )
+
+    return scratch(f"hashed-side:{side}", df, build) if reuse else materialize(build())
 
 
 def _side_inv(h: DataFrame, side: str, tau: float) -> DataFrame:
@@ -857,10 +866,14 @@ def dedup_incremental(
     set + hashed shingles) as keyed scratch, so repeated calls against
     the same corpus — a streaming gate's micro-batches — hash the
     corpus once and re-scan the scratch."""
+
+    def hash_corpus() -> DataFrame:
+        return corpus.select(F.md5("text").alias("_h")).distinct()
+
     # exact: content-hash anti join
-    corpus_hashes = corpus.select(F.md5("text").alias("_h")).distinct()
-    if reuse_corpus:
-        corpus_hashes = scratch("corpus-md5", corpus, lambda: corpus_hashes)
+    corpus_hashes = (
+        scratch("corpus-md5", corpus, hash_corpus) if reuse_corpus else hash_corpus()
+    )
     fresh = new_docs.join(
         corpus_hashes, F.md5(new_docs["text"]) == corpus_hashes["_h"], "left_anti"
     )
@@ -958,7 +971,7 @@ def containment_pairs(
     # only x's prefix can open a pair. Each posting keeps its
     # in-document position so the candidate filter can apply the
     # positional bound.
-    raw, inv, hot = _raw_postings(docs, reuse, hot_threshold)
+    raw, inv, hot = _raw_postings(docs, hashed, reuse, hot_threshold)
     postings = raw.select(
         F.expr(
             f"array_sort(transform(mr, m -> struct("
@@ -1224,34 +1237,37 @@ def cdc_chunk_dedup_frame(docs: DataFrame, mod: int = _CDC_MOD) -> DataFrame:
     are two map-side-combinable aggs keyed on the 16-byte chunk hash.
     No pairwise joins anywhere — dedup detection is hash-groupBy, the
     same shape as ``dedup_exact`` one level below documents."""
-    tok = docs.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "word"),
-    ).withColumn(
-        "bnd",
-        F.when(F.expr(_CDC_SPARK_H16) % mod == 0, 1).otherwise(0),
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ch = tok.withColumn("chunk_id", F.coalesce(F.sum("bnd").over(w), F.lit(0)))
-    chunk_text = F.expr(
-        "array_join(transform(array_sort(collect_list(struct(p, word))),"
-        " s -> s.word), ' ')"
-    )
-    chunks = (
-        ch.groupBy("doc_id", "source", "chunk_id")
-        .agg(chunk_text.alias("ctext"))
-        .select(
+
+    def build() -> DataFrame:
+        tok = docs.select(
+            "doc_id",
             "source",
-            F.md5("ctext").alias("chunk_hash"),
-            F.length("ctext").alias("chunk_bytes"),
+            F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "word"),
+        ).withColumn(
+            "bnd",
+            F.when(F.expr(_CDC_SPARK_H16) % mod == 0, 1).otherwise(0),
         )
-    )
-    chunks = scratch(f"cdc-chunks:{mod}", docs, lambda: chunks)
+        w = (
+            Window.partitionBy("doc_id")
+            .orderBy("p")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        ch = tok.withColumn("chunk_id", F.coalesce(F.sum("bnd").over(w), F.lit(0)))
+        chunk_text = F.expr(
+            "array_join(transform(array_sort(collect_list(struct(p, word))),"
+            " s -> s.word), ' ')"
+        )
+        return (
+            ch.groupBy("doc_id", "source", "chunk_id")
+            .agg(chunk_text.alias("ctext"))
+            .select(
+                "source",
+                F.md5("ctext").alias("chunk_hash"),
+                F.length("ctext").alias("chunk_bytes"),
+            )
+        )
+
+    chunks = scratch(f"cdc-chunks:{mod}", docs, build)
     hs = chunks.groupBy("chunk_hash").agg(
         F.count_distinct("source").alias("n_sources")
     )

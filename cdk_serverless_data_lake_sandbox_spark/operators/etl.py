@@ -25,7 +25,9 @@ from pyspark.sql import functions as F
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
+    recover_dir,
     round_rat,
+    swap_dir,
 )
 from cdk_serverless_data_lake_sandbox_spark.registry import register
 from cdk_serverless_data_lake_sandbox_spark.sources.crawler import CsvClassifier, crawl_delimited
@@ -266,15 +268,13 @@ def merge_upsert(
     rewritten table in via a staging directory. On a transactional
     table format this is a single MERGE statement; the
     keep-newest-per-key shuffle shape is identical. The streaming
-    twin is ``streaming.jobs.upsert_sink``."""
-    import shutil
-
+    twin is ``streaming.jobs.upsert_sink``. A target that exists but
+    cannot be read raises: only a missing target is a first load."""
     from pyspark.sql.window import Window
 
-    try:
-        current = spark.read.parquet(target_path)
-        merged = current.unionByName(updates)
-    except Exception:  # first load: target doesn't exist yet
+    if recover_dir(target_path):
+        merged = spark.read.parquet(target_path).unionByName(updates)
+    else:  # first load: target doesn't exist yet
         merged = updates
     w = Window.partitionBy(key_col).orderBy(F.desc(order_col))
     latest = (
@@ -283,8 +283,7 @@ def merge_upsert(
         .drop("_rn")
     )
     latest.write.mode("overwrite").parquet(target_path + "_staged")
-    shutil.rmtree(target_path, ignore_errors=True)
-    shutil.move(target_path + "_staged", target_path)
+    swap_dir(target_path, target_path + "_staged")
 
 
 # ---------------------------------------------------------------- D10
@@ -300,8 +299,7 @@ def delete_keys(
     same anti-join shape backs DELETE WHERE on a table format; on
     plain parquet the rewrite is the price of immutable files —
     partition your tables so the rewrite touches few partitions."""
-    import shutil
-
+    recover_dir(target_path)
     current = spark.read.parquet(target_path)
     before = current.count()
     kept = current.join(
@@ -310,8 +308,7 @@ def delete_keys(
         "left_anti",
     )
     kept.write.mode("overwrite").parquet(target_path + "_staged")
-    shutil.rmtree(target_path, ignore_errors=True)
-    shutil.move(target_path + "_staged", target_path)
+    swap_dir(target_path, target_path + "_staged")
     return before - spark.read.parquet(target_path).count()
 
 
@@ -391,31 +388,28 @@ def incremental_agg_refresh(
     are mergeable partials, so refresh cost is O(batch) + O(aggregate
     table), never O(full history). Revenue partials stay DECIMAL in
     storage so merge order can't change results; the swap is the
-    staged-atomic pattern shared with merge_upsert. Returns the new
-    aggregate state."""
-    import shutil
-
+    staged-atomic pattern shared with merge_upsert (an unreadable
+    stored aggregate raises). Returns the new aggregate state."""
     part = batch.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).alias("day")
     ).agg(
         F.count("*").alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("revenue"),
     )
-    try:
-        current = spark.read.parquet(target_path)
+    if recover_dir(target_path):
         merged = (
-            current.unionByName(part)
+            spark.read.parquet(target_path)
+            .unionByName(part)
             .groupBy("day")
             .agg(
                 F.sum("n_orders").alias("n_orders"),
                 F.sum("revenue").cast("decimal(18,2)").alias("revenue"),
             )
         )
-    except Exception:  # first refresh: no aggregate yet
+    else:  # first refresh: no aggregate yet
         merged = part
     merged.write.mode("overwrite").parquet(target_path + "_staged")
-    shutil.rmtree(target_path, ignore_errors=True)
-    shutil.move(target_path + "_staged", target_path)
+    swap_dir(target_path, target_path + "_staged")
     return spark.read.parquet(target_path)
 
 
@@ -1148,8 +1142,6 @@ def cdc_envelope_apply(
     :func:`merge_upsert`; on a transactional table format the same
     plan is MERGE WHEN MATCHED [AND op='d' THEN DELETE]. Returns
     {inserts_updates, deletes, rows_after}."""
-    import shutil
-
     parsed = envelopes.select(
         F.from_json(
             F.col("value"),
@@ -1211,7 +1203,7 @@ def cdc_envelope_apply(
     )
     n_up = upserts.count()
     n_del = delete_keys_df.count()
-    if os.path.isdir(target_path):
+    if recover_dir(target_path):
         # A failing read of an EXISTING target must raise, never be
         # mistaken for first-load: the except-and-overwrite form would
         # replace the whole table with just this batch's upserts.
@@ -1221,8 +1213,7 @@ def cdc_envelope_apply(
     else:  # first batch: target does not exist yet
         merged = upserts
     merged.write.mode("overwrite").parquet(target_path + "_staged")
-    shutil.rmtree(target_path, ignore_errors=True)
-    shutil.move(target_path + "_staged", target_path)
+    swap_dir(target_path, target_path + "_staged")
     return {
         "inserts_updates": n_up,
         "deletes": n_del,

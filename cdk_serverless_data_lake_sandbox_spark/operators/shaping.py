@@ -189,16 +189,19 @@ def dup_span_profile(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     registered oracle groups raw span strings; this side groups
     xxhash64 of the span (shuffling 8 bytes instead of ~40),
     identical modulo a ~2^-65-per-pair collision probability."""
-    spans = F.expr(
-        f"""transform(sequence(1, size(_w) - {k - 1}),
-              i -> xxhash64(array_join(slice(_w, i, {k}), ' ')))"""
-    )
-    pos = (
-        docs.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w"))
-        .where(F.size("_w") >= k)
-        .select("doc_id", F.explode_outer(spans).alias("span_h"))
-    )
-    pos = scratch(f"span-hashes:{k}", docs, lambda: pos)
+
+    def build() -> DataFrame:
+        spans = F.expr(
+            f"""transform(sequence(1, size(_w) - {k - 1}),
+                  i -> xxhash64(array_join(slice(_w, i, {k}), ' ')))"""
+        )
+        return (
+            docs.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w"))
+            .where(F.size("_w") >= k)
+            .select("doc_id", F.explode_outer(spans).alias("span_h"))
+        )
+
+    pos = scratch(f"span-hashes:{k}", docs, build)
     cnt = pos.groupBy("span_h").agg(F.count_distinct("doc_id").alias("nd"))
     n_dup = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0)).cast("bigint")
     return (
@@ -424,19 +427,22 @@ def segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The first-occurrence rule makes the result identical under any
     partitioning."""
     d = _docs(spark, sf_dir)
-    segs_expr = F.expr(
-        f"""transform(sequence(0, size(_w) - 1, {_SEG_SIZE}),
-              s -> struct(CAST(s div {_SEG_SIZE} AS BIGINT) AS seg_idx,
-                          array_join(slice(_w, s + 1, {_SEG_SIZE}), ' ') AS seg))"""
-    )
-    segs = (
-        d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w"))
-        .select("doc_id", F.explode_outer(segs_expr).alias("_s"))
-        .select("doc_id", F.col("_s.seg_idx").alias("seg_idx"), F.col("_s.seg").alias("seg"))
-    )
+
+    def build() -> DataFrame:
+        segs_expr = F.expr(
+            f"""transform(sequence(0, size(_w) - 1, {_SEG_SIZE}),
+                  s -> struct(CAST(s div {_SEG_SIZE} AS BIGINT) AS seg_idx,
+                              array_join(slice(_w, s + 1, {_SEG_SIZE}), ' ') AS seg))"""
+        )
+        return (
+            d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w"))
+            .select("doc_id", F.explode_outer(segs_expr).alias("_s"))
+            .select("doc_id", F.col("_s.seg_idx").alias("seg_idx"), F.col("_s.seg").alias("seg"))
+        )
+
     # Two consumers (winner agg + mark join): materialize so the
     # tokenize+slice pass runs once, not once per branch (SURVEY §6).
-    segs = scratch(f"segments:{_SEG_SIZE}", d, lambda: segs)
+    segs = scratch(f"segments:{_SEG_SIZE}", d, build)
     winners = segs.groupBy("seg").agg(
         F.min(F.struct("doc_id", "seg_idx")).alias("_w")
     )
@@ -781,21 +787,24 @@ def strip_dup_spans_frame(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     base = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("_w")
     )
-    spans = F.expr(
-        f"""transform(sequence(1, size(_w) - {k - 1}),
-              i -> struct(i - 1 AS p0,
-                          xxhash64(array_join(slice(_w, i, {k}), ' ')) AS span_h))"""
-    )
-    pos = (
-        base.where(F.size("_w") >= k)
-        .select("doc_id", F.explode(spans).alias("s"))
-        .select("doc_id", F.col("s.p0").alias("p0"), F.col("s.span_h").alias("span_h"))
-    )
+
+    def build() -> DataFrame:
+        spans = F.expr(
+            f"""transform(sequence(1, size(_w) - {k - 1}),
+                  i -> struct(i - 1 AS p0,
+                              xxhash64(array_join(slice(_w, i, {k}), ' ')) AS span_h))"""
+        )
+        return (
+            base.where(F.size("_w") >= k)
+            .select("doc_id", F.explode(spans).alias("s"))
+            .select("doc_id", F.col("s.p0").alias("p0"), F.col("s.span_h").alias("span_h"))
+        )
+
     # keyed scratch, not pin: the extraction is word-level (cheap) and
     # the keyed scratch is shared across CALLS in one application —
     # an r11 A/B of pin-per-call here measured 1.14x slower than the
     # cached scratch re-read.
-    pos = scratch(f"span-starts:{k}", docs, lambda: pos)
+    pos = scratch(f"span-starts:{k}", docs, build)
     own = (
         pos.groupBy("span_h")
         .agg(

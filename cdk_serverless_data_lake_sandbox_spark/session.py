@@ -15,6 +15,21 @@ from pyspark.sql import SparkSession
 
 from cdk_serverless_data_lake_sandbox_spark.compat import ensure_protobuf
 
+# Generated classes Spark keeps compiled (spark.sql.codegen.cache.maxEntries,
+# default 100). A query mix whose classes do not fit evicts each one
+# before its next use, so every warm round recompiles. Working sets
+# measured with CodegenMetrics (Spark 4.1, 4 cores, perfbench sf0.01
+# data): the six-query curation mix compiles ~215-230 classes on its
+# first round and the 19-query analyst mix ~225-230. At 100 entries each
+# later curation round recompiled 117-128 classes and each analyst pass
+# 223-224; at 1,000 they compiled 0-20 and 0-6. One pass over all 279
+# registered queries at sf0.001 compiles 3,746 distinct classes; holding
+# them all (an unbounded cache) cost +178 MB of live heap and +28 MB of
+# metaspace over the default, ~57 KB a class, so 1,000 entries bound
+# the cache near 50 MB. Spark reads the value once, when the code
+# generator first initializes, so it must be set on the builder.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "cdk-serverless-data-lake-sandbox-spark",
@@ -77,6 +92,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     for k, v in (extra_conf or {}).items():

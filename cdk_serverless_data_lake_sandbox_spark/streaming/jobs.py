@@ -86,15 +86,20 @@ def upsert_sink(stream: DataFrame, target_path: str, key_col: str = "event_id"):
     Parquet has no transactional merge, so the batch rewrite pattern
     is: read current + union batch -> window keep-latest -> overwrite.
     On a real lakehouse table format this maps 1:1 onto MERGE INTO.
+    A target that exists but cannot be read fails the batch.
     Returns the StreamingQuery handle (caller awaits)."""
     from pyspark.sql.window import Window
 
+    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
+        recover_dir,
+        swap_dir,
+    )
+
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        try:
-            current = spark.read.parquet(target_path)
-            merged = current.unionByName(batch)
-        except Exception:  # first batch: target doesn't exist yet
+        if recover_dir(target_path):
+            merged = spark.read.parquet(target_path).unionByName(batch)
+        else:  # first batch: target doesn't exist yet
             merged = batch
         w = Window.partitionBy(key_col).orderBy(F.desc("ts"))
         latest = (
@@ -104,10 +109,7 @@ def upsert_sink(stream: DataFrame, target_path: str, key_col: str = "event_id"):
         )
         # checkpointed rewrite: land in a staging dir, swap atomically
         latest.write.mode("overwrite").parquet(target_path + "_staged")
-        import shutil
-
-        shutil.rmtree(target_path, ignore_errors=True)
-        shutil.move(target_path + "_staged", target_path)
+        swap_dir(target_path, target_path + "_staged")
 
     return stream.writeStream.foreachBatch(merge_batch).trigger(availableNow=True).start()
 
@@ -316,14 +318,17 @@ def rate_limited_sink(
     executes as TakeOrderedAndProject (no global sort); the spill
     rewrite is the same staged atomic swap the batch MERGE uses.
     Drain the tail by triggering empty batches until the spill is
-    empty."""
-    import shutil
+    empty. A spill that exists but cannot be read fails the batch."""
+    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
+        recover_dir,
+        swap_dir,
+    )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        try:
+        if recover_dir(spill_path):
             pending = spark.read.parquet(spill_path).unionByName(batch)
-        except Exception:  # first batch: no spill yet
+        else:  # first batch: no spill yet
             pending = batch
         admitted = pending.orderBy(order_col).limit(max_rows_per_batch)
         remainder = pending.join(
@@ -331,8 +336,7 @@ def rate_limited_sink(
         )
         admitted.write.mode("append").parquet(target_path)
         remainder.write.mode("overwrite").parquet(spill_path + "_staged")
-        shutil.rmtree(spill_path, ignore_errors=True)
-        shutil.move(spill_path + "_staged", spill_path)
+        swap_dir(spill_path, spill_path + "_staged")
 
     return (
         stream.writeStream.outputMode("append")

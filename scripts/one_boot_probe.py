@@ -6,6 +6,14 @@ deltas on dedup_exact/dedup_minhash_lsh) cancels.
 Usage: python scripts/one_boot_probe.py <rev> [query ...]
 Creates a worktree for <rev>, runs the queries there and at HEAD
 (separate processes, interleaved A/B/A/B), prints one JSON line.
+
+Each process runs one untimed pass over the queries, then three timed
+round-robin passes, and keeps each query's best of three. The queries
+are interleaved, not repeated back to back, so the timed calls see
+whatever the other queries evict from shared caches (keyed scratch,
+the generated-code cache). ``codegen_compiles`` counts the classes
+Spark compiled during a query's timed calls (CodegenMetrics); a warm
+query should compile none.
 """
 
 from __future__ import annotations
@@ -25,23 +33,31 @@ from cdk_serverless_data_lake_sandbox_spark.session import get_spark
 names = sys.argv[2].split(",")
 spark = get_spark(app_name="one-boot-probe")
 spark.sparkContext.setLogLevel("ERROR")
+compilation = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 qs = all_queries()
-out = {}
-for name in names:
+
+
+def run(name):
     qs[name](spark, "/root/testdata/sf0.1").write.format("noop").mode("overwrite").save()
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        qs[name](spark, "/root/testdata/sf0.1").write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    out[name] = round(best, 3)
+
+
+for name in names:
+    run(name)
+times = {name: [] for name in names}
+compiles = dict.fromkeys(names, 0)
+for _ in range(3):
+    for name in names:
+        c0, t0 = compilation.getCount(), time.perf_counter()
+        run(name)
+        times[name].append(time.perf_counter() - t0)
+        compiles[name] += compilation.getCount() - c0
+out = {n: {"s": round(min(times[n]), 3), "codegen_compiles": compiles[n]} for n in names}
 print("PROBE_RESULT " + json.dumps(out))
 spark.stop()
 """
 
 
-def run_probe(tree: str, names: list[str]) -> dict[str, float]:
+def run_probe(tree: str, names: list[str]) -> dict[str, dict]:
     env = dict(os.environ)
     proc = subprocess.run(
         [sys.executable, "-c", PROBE, tree, ",".join(names)],
@@ -71,8 +87,12 @@ def main() -> None:
         "rev_old": rev,
         "queries": {
             n: {
-                "old": min(r[n] for r in rounds["old"]),
-                "new": min(r[n] for r in rounds["new"]),
+                "old": min(r[n]["s"] for r in rounds["old"]),
+                "new": min(r[n]["s"] for r in rounds["new"]),
+                "codegen_compiles": {
+                    side: [r[n]["codegen_compiles"] for r in rs]
+                    for side, rs in rounds.items()
+                },
             }
             for n in names
         },

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -598,6 +599,27 @@ def test_merge_upsert_keeps_newest(spark, tmp_path):
     # idempotent re-apply
     merge_upsert(spark, target, v2, "id", "version")
     assert spark.read.parquet(target).count() == 4
+
+
+def test_merge_upsert_refuses_unreadable_target(spark, tmp_path):
+    """Only a missing target is a first load: a damaged one must raise,
+    not be replaced by the update batch alone."""
+    from cdk_serverless_data_lake_sandbox_spark.operators.etl import merge_upsert
+
+    target = str(tmp_path / "upsert_target")
+    spark.range(1000).selectExpr("id", "1L AS version").coalesce(1).write.parquet(target)
+    (part,) = [f for f in os.listdir(target) if f.endswith(".parquet")]
+    path = os.path.join(target, part)
+    with open(path, "rb") as fh:
+        intact = fh.read()
+    with open(path, "wb") as fh:
+        fh.write(intact[: len(intact) // 2])
+    update = spark.createDataFrame([(1, 2)], "id long, version long")
+    with pytest.raises(Py4JJavaError):
+        merge_upsert(spark, target, update, "id", "version")
+    with open(path, "wb") as fh:
+        fh.write(intact)
+    assert spark.read.parquet(target).count() == 1000
 
 
 # ---------------------------------------------------------------- D9 (dynamic partition overwrite)
