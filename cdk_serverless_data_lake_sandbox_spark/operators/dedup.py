@@ -1233,10 +1233,13 @@ def cdc_chunk_dedup_frame(docs: DataFrame, mod: int = _CDC_MOD) -> DataFrame:
 
     Scale: tokenize is one scan; the boundary prefix-count is a
     per-document window (bounded by doc length, embarrassingly
-    parallel); chunk assembly groups by (doc, chunk) and the stats
-    are two map-side-combinable aggs keyed on the 16-byte chunk hash.
-    No pairwise joins anywhere — dedup detection is hash-groupBy, the
-    same shape as ``dedup_exact`` one level below documents."""
+    parallel); chunk assembly groups by (doc, chunk), written once as
+    keyed scratch. A query aggregates the chunks per (source,
+    chunk_hash), map-side combinable, and counts a hash's sources as
+    the rows of its ``chunk_hash`` window over that aggregate, so
+    there is no second aggregate branch and no join back. No pairwise
+    joins anywhere — dedup detection is hash-groupBy, the same shape
+    as ``dedup_exact`` one level below documents."""
 
     def build() -> DataFrame:
         tok = docs.select(
@@ -1267,14 +1270,15 @@ def cdc_chunk_dedup_frame(docs: DataFrame, mod: int = _CDC_MOD) -> DataFrame:
             )
         )
 
-    chunks = scratch(f"cdc-chunks:{mod}", docs, build)
-    hs = chunks.groupBy("chunk_hash").agg(
-        F.count_distinct("source").alias("n_sources")
-    )
+    chunks = scratch(f"cdc-chunks:{mod}", docs, build, fan_out=False)
+    # one row per (source, chunk_hash), so the rows sharing a hash
+    # count its distinct sources
     per = (
         chunks.groupBy("source", "chunk_hash")
         .agg(F.count("*").alias("cnt"), F.min("chunk_bytes").alias("chunk_bytes"))
-        .join(hs, "chunk_hash")
+        .withColumn(
+            "n_sources", F.count("*").over(Window.partitionBy("chunk_hash"))
+        )
     )
     return per.groupBy("source").agg(
         F.sum("cnt").cast("bigint").alias("n_chunks"),

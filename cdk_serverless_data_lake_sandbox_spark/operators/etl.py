@@ -961,6 +961,7 @@ def dv_delete(spark: SparkSession, table_path: str, predicate: str) -> dict:
     so non-DV-aware readers see the pre-delete snapshot — exactly the
     contract table formats document. Returns {rows_deleted(new),
     files_touched}."""
+    recover_dir(table_path)
     base = spark.read.parquet(table_path).select(
         "*",
         F.col("_metadata.file_path").alias("_dv_file"),
@@ -1005,6 +1006,7 @@ def dv_read(spark: SparkSession, table_path: str) -> DataFrame:
     pays until compaction folds the deletes in. The sidecar is
     (file, pos) pairs, tiny next to the data, so the join broadcasts;
     with no sidecar the plan is the plain scan."""
+    recover_dir(table_path)
     base = spark.read.parquet(table_path).select(
         "*",
         F.col("_metadata.file_path").alias("_dv_file"),
@@ -1036,10 +1038,11 @@ def dv_compact(spark: SparkSession, table_path: str) -> dict:
     """Fold accumulated deletion vectors into the data (the
     copy-on-write step deferred until it is worth paying): rewrite
     ONLY the files that carry deletions, leave untouched files'
-    bytes alone, drop the sidecar, and swap atomically via a staging
-    directory. After compaction a plain reader and :func:`dv_read`
-    agree again. Returns {files_rewritten, files_kept,
-    rows_dropped}.
+    bytes alone, drop the sidecar, and swap the staging directory in
+    with :func:`swap_dir`, so a crash at any point leaves the old or
+    the new table for :func:`dv_read` to recover. After compaction a
+    plain reader and :func:`dv_read` agree again. Returns
+    {files_rewritten, files_kept, rows_dropped}.
 
     FLAT tables only: a table whose part files live in
     subdirectories (Hive partitions, copied-in layouts) REFUSES
@@ -1101,19 +1104,19 @@ def dv_compact(spark: SparkSession, table_path: str) -> dict:
     # `touched` holds parent/basename keys (_dv_fname), so the
     # local-file match is URI-normalization-proof: no dirty file is
     # silently kept (which would duplicate its rewritten rows after
-    # the swap).
+    # the swap). Kept files are linked (or copied) into the staging
+    # directory: the live table stays whole until swap_dir replaces it.
     kept = 0
     for f in _glob.glob(os.path.join(table_path, "*.parquet")):
         fkey = os.path.basename(os.path.dirname(f)) + "/" + os.path.basename(f)
-        if fkey in touched:
-            os.remove(f)
-        else:
+        if fkey not in touched:
             kept += 1
-            shutil.move(
-                f, os.path.join(staged, "kept-" + os.path.basename(f))
-            )
-    shutil.rmtree(table_path)
-    shutil.move(staged, table_path)
+            dst = os.path.join(staged, "kept-" + os.path.basename(f))
+            try:
+                os.link(f, dst)
+            except OSError:
+                shutil.copy2(f, dst)
+    swap_dir(table_path, staged)
     return {
         "files_rewritten": len(touched),
         "files_kept": kept,

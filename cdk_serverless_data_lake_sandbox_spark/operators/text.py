@@ -823,13 +823,12 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     The retrieval primitive a data-curation stack uses to pull
     topic-relevant subsets out of a web-scale corpus.
 
-    Scale: the token explode is filtered to the query vocabulary
-    BEFORE any shuffle (the filter sits on the Generate output, so
-    off-vocabulary tokens never leave the scan stage); term stats
-    (df) and corpus stats (avgdl, N) are term-count- and one-row-
-    sized broadcasts; the only linear shuffles are the (doc, term)
-    tf aggregation and the doc-length join on doc_id. The final
-    per-query top-k window partitions by query_id — parallel across
+    Scale: df, avgdl and N are index-time statistics. They live in
+    the keyed BM25 index next to each (doc, term) row's tf and dl
+    (:func:`_bm25_index`), so a query scans one vocabulary-bounded
+    table, joins it to the broadcast query terms and sums per (query,
+    doc): one shuffle for that aggregate, one for the per-query top-k
+    window. The window partitions by query_id, parallel across
     queries, and each query's candidate set is bounded by the
     vocabulary-filtered postings, not the corpus."""
     scored = _bm25_scored(spark, sf_dir)
@@ -850,27 +849,6 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_dl(d: DataFrame) -> DataFrame:
-    """(doc_id, dl) document-length table of the documents frame ``d``,
-    keyed scratch per version of ``d``. It feeds TWO branches of the
-    BM25 plan (the per-doc norm join AND the avgdl/n_docs aggregate),
-    each of which otherwise re-tokenizes the whole corpus
-    (`size(split(text))` under two separate document scans in the r12
-    before-plan) — and the
-    hybrid RRF leg replays both. 16 bytes/doc in scratch; consumers
-    are a broadcast build and a one-row aggregate, so the small-file
-    re-parallelize is skipped (guide §1.2 don't-recompute, §2.3
-    shuffle proxies not payloads)."""
-    return scratch(
-        "bm25-dl",
-        d,
-        lambda: d.select(
-            "doc_id", F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("dl")
-        ),
-        fan_out=False,
-    )
-
-
 def _bm25_query_table(spark: SparkSession) -> DataFrame:
     """The fixed (query_id, token) set as a VALUES LocalRelation —
     ``createDataFrame`` builds a Python RDD + applySchemaToPythonRDD
@@ -887,32 +865,44 @@ def _bm25_query_table(spark: SparkSession) -> DataFrame:
     )
 
 
+def _bm25_index(d: DataFrame) -> DataFrame:
+    """The BM25 index of the documents frame ``d``, keyed scratch per
+    version of ``d``: one row per (doc_id, token) of the query
+    vocabulary with ``tf, dl, df, avgdl, n_docs`` — the statistics a
+    Lucene-style engine stores at index time, so a query scans one
+    table instead of re-deriving df and the corpus aggregate from it.
+    The token explode is filtered to the query vocabulary on the
+    Generate output, so off-vocabulary tokens never leave the scan
+    stage. Rows are at most docs x |query vocab|; the only consumer
+    is a join to a broadcast query table feeding a hash aggregate,
+    which shuffles anyway, so the scan is not fanned out."""
+
+    def build() -> DataFrame:
+        ws = d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("ws"))
+        tf = (
+            ws.select("doc_id", F.explode_outer("ws").alias("token"))
+            .where(F.col("token").isin(*_BM25_ALL_TERMS))
+            .groupBy("doc_id", "token")
+            .agg(F.count("*").alias("tf"))
+        )
+        df = tf.groupBy("token").agg(F.count("*").alias("df"))
+        dl = ws.select("doc_id", F.size("ws").alias("dl"))
+        stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
+        return (
+            tf.join(F.broadcast(df), "token")
+            .join(dl, "doc_id")
+            .crossJoin(F.broadcast(stats))
+        )
+
+    return scratch("bm25-index", d, build, fan_out=False)
+
+
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, doc_id, score) BM25 frame shared by the lexical
-    retrieval entry and the hybrid RRF fusion."""
+    retrieval entry and the hybrid RRF fusion: the index
+    (:func:`_bm25_index`) joined to the broadcast query table and
+    summed per (query, doc)."""
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    toks = d.select("doc_id", F.explode_outer(words).alias("token")).where(
-        F.col("token").isin(*_BM25_ALL_TERMS)
-    )
-    # tf feeds two branches (the score join AND the df aggregate);
-    # without materialization Spark re-derives it per branch, i.e.
-    # tokenizes the corpus twice. The frame is vocabulary-bounded
-    # (docs x |query vocab| rows at most), so the scratch write is
-    # tiny and the second tokenize pass disappears. fan_out=False:
-    # both consumers are broadcast-side/tiny aggregates (r12).
-    tf = scratch(
-        "bm25-tf",
-        d,
-        lambda: toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf")),
-        fan_out=False,
-    )
-    df = tf.groupBy("token").agg(F.count("*").alias("df"))
-    dl = _bm25_dl(d)
-    stats = dl.agg(
-        F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs")
-    )
-    qt = _bm25_query_table(spark)
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -921,10 +911,8 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
     )
     return (
-        tf.join(F.broadcast(qt), "token")
-        .join(F.broadcast(df), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        _bm25_index(d)
+        .join(F.broadcast(_bm25_query_table(spark)), "token")
         .groupBy("query_id", "doc_id")
         .agg(F.sum(idf * norm).alias("score"))
     )
@@ -2281,15 +2269,18 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     |embeddings|, the contract the synthetic tables support at every
     SF); query q's vector is embedding vec_id = q.
 
-    Scale: the BM25 leg is the vocabulary-filtered plan
-    ``bm25_retrieval`` documents (shared scored frame). The semantic
+    Scale: the BM25 leg is the index scan ``bm25_retrieval``
+    documents (shared scored frame). The semantic
     leg here is the exact cosine scan — |queries| is 3, so the
     cross-join side is a broadcast of 3 rows with hoisted norms, one
     corpus pass, per-query top-k windows partitioned by query_id; a
     production run swaps that leg for the IVF/LSH index probe
     (``ivf_index_query``) without touching the fusion, which only
-    consumes (query_id, doc_id, rank) lists. The fusion itself is a
-    full-outer join of two depth-bounded rank lists — tiny."""
+    consumes (query_id, doc_id, rank) lists. The fusion unions the
+    two depth-bounded rank lists and aggregates per (query, doc): both
+    legs leave their windows hash-partitioned on query_id and the
+    union keeps that partitioning, so the fusion and its top-k window
+    add no shuffle."""
     from pyspark.sql.window import Window
 
     from cdk_serverless_data_lake_sandbox_spark.operators.similarity import (
@@ -2333,8 +2324,15 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rrf = F.coalesce(
         F.lit(1.0) / (F.lit(_RRF_K) + F.col("bm25_rank")), F.lit(0.0)
     ) + F.coalesce(F.lit(1.0) / (F.lit(_RRF_K) + F.col("ann_rank")), F.lit(0.0))
-    fused = bmk.join(annk, ["query_id", "doc_id"], "full_outer").select(
-        "query_id", "doc_id", rrf.alias("rrf"), "bm25_rank", "ann_rank"
+    # the full outer join of the two rank lists, as a union and an
+    # aggregate that need no shuffle (see Scale above)
+    no_rank = F.lit(None).cast("int")
+    fused = (
+        bmk.withColumn("ann_rank", no_rank)
+        .unionByName(annk.withColumn("bm25_rank", no_rank))
+        .groupBy("query_id", "doc_id")
+        .agg(F.max("bm25_rank").alias("bm25_rank"), F.max("ann_rank").alias("ann_rank"))
+        .select("query_id", "doc_id", rrf.alias("rrf"), "bm25_rank", "ann_rank")
     )
     fw = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), "doc_id")
     return (

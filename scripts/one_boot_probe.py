@@ -13,7 +13,9 @@ are interleaved, not repeated back to back, so the timed calls see
 whatever the other queries evict from shared caches (keyed scratch,
 the generated-code cache). ``codegen_compiles`` counts the classes
 Spark compiled during a query's timed calls (CodegenMetrics); a warm
-query should compile none.
+query should compile none. ``jobs`` counts the Spark jobs of each
+timed call, tagged with its own job group; every AQE query stage and
+broadcast is one job, so this is the fixed driver cost of a warm call.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ names = sys.argv[2].split(",")
 spark = get_spark(app_name="one-boot-probe")
 spark.sparkContext.setLogLevel("ERROR")
 compilation = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+tracker = spark.sparkContext.statusTracker()
 qs = all_queries()
 
 
@@ -45,13 +48,20 @@ for name in names:
     run(name)
 times = {name: [] for name in names}
 compiles = dict.fromkeys(names, 0)
-for _ in range(3):
+jobs = {name: [] for name in names}
+for k in range(3):
     for name in names:
+        group = f"{name}#{k}"
+        spark.sparkContext.setJobGroup(group, name)
         c0, t0 = compilation.getCount(), time.perf_counter()
         run(name)
         times[name].append(time.perf_counter() - t0)
         compiles[name] += compilation.getCount() - c0
-out = {n: {"s": round(min(times[n]), 3), "codegen_compiles": compiles[n]} for n in names}
+        jobs[name].append(len(tracker.getJobIdsForGroup(group)))
+out = {
+    n: {"s": round(min(times[n]), 3), "codegen_compiles": compiles[n], "jobs": jobs[n]}
+    for n in names
+}
 print("PROBE_RESULT " + json.dumps(out))
 spark.stop()
 """
@@ -92,6 +102,9 @@ def main() -> None:
                 "codegen_compiles": {
                     side: [r[n]["codegen_compiles"] for r in rs]
                     for side, rs in rounds.items()
+                },
+                "jobs": {
+                    side: [r[n]["jobs"] for r in rs] for side, rs in rounds.items()
                 },
             }
             for n in names

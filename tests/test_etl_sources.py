@@ -16,6 +16,9 @@ from cdk_serverless_data_lake_sandbox_spark.operators.etl import (
     IncrementalIngest,
     apply_mapping,
     compact,
+    dv_compact,
+    dv_delete,
+    dv_read,
     tsv_to_parquet_job,
 )
 from cdk_serverless_data_lake_sandbox_spark.plans import partition_filters, pushed_filters
@@ -448,6 +451,39 @@ def test_compaction(spark, tmp_path):
     n_after = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert n_after == 1  # tiny data -> single target-size file
     assert spark.read.parquet(out).count() == 25
+
+
+def test_dv_compact_crash_before_swap_keeps_table(spark, tmp_path, monkeypatch):
+    """A compaction that dies as its rewrite is moved into place must
+    leave a table that still reads its pre-compaction rows: the live
+    directory is untouched until the swap, and a reader restores the
+    aside copy an interrupted swap left behind. A retry compacts it."""
+    import shutil
+
+    tbl = str(tmp_path / "t")
+    # four range-partitioned files; the delete dirties only the first
+    spark.range(0, 40, numPartitions=4).write.parquet(tbl)
+    assert dv_delete(spark, tbl, "id < 3")["rows_deleted"] == 3
+    want = sorted(r.id for r in dv_read(spark, tbl).collect())
+    assert want == list(range(3, 40))
+
+    real_move = shutil.move
+
+    def crash_moving_into_table(src, dst, *a, **k):
+        if os.path.abspath(dst) == tbl:
+            raise OSError("injected crash")
+        return real_move(src, dst, *a, **k)
+
+    monkeypatch.setattr(shutil, "move", crash_moving_into_table)
+    with pytest.raises(OSError, match="injected crash"):
+        dv_compact(spark, tbl)
+    monkeypatch.undo()
+    assert sorted(r.id for r in dv_read(spark, tbl).collect()) == want
+
+    assert dv_compact(spark, tbl) == {
+        "files_rewritten": 1, "files_kept": 3, "rows_dropped": 3,
+    }
+    assert sorted(r.id for r in spark.read.parquet(tbl).collect()) == want
 
 
 # ---------------------------------------------------------------- D2

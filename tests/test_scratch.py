@@ -64,7 +64,7 @@ def test_jaccard_containment_share_keyed_postings(spark):
 def test_bm25_scratch_hit_path_identical(spark):
     q = all_queries()["bm25_retrieval"]
     first = _rows(q(spark, SF_SMALL))
-    second = _rows(q(spark, SF_SMALL))  # tf + dl scratch hits
+    second = _rows(q(spark, SF_SMALL))  # bm25-index scratch hit
     assert first == second
     assert len(first) > 0
 
@@ -137,7 +137,7 @@ def test_table_change_mid_application_rebuilds(spark, tmp_path, copied, split_at
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_split)
     names_built = [n for n, _ in built]
-    assert names_built == ["bm25-dl", "bm25-tf", "ngram-hashed", "ngram-postings:auto"]
+    assert names_built == ["bm25-index", "ngram-hashed", "ngram-postings:auto"]
     if not split_at_gate:
         assert len(before["dedup_ngram_jaccard"]) == 28
         assert len(after["dedup_ngram_jaccard"]) == 35

@@ -1,5 +1,6 @@
-"""Session defaults that only show up as speed: the generated-code cache
-must hold a query mix's working set, so a warm round compiles nothing."""
+"""Costs that only show up as speed: the generated-code cache must hold
+a query mix's working set, so a warm round compiles nothing, and a
+warm round launches no more Spark jobs than its plans need."""
 
 from __future__ import annotations
 
@@ -8,26 +9,52 @@ from tests.conftest import SF_SMALL
 
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
-# With the session's cache a warm curation round at sf0.001 compiled
-# 0-12 classes (a few plans change shape at run time); with Spark's
-# default of 100 entries it recompiled 114-131, because the mix needs
-# ~215 classes.
-WARM_ROUND_MAX_COMPILES = 30
+# With the session's cache a warm curation round compiled 0-8 classes
+# at sf0.001 and sf0.01 (12 rounds); with Spark's default of 100
+# entries it recompiled 114-131, because the mix needs ~215 classes.
+# What still compiles is the jaccard family's last join, whose build
+# side AQE picks at run time: a flip is a new plan, 2-4 classes for
+# each of the two queries. The bound adds one more flip of margin.
+WARM_ROUND_MAX_COMPILES = 12
+
+# A warm curation round at sf0.001 and sf0.01 launched 25-27 jobs (every
+# AQE query stage and broadcast is a job); it launched 42 when BM25
+# re-derived df and the corpus stats per call and CDC counted sources
+# in a second aggregate branch. Each of the two jaccard-family queries
+# adds one broadcast job when AQE flips its build side at run time, so
+# the worst case is 27; the bound adds one job of margin.
+WARM_ROUND_MAX_JOBS = 28
+
+
+def _curation_round(spark, tag: str) -> tuple[int, dict[str, int]]:
+    """Run the curation mix once at sf0.001: the classes Spark compiled,
+    and the jobs of each query, counted by its job group."""
+    sc = spark.sparkContext
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    qs = all_queries()
+    before = compiled.getCount()
+    jobs = {}
+    try:
+        for name in CURATION_MIX:
+            group = f"{tag}-{name}"
+            sc.setJobGroup(group, name)
+            qs[name](spark, SF_SMALL).write.format("noop").mode("overwrite").save()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    return compiled.getCount() - before, jobs
 
 
 def test_warm_curation_round_hits_codegen_cache(spark):
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    qs = all_queries()
-
-    def round_compiles() -> int:
-        before = metrics.METRIC_COMPILATION_TIME().getCount()
-        for name in CURATION_MIX:
-            qs[name](spark, SF_SMALL).write.format("noop").mode("overwrite").save()
-        return metrics.METRIC_COMPILATION_TIME().getCount() - before
-
-    first = round_compiles()  # builds keyed scratch, compiles the mix
-    second = round_compiles()
+    first, _ = _curation_round(spark, "compiles-0")  # builds keyed scratch, compiles the mix
+    second, _ = _curation_round(spark, "compiles-1")
     assert second <= WARM_ROUND_MAX_COMPILES, (
         f"warm curation round compiled {second} classes (first round "
         f"{first}): the codegen cache is evicting the mix's classes"
     )
+
+
+def test_warm_curation_round_job_budget(spark):
+    _curation_round(spark, "jobs-0")  # builds keyed scratch
+    _, jobs = _curation_round(spark, "jobs-1")
+    assert sum(jobs.values()) <= WARM_ROUND_MAX_JOBS, jobs
