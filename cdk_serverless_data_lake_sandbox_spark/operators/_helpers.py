@@ -24,31 +24,10 @@ def money(expr: Column, ndigits: int = 2) -> Column:
 
 
 def money_sum(col: Column | str, scale: int = 2, ndigits: int = 2) -> Column:
-    """Deterministic sum of ONE money column, rounded to ``ndigits``
-    and surfaced as a double.
-
-    Default path: exact DECIMAL sum (order-independent, oracle-safe).
-    With ``SPARK_GRAFT_LONG_CENTS=1``: the column is scaled to 64-bit
-    integer "cents" (exact, since it is first cast to
-    decimal(18,scale)) and summed as a LONG — Tungsten's cheapest
-    aggregation path, measured ~2x the decimal sum (SURVEY §7 item 1).
-    The two paths are bit-identical when they both complete: the long
-    sum divided by 10^scale is the exact rational the decimal sum
-    holds, and IEEE division / decimal->double cast both round that
-    exact value to nearest-even once (parity-tested).
-
-    The fast path is only safe for SIMPLE sums where the long cannot
-    overflow: |sum| < 2^63 / 10^scale money units (9.2e14 at scale 2).
-    Chained arithmetic like q1's price*(1-disc)*(1+tax) needs more
-    fractional digits than a long can carry — those stay decimal
-    unconditionally (which is why this helper takes a column, not an
-    expression)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if _os.environ.get("SPARK_GRAFT_LONG_CENTS") == "1":
-        unit = 10 ** scale
-        cents = (c.cast(f"decimal(18,{scale})") * unit).cast("long")
-        return F.round(F.sum(cents) / float(unit), ndigits).cast("double")
-    return money(F.sum(dec(c, scale)), ndigits)
+    """Deterministic sum of ONE money column: an exact DECIMAL sum
+    (order-independent, oracle-safe), rounded to ``ndigits`` and
+    surfaced as a double."""
+    return money(F.sum(dec(col, scale)), ndigits)
 
 
 def dmean(sum_col: Column, count_col: Column, name: str) -> Column:
@@ -335,119 +314,59 @@ def _scratch_read(spark, path, schema, splits, fan_out: bool = True):
     return spread(out, splits) if fan_out else out
 
 
+def _pins_to_executors(master: str) -> bool:
+    """Where :func:`pin` puts state under ``master``: True for
+    ``local[...]`` (executor blocks), False for every other master.
+    ``local-cluster[...]`` executors are separate JVMs that can die on
+    their own, so it is treated like any cluster."""
+    return master.startswith("local") and not master.startswith("local-cluster")
+
+
 def pin(df):
-    """Materialize per-iteration / reused state through a pluggable
-    materializer (round-6 verdict item 1: ``localCheckpoint()`` pins
-    RDD blocks to executors, so one lost executor kills an iterative
-    job mid-flight with no recompute path — fine on local[N], not a
-    100 TB design).
+    """Materialize ``df`` and truncate its lineage: per-iteration or
+    reused state (``df.transform(pin)`` or ``pin(df)``).
 
-    Mode comes from the session conf ``spark.graft.materializer``
-    (fallback: env ``SPARK_GRAFT_MATERIALIZER``, default ``auto``):
+    Placement is the master's: on ``local[...]`` a
+    ``df.localCheckpoint()`` (blocks on the executors, one JVM, so
+    nothing is lost that the driver survives); on any other master a
+    scratch parquet write (:func:`materialize`) that every consumer
+    rescans, so the state survives a lost executor. On a cluster,
+    point ``SPARK_GRAFT_SCRATCH`` at shared storage. Both placements
+    replay the same physical rows, so results are identical.
 
-    - ``local``    — ``df.localCheckpoint()``: fastest, blocks live on
-      executors, NOT executor-loss-safe.
-    - ``reliable`` — scratch-parquet :func:`materialize`: state lands
-      on storage every branch rescans, surviving executor loss; on a
-      cluster point ``SPARK_GRAFT_SCRATCH`` at shared storage (HDFS /
-      object store) and this is exactly the
-      persist-to-staging-table contract the graph docstrings promise.
-    - ``auto``     — ``local`` for ``local[...]`` masters, ``reliable``
-      for anything else, so a cluster deployment is loss-safe by
-      DEFAULT and no code change is needed.
-
-    Results are bit-identical across modes (parity-tested): both paths
-    replay the same physical rows; only where the bytes live differs.
-    Use as ``df.transform(pin)`` or ``pin(df)``.
-
-    **Reliable-mode scratch lifetime contract:** scratch is reclaimed
-    per (application, call-site), keeping the newest ``_PIN_KEEP``
-    generations — which assumes ONE live pinned lineage per site. Two
-    lazily-held results whose loops pin from the same source line
-    (e.g. ``pagerank()`` invoked twice, both results kept unevaluated
-    and unioned later) would let the second invocation reclaim scratch
-    the first result still references (r8 advice). Callers composing
-    multiple live pinned frames set ``spark.graft.pin_reclaim=off``
-    (or env ``SPARK_GRAFT_PIN_RECLAIM=off``) around the second build —
-    scratch then accumulates one frame per iteration and is swept with
-    the application's scratch dir instead."""
-    spark = df.sparkSession
-    try:
-        conf_value = spark.conf.get("spark.graft.materializer", None)
-    except Exception:
-        conf_value = None
-    mode = _materializer_mode(
-        spark.sparkContext.master,
-        conf_value,
-        _os.environ.get("SPARK_GRAFT_MATERIALIZER"),
-    )
-    if mode == "local":
+    Lifetime: scratch written here lives until application exit, like
+    every :func:`materialize`. A loop that pins its state every round
+    pins through a :class:`RoundPins` made before the loop, which
+    deletes that loop's old rounds as it goes."""
+    if _pins_to_executors(df.sparkSession.sparkContext.master):
         return df.localCheckpoint()
-    path, schema, splits = _write(df, "pin")
-    _reclaim_pin_scratch(spark, path)
-    return _scratch_read(spark, path, schema, splits)
+    return materialize(df)
 
 
-# Per (application, call-site) history of reliable-pin scratch paths.
-# An iterative loop pins from the same source line every round; once a
-# NEWER pin from that line has been fully written, state from two pins
-# ago is dead — no live plan can reference it (the round that read it
-# has already materialized its successor). Keeping one superseded
-# generation as a safety margin, everything older is deleted, which
-# bounds reliable-mode disk at ~2 frames per call site instead of
-# growing by one frame per iteration (round-7 review finding).
-_PIN_HISTORY: dict[tuple[str, str], list[str]] = {}
-_PIN_KEEP = 2
+class RoundPins:
+    """The pins of one loop's per-round state. Pinning round t to
+    scratch deletes this loop's round t-2: round t was computed from
+    round t-1, which stays for consumers of the previous state (a
+    convergence check, a delta frontier). Each loop call makes its own,
+    so two results held lazily never lose each other's rounds."""
 
+    def __init__(self):
+        self._written: list[str] = []
 
-def _reclaim_pin_scratch(spark, path: str) -> None:
-    try:
-        conf_value = spark.conf.get("spark.graft.pin_reclaim", None)
-    except Exception:
-        conf_value = None
-    if (conf_value or _os.environ.get("SPARK_GRAFT_PIN_RECLAIM", "on")) == "off":
-        return
-    app = spark.sparkContext.applicationId
-    site = _caller_site()
-    hist = _PIN_HISTORY.setdefault((app, site), [])
-    hist.append(path)
-    while len(hist) > _PIN_KEEP:
-        _shutil.rmtree(hist.pop(0), ignore_errors=True)
+    def pin(self, df):
+        """:func:`pin`, reclaiming this loop's old rounds."""
+        if _pins_to_executors(df.sparkSession.sparkContext.master):
+            return df.localCheckpoint()
+        return self.materialize(df)
 
-
-def _caller_site() -> str:
-    """file:line of the nearest stack frame OUTSIDE this module and
-    pyspark (i.e. the operator code that called pin(), possibly via
-    DataFrame.transform)."""
-    import sys as _sys
-
-    f = _sys._getframe(1)
-    here = _os.path.abspath(__file__)
-    while f is not None:
-        fn = f.f_code.co_filename
-        if _os.path.abspath(fn) != here and (_os.sep + "pyspark" + _os.sep) not in fn:
-            return f"{fn}:{f.f_lineno}"
-        f = f.f_back
-    return "<unknown>"
-
-
-def _materializer_mode(master: str, conf_value, env_value) -> str:
-    """Resolve the effective materializer mode (pure, so the
-    non-local-master-defaults-to-reliable contract is unit-testable
-    without spinning a cluster)."""
-    mode = conf_value or env_value or "auto"
-    if mode == "auto":
-        # local-cluster[...] is NOT local: its executors are separate
-        # JVMs that can die independently, so auto must treat it like
-        # any other cluster master (r8: the executor-loss drill runs
-        # on local-cluster and relies on this)
-        is_local = master.startswith("local") and not master.startswith(
-            "local-cluster"
-        )
-        mode = "local" if is_local else "reliable"
-    if mode not in ("local", "reliable"):
-        raise ValueError(f"unknown materializer mode {mode!r}")
-    return mode
+    def materialize(self, df):
+        """:func:`materialize` under every master (state too large for
+        executor blocks), reclaiming this loop's old rounds."""
+        path, schema, splits = _write(df, "round")
+        self._written.append(path)
+        if len(self._written) > 2:
+            _shutil.rmtree(self._written.pop(0), ignore_errors=True)
+        return _scratch_read(df.sparkSession, path, schema, splits)
 
 
 def swap_dir(target: str, staged: str) -> None:

@@ -17,7 +17,6 @@ from pyspark.sql.window import Window
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-    pin,
     round_rat,
     sql_round_rat,
 )

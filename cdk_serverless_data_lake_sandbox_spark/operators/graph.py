@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
+    RoundPins,
     pin,
     round_rat,
     scratch,
@@ -147,6 +148,7 @@ def pagerank(
     # AQE cannot make this call — we make it from n explicitly.
     n = nodes.count()
     ranks = nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("rank"))
+    pins = RoundPins()
     for _ in range(iters):
         r_side = F.broadcast(ranks) if n <= _BCAST_NODES else ranks
         # In a SYMMETRIZED graph every node has at least one incoming
@@ -169,7 +171,7 @@ def pagerank(
                 ).alias("rank")
             )
             .select(F.col("dst").alias("node"), "rank")
-            .transform(pin)
+            .transform(pins.pin)
         )
     return ranks.join(nodes, "node").select("node", "rank", "deg")
 
@@ -293,6 +295,7 @@ def personalized_pagerank(
     seed_tele = base.where(F.col("is_seed") == 1).select(
         F.col("node").alias("tnode"), "tele"
     )
+    pins = RoundPins()
     for _ in range(iters):
         r_side = F.broadcast(ranks) if n <= _BCAST_NODES else ranks
         ranks = (
@@ -312,7 +315,7 @@ def personalized_pagerank(
                     + F.lit(damping) * F.col("m")
                 ).alias("rank"),
             )
-            .transform(pin)
+            .transform(pins.pin)
         )
     return ranks.join(base.select("node", "deg", "is_seed"), "node")
 
@@ -609,6 +612,7 @@ def copurchase_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.col("seed_dist").alias("dist")
     )
     n = nodes.count()
+    pins = RoundPins()
     for _ in range(_BFS_HOPS):
         d_side = dist if n > _BCAST_NODES else F.broadcast(dist)
         reach = (
@@ -631,7 +635,7 @@ def copurchase_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(merged)
                 .alias("dist"),
             )
-            .transform(pin)
+            .transform(pins.pin)
         )
     return (
         dist.join(nodes, "node")
@@ -865,6 +869,7 @@ def copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct().transform(pin)
     n = nodes.count()
     ranks = nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("rank"))
+    pins = RoundPins()
     for _ in range(_ITERS):
         r_side = F.broadcast(ranks) if n <= _BCAST_NODES else ranks
         # symmetrized edges -> every node receives a contribution, so
@@ -883,7 +888,7 @@ def copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank")
             )
             .select(F.col("dst").alias("node"), "rank")
-            .transform(pin)
+            .transform(pins.pin)
         )
     return (
         ranks.join(nodes, "node")
@@ -941,10 +946,11 @@ def coreness_frame(
     test. This pulls the long convergence tail (19+ rounds at sf0.01,
     a ~12x sf1 soak ratio) from rounds x |E| toward
     rounds x |E_active| — the dominant term at scale."""
+    pins = RoundPins()
     cur = (
         edges.select(F.col("src").alias("node"), F.col("src_deg").alias("c"))
         .distinct()
-        .transform(pin)
+        .transform(pins.pin)
     )
     n = cur.count()  # bounded driver scalar picks the join tier
     n_changed = n  # round 1: every node is "changed"
@@ -1006,7 +1012,7 @@ def coreness_frame(
                     "changed"
                 ),
             )
-            .transform(pin)
+            .transform(pins.pin)
         )
         n_changed = int(obs.get["changed"] or 0)
         changed = stepped.where(F.col("new_c") != F.col("_old")).select("node")
@@ -1115,10 +1121,11 @@ def lpa_labels(edges: DataFrame, rounds: int = _LPA_ROUNDS) -> DataFrame:
     changed dst; everyone else keeps their label. Synchronous updates
     make the per-round states identical to full recompute, so the
     unrolled oracle still matches hash-exact."""
+    pins = RoundPins()
     cur = (
         edges.select(F.col("src").alias("node"), F.col("src").alias("lbl"))
         .distinct()
-        .transform(pin)
+        .transform(pins.pin)
     )
     n = cur.count()  # bounded driver scalar picks the join tier
     n_changed = n  # round 1: every node is "changed"
@@ -1169,7 +1176,7 @@ def lpa_labels(edges: DataFrame, rounds: int = _LPA_ROUNDS) -> DataFrame:
                     (F.col("new_lbl") != F.col("_old")).cast("long")
                 ).alias("changed"),
             )
-            .transform(pin)
+            .transform(pins.pin)
         )
         n_changed = int(obs.get["changed"] or 0)
         changed = stepped.where(F.col("new_lbl") != F.col("_old")).select("node")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.operators._helpers import materialize, pin
+from cdk_serverless_data_lake_sandbox_spark.operators._helpers import RoundPins
 from cdk_serverless_data_lake_sandbox_spark.operators.dedup import (
     _JACCARD_TAU,
     _docs,
@@ -215,14 +215,12 @@ def min_label_components(
     # (executor-local blocks, no parquet round-trip — each round costs
     # ONE action), written scratch above the size gate (durable across
     # executor loss, the correct choice when labels are corpus-sized).
+    # Scratch rounds older than the newest two are deleted as it goes.
     # The convergence count rides the SAME action via observe() — the
     # old separate count() was a third action per round and most of
     # the iterative wall-time.
-    small = docs.count() <= 10_000_000
-
-    def truncate(df: DataFrame) -> DataFrame:
-        return df.transform(pin) if small else materialize(df)
-
+    pins = RoundPins()
+    truncate = pins.pin if docs.count() <= 10_000_000 else pins.materialize
     labels = truncate(docs.select("doc_id", F.col("doc_id").alias("label")))
     for _ in range(32):  # diameter bound; near-dup clusters are shallow
         neighbor_min = (
@@ -249,10 +247,6 @@ def min_label_components(
             .select("doc_id", F.col("new_label").alias("label"))
         )
         labels = truncate(stepped)
-        if not small:
-            # materialize() already ran the plan; observe metrics are
-            # available either way.
-            pass
         if (obs.get["changed"] or 0) == 0:
             break
     # labels is checkpointed/materialized — lineage no longer reaches

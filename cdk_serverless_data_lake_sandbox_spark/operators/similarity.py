@@ -20,6 +20,7 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import (
     spread,
 )
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
+    RoundPins,
     pin,
     round_rat,
     scratch,
@@ -2839,8 +2840,8 @@ def knn_graph_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the n^2 matrix; pair proposal is the in-posting explode the LSH
     family uses (one shuffle keyed by node), scoring joins are keyed
     by vec_id (embeddings never broadcast), and each round's graph is
-    pinned through the pluggable materializer, so lineage stays flat
-    and executor loss replays one round, not the whole descent. The
+    pinned (``_helpers.pin``: scratch on a cluster), so lineage stays
+    flat and executor loss replays one round, not the whole descent. The
     oracle unrolls the same finite dataflow (kmeans C27 precedent)."""
     edges = _knn_graph_shared(spark, sf_dir)
     w_topk = Window.partitionBy("src").orderBy(F.desc("cosine"), "dst")
@@ -2930,7 +2931,8 @@ def _knn_graph_frame(e: DataFrame, ev: DataFrame | None = None) -> DataFrame:
         .distinct()
     )
     w_topk = Window.partitionBy("src").orderBy(F.desc("cosine"), "dst")
-    edges = pin(
+    pins = RoundPins()
+    edges = pins.pin(
         score(init)
         .select(F.col("u").alias("src"), F.col("w").alias("dst"), "cosine")
         .withColumn("rk", F.row_number().over(w_topk))
@@ -2967,7 +2969,7 @@ def _knn_graph_frame(e: DataFrame, ev: DataFrame | None = None) -> DataFrame:
             .groupBy("src", "dst")
             .agg(F.max("cosine").alias("cosine"))
         )
-        edges = pin(
+        edges = pins.pin(
             alle.withColumn("rk", F.row_number().over(w_topk))
             .where(F.col("rk") <= _KNN_K)
             .select("src", "dst", "cosine")
@@ -3099,6 +3101,7 @@ def _beam_search(
     seen = score(
         q.select("query_id").withColumn("node", F.lit(entry).cast("bigint"))
     )
+    pins = RoundPins()
     for _ in range(_GAS_STEPS):
         beam = (
             seen.withColumn("rk", F.row_number().over(w_beam))
@@ -3111,7 +3114,7 @@ def _beam_search(
             .distinct()
             .join(seen.select("query_id", "node"), ["query_id", "node"], "left_anti")
         )
-        seen = pin(seen.unionAll(score(exp)))
+        seen = pins.pin(seen.unionAll(score(exp)))
     return (
         seen.where(F.col("node") != F.col("query_id"))
         .withColumn("rank", F.row_number().over(w_beam))
@@ -3496,7 +3499,8 @@ def _kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     def lit_vec(vals) -> str:
         return "array(" + ", ".join(f"CAST({float(v)} AS DOUBLE)" for v in vals) + ")"
 
-    cur = pin(
+    pins = RoundPins()
+    cur = pins.pin(
         e.select(
             "vec_id", "embedding",
             _sq_dist("embedding", lit_vec(first.embedding)).alias("d"),
@@ -3507,7 +3511,7 @@ def _kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "d", "embedding"
         ).first()
         chosen.append((r, int(top.vec_id), float(top.d)))
-        cur = pin(
+        cur = pins.pin(
             cur.select(
                 "vec_id", "embedding",
                 F.least(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
+    RoundPins,
     pin,
     remember,
     round_rat,
@@ -1614,11 +1615,12 @@ def bpe_train(
     words = d.select(
         F.explode_outer(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
     ).where(F.col("word") != "")
+    pins = RoundPins()
     vocab = (
         words.groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select("word", "freq", F.expr("split(word, '')").alias("syms"))
-        .transform(pin)
+        .transform(pins.pin)
     )
     merges: list[tuple[str, str]] = []
     rounds = 0
@@ -1661,7 +1663,7 @@ def bpe_train(
             expr = _merge_pair_expr(expr, a, b)
         vocab = vocab.select(
             "word", "freq", F.expr(expr).alias("syms")
-        ).transform(pin)
+        ).transform(pins.pin)
     if stats is not None:
         stats["rounds"] = rounds
     return merges
@@ -2692,9 +2694,10 @@ def _ulm_segment(words: DataFrame, lp_df: DataFrame) -> DataFrame:
 
 def _ulm_train_counts(words: DataFrame) -> DataFrame:
     counts = _ulm_init_counts(words)
+    pins = RoundPins()
     for _ in range(_ULM_ITERS):
         seg = _ulm_segment(words, _ulm_lp(counts))
-        counts = pin(
+        counts = pins.pin(
             seg.select("f", F.explode("toks").alias("piece"))
             .groupBy("piece").agg(F.sum("f").alias("c"))
         )

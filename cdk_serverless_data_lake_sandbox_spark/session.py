@@ -64,29 +64,19 @@ def get_spark(
         # Dims under this size are broadcast — no shuffle for the
         # region/nation/supplier/part side of star joins.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # SHJ policy (r12, closing the r11 verdict's "What's wrong #2"):
-        # the RUNTIME half only by default. AQE rewrites SMJ->SHJ when
+        # SHJ policy: the RUNTIME half only. AQE rewrites SMJ->SHJ when
         # every post-shuffle partition is under the local-map threshold
         # (guide §3.1) — a runtime SIZE-BOUNDED decision, so the hash
         # build can never exceed 64 MB/partition. The STATIC half
         # (preferSortMergeJoin=false) trusts plan-time size ESTIMATES;
         # a misestimated or skewed build side at 100 TB OOMs where
-        # sort-merge would spill. Isolated interleaved A/B
-        # (scripts/shj_ab_probe.py, r12): the static knob adds only
-        # ~6% geomean over AQE-threshold-only on the join-heavy
-        # headline queries (and is 1.21x WORSE on copurchase_triangles)
-        # — most of the r11 win came from the AQE half. Default is
-        # therefore the spill-graceful planner plus the runtime
-        # rewrite; a sandbox/benchmark profile can restore static SHJ
-        # with SPARK_GRAFT_PREFER_SMJ=false.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # sort-merge would spill. An isolated interleaved A/B
+        # (OPTIMIZATION_r12.md) found the static half adds only ~6%
+        # geomean over the runtime rewrite on the join-heavy headline
+        # queries, and is 1.21x WORSE on copurchase_triangles, so the
+        # planner stays spill-graceful.
+        .config("spark.sql.join.preferSortMergeJoin", "true")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # Arrow batches for the pandas-UDF edges (MinHash, multimodal).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -1170,7 +1170,7 @@ def stream_anomaly_gate(
     )
 
     # Streaming foreachBatch deliberately keeps localCheckpoint (not
-    # the pin() reliable materializer): executor loss mid-batch fails
+    # pin()'s scratch placement): executor loss mid-batch fails
     # the micro-batch, and Structured Streaming's own checkpoint
     # replays it on restart — that IS the recovery path, whereas
     # keyless scratch-parquet state would accumulate unboundedly over

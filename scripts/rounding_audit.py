@@ -82,11 +82,6 @@ ALLOWLIST: dict[tuple[str, str], str] = {
     ("stats.py", "price_elasticity"): (
         "log-log regression slope ratio — transcendental operands"
     ),
-    ("_helpers.py", "money_sum"): (
-        "long-cents fast path: sum(cents)/10^scale rounded at scale "
-        "digits is always the integer cents value — value*10^scale "
-        "is an integer, a .5 boundary at that digit cannot occur"
-    ),
     ("analytics.py", "_edge"): (
         "histogram bin edge lo + (b+1)*width/BINS — width is a "
         "continuous double range (max-min of doubles)"

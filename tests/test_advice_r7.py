@@ -1,11 +1,7 @@
 """Regression tests for the round-6 VERDICT/ADVICE findings fixed in
-round 7.
+round 7. Item 1 (where ``pin`` places iterative state) is tested in
+test_pin.py.
 
-1. Pluggable iterative-state materializer (verdict item 1): pin()
-   routes localCheckpoint through a local|reliable|auto knob; under
-   `reliable` the iterative operators must produce BIT-identical
-   results with ZERO localCheckpoint calls, and non-local masters must
-   resolve to `reliable` by default.
 2. baseline_check.py parses `--factor 2.5 BENCH.json` in either
    argument order (ADVICE: the hand-rolled parser crashed on the
    space-separated form placed first).
@@ -28,92 +24,11 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-# ------------------------------------------------------------- fix 1
 def _collect_sorted(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_reliable_materializer_bit_identical_and_no_localcheckpoint(spark):
-    """pagerank + kcore under materializer=reliable: results must be
-    bit-identical to the local path, and the reliable path must never
-    plan a bare localCheckpoint (patched to raise)."""
-    from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
-
-    cls = type(spark.range(1))  # the CONCRETE class (pyspark 4:
-    # classic.dataframe.DataFrame shadows the base-class method, so
-    # patching pyspark.sql.dataframe.DataFrame would be vacuous)
-    qs = all_queries()
-    base_pr = _collect_sorted(qs["copurchase_pagerank"](spark, SF_SMALL))
-    base_kc = _collect_sorted(qs["copurchase_kcore"](spark, SF_SMALL))
-
-    orig = cls.localCheckpoint
-
-    def banned(self, *a, **k):  # pragma: no cover - failure path
-        raise AssertionError(
-            "localCheckpoint planned under materializer=reliable"
-        )
-
-    spark.conf.set("spark.graft.materializer", "reliable")
-    cls.localCheckpoint = banned
-    try:
-        rel_pr = _collect_sorted(qs["copurchase_pagerank"](spark, SF_SMALL))
-        rel_kc = _collect_sorted(qs["copurchase_kcore"](spark, SF_SMALL))
-    finally:
-        cls.localCheckpoint = orig
-        spark.conf.unset("spark.graft.materializer")
-
-    # exact equality, floats included: both modes replay the same
-    # deterministic physical rows — only where the bytes live differs
-    assert rel_pr == base_pr
-    assert rel_kc == base_kc
-
-
-def test_materializer_mode_resolution():
-    """auto = local on local[...] masters, reliable anywhere else;
-    conf beats env beats default; unknown modes raise."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        _materializer_mode,
-    )
-
-    assert _materializer_mode("local[32]", None, None) == "local"
-    assert _materializer_mode("local[*]", None, None) == "local"
-    # the cluster contract the verdict asked to pin: non-local masters
-    # NEVER default to the executor-pinned localCheckpoint path
-    assert _materializer_mode("spark://host:7077", None, None) == "reliable"
-    assert _materializer_mode("yarn", None, None) == "reliable"
-    assert _materializer_mode("k8s://https://host", None, None) == "reliable"
-    assert _materializer_mode("spark://host:7077", "local", None) == "local"
-    assert _materializer_mode("local[4]", None, "reliable") == "reliable"
-    assert _materializer_mode("local[4]", "local", "reliable") == "local"
-    with pytest.raises(ValueError):
-        _materializer_mode("local[4]", "bogus", None)
-
-
-def test_pin_uses_localcheckpoint_in_local_mode(spark):
-    """Default (auto) on local[...]: pin() must take the fast
-    localCheckpoint path, not scratch parquet."""
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import pin
-
-    cls = type(spark.range(1))
-    calls = []
-    orig = cls.localCheckpoint
-
-    def spy(self, *a, **k):
-        calls.append(1)
-        return orig(self, *a, **k)
-
-    cls.localCheckpoint = spy
-    try:
-        out = pin(spark.range(3))
-        assert out.count() == 3
-    finally:
-        cls.localCheckpoint = orig
-    assert calls, "pin() did not route through localCheckpoint on local[*]"
 
 
 # ------------------------------------------------------------- fix 2

@@ -1,5 +1,6 @@
 """Regression tests for the round-7 VERDICT/ADVICE findings fixed in
-round 8.
+round 8. Items 3 and 7 (pin's scratch reclaim and the placement on
+local-cluster masters) are tested in test_pin.py.
 
 ADVICE items:
 1. Lake.open restores grants BEFORE the add_zone loop (add_zone saves
@@ -10,10 +11,6 @@ ADVICE items:
    does not honor the Spark hidden-path convention) and a versioned
    v=N lake table root resolves to the NEWEST snapshot instead of
    unioning every snapshot with a spurious v column.
-3. pin() reliable-mode scratch reclamation documents the one-live-
-   lineage-per-site contract and gains an off-switch
-   (spark.graft.pin_reclaim=off) for callers composing multiple
-   lazily-held pinned frames.
 4. crawl_delimited defaults corrupt_col="_corrupt": rows that widen
    past the sample horizon land loudly in the DLQ column instead of
    becoming silent all-NULLs (tested with the other crawler tests in
@@ -26,8 +23,6 @@ VERDICT items:
 6. crawl_grok evaluates its match regex ONCE per row in every mode
    (the match predicate and value are let-bound via a single-element
    transform; plan carries exactly one RLike).
-7. auto materializer mode treats local-cluster[...] masters as
-   clusters (reliable), since their executors are separate JVMs.
 8. Write-side catalog governance: Lake.write / Lake.delete_table are
    default-deny on the new "write" action, audit every attempt, and
    legacy read grants do NOT imply write.
@@ -238,18 +233,6 @@ def test_grok_mode_semantics_preserved(spark, grok_log):
         crawl_grok(
             spark, grok_log, _grok(), mode="FAILFAST", corrupt_col=None
         ).collect()
-
-
-# ------------------------------------------------------------- fix 7
-def test_local_cluster_master_resolves_to_reliable():
-    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
-        _materializer_mode,
-    )
-
-    assert _materializer_mode("local-cluster[2,2,1024]", None, None) == "reliable"
-    assert _materializer_mode("local[32]", None, None) == "local"
-    assert _materializer_mode("local[*]", None, None) == "local"
-    assert _materializer_mode("spark://host:7077", None, None) == "reliable"
 
 
 # ------------------------------------------------------------- fix 8

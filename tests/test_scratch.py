@@ -1,4 +1,4 @@
-"""Keyed scratch (``_helpers.scratch``) and the scratch behind ``pin``.
+"""Keyed scratch (``_helpers.scratch``).
 
 An entry is keyed on (application, name, plan identity of the frame
 the build read) and carries the version of that frame's input files:
@@ -205,60 +205,3 @@ def test_two_corpora_through_one_gate(spark, tmp_path):
         assert want, half
         # exact copies of the corpus half are gone, the other half stays
         assert all((i - 900000) % 2 != half for i in want), (half, want)
-
-
-def test_pin_reliable_reclaims_superseded_iterations(spark):
-    """Reliable-mode pin() keeps at most _PIN_KEEP scratch dirs per
-    call site: a 6-round loop must not leave 6 frames on disk (review
-    finding: unbounded disk growth over long iterative jobs), and the
-    immediately-previous generation stays readable."""
-    spark.conf.set("spark.graft.materializer", "reliable")
-    try:
-        app = spark.sparkContext.applicationId
-        before = {s for (a, s) in H._PIN_HISTORY if a == app}
-        frames = []
-        for i in range(6):
-            frames.append(H.pin(spark.range(i, i + 3)))  # one call site
-        site_hists = [
-            h for (a, s), h in H._PIN_HISTORY.items()
-            if a == app and s not in before
-        ]
-        assert site_hists and max(len(h) for h in site_hists) <= H._PIN_KEEP
-        # newest and previous generation both readable
-        assert frames[-1].count() == 3
-        assert frames[-2].count() == 3
-    finally:
-        spark.conf.unset("spark.graft.materializer")
-
-
-def test_pin_reclaim_off_switch_keeps_every_generation(spark):
-    spark.conf.set("spark.graft.materializer", "reliable")
-    spark.conf.set("spark.graft.pin_reclaim", "off")
-    before = {k: list(v) for k, v in H._PIN_HISTORY.items()}
-    try:
-        df = spark.range(10)
-        for _ in range(4):
-            df = H.pin(df.withColumn("id", F.col("id") + 1))
-        # reclamation is fully disabled: no history recorded, so no
-        # generation of this lineage can ever be deleted from under a
-        # live frame (deletion only happens when history rolls)
-        assert H._PIN_HISTORY == before
-        assert sorted(r.id for r in df.collect()) == list(range(4, 14))
-    finally:
-        spark.conf.unset("spark.graft.pin_reclaim")
-    # with reclaim back on (default), the same loop records history
-    # and keeps only _PIN_KEEP generations per site
-    try:
-        df = spark.range(10)
-        for _ in range(4):
-            df = H.pin(df.withColumn("id", F.col("id") + 1))
-        app = spark.sparkContext.applicationId
-        new_hists = [
-            hist
-            for (a, site), hist in H._PIN_HISTORY.items()
-            if a == app and hist != before.get((a, site))
-        ]
-        assert new_hists and all(len(h) <= H._PIN_KEEP for h in new_hists)
-        assert sorted(r.id for r in df.collect()) == list(range(4, 14))
-    finally:
-        spark.conf.unset("spark.graft.materializer")
