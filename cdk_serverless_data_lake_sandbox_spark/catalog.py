@@ -10,8 +10,10 @@ queryable through ``spark.sql`` exactly like Athena over Glue.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 TPCH_TABLES = (
     "region",
@@ -31,30 +33,97 @@ class AccessDenied(Exception):
     """A governed read without a covering grant (catalog ACL)."""
 
 
-# Inferred parquet schema per (path, dir mtime) — the Glue-catalog
-# analog of a table's registered schema. Without it every
-# ``spark.read.parquet`` fires a one-task footer-inference JOB, and a
-# query joining six tables pays six driver round-trips before any real
-# work (measured ~1.5 s of a 2.9 s q5 wall at sf0.1; at production
-# scale the same jobs list object-store prefixes, which is why Glue
-# keeps schemas in the catalog instead of re-crawling per query —
-# optimization guide §6 "file listing" / §7.3 driver-side work). The
-# mtime in the key invalidates the entry when a table is rewritten
-# (parquet dir mtime changes with its content).
-_SCHEMA_CACHE: dict[tuple[str, float], object] = {}
+# The lake's schema store — the Glue-catalog analog of a table's
+# registered schema, so that no read re-derives what the lake already
+# knows. Without it every ``spark.read.parquet`` fires a one-task
+# footer-inference JOB, and a query joining six tables pays six driver
+# round-trips before any real work (measured ~1.5 s of a 2.9 s q5 wall
+# at sf0.1; at production scale the same jobs list object-store
+# prefixes, which is why Glue keeps schemas in the catalog instead of
+# re-crawling per query — optimization guide §6 "file listing" / §7.3
+# driver-side work). Keys are (identity, version):
+#
+# - (parquet directory, its mtime): recorded by the first footer read
+#   (:func:`_read_parquet_cached`) or by the writer that just wrote the
+#   directory (:func:`record_written`);
+# - ((path, delimiter, quote, use_header, sample_rows), (path, size,
+#   mtime) of every input file): a delimited crawl's sampled inference
+#   (``sources.crawler.crawl_delimited``), so the ETL job reuses the
+#   schema the crawler just inferred for the same drop.
+#
+# A rewritten input has a new version and misses; storing it drops the
+# identity's older versions, so the store holds one entry per table or
+# crawl input.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+_SCHEMA_LOCK = threading.Lock()
+
+
+def schema_for(identity, version, infer) -> StructType:
+    """The schema stored under (``identity``, ``version``), else
+    ``infer()``'s, stored there. A ``version`` of None (the input could
+    not be stat'ed) always infers and stores nothing. Returns a copy:
+    the caller may extend it (``StructType.add`` works in place)."""
+    schema = _SCHEMA_CACHE.get((identity, version)) if version is not None else None
+    if schema is None:
+        schema = infer()
+        if version is not None:
+            _store(identity, version, schema)
+    return StructType(list(schema.fields))
+
+
+def _store(identity, version, schema: StructType) -> None:
+    with _SCHEMA_LOCK:  # a streaming batch records from its own thread
+        for k in [k for k in _SCHEMA_CACHE if k[0] == identity and k[1] != version]:
+            del _SCHEMA_CACHE[k]
+        _SCHEMA_CACHE[(identity, version)] = StructType(list(schema.fields))
+
+
+def _as_nullable(t):
+    """``t`` with every field, element and map value nullable: what a
+    file source returns for a schema, read or user-specified."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def record_written(path: str, schema: StructType) -> None:
+    """Record that the parquet directory ``path`` was just written from
+    a frame of ``schema``, so the next read of it runs no footer job.
+    The entry is keyed on the directory's mtime after the write, and
+    holds what a footer read returns: the same fields, all nullable."""
+    try:
+        mtime = os.path.getmtime(path)
+    except OSError:
+        return
+    _store(path, mtime, _as_nullable(schema))
+
+
+def recorded_schema(path: str) -> StructType | None:
+    """The stored schema of the parquet directory ``path`` as it is
+    now, or None."""
+    try:
+        return _SCHEMA_CACHE.get((path, os.path.getmtime(path)))
+    except OSError:
+        return None
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     try:
-        key = (path, os.path.getmtime(path))
+        mtime = os.path.getmtime(path)
     except OSError:
         return spark.read.parquet(path)  # missing path: surface Spark's error
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
+    schema = _SCHEMA_CACHE.get((path, mtime))
+    if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        _store(path, mtime, df.schema)
         return df
-    return spark.read.schema(sch).parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:

@@ -19,10 +19,15 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    _read_parquet_cached,
+    load_tables,
+    record_written,
+)
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
     recover_dir,
@@ -69,19 +74,43 @@ def tsv_to_parquet_job(
 ) -> dict[str, str]:
     """The reference Glue job end-to-end: TSV read (header, quoted),
     ApplyMapping, then partitioned AND unpartitioned parquet writes
-    (csv_to_parquet.py:52-70 writes both)."""
+    (csv_to_parquet.py:52-70 writes both).
+
+    The crawl reuses the schema a crawl of the same unchanged drop
+    already inferred (the crawler's, which the reference's job reads
+    from the Glue Catalog). The two writes run at once, the partitioned
+    one on an :class:`~pyspark.InheritableThread`, so both jobs carry
+    the caller's job group. When either fails, the first failure is
+    raised as a ``RuntimeError`` naming its output path, after both
+    writes have ended. The unpartitioned output's schema is recorded in
+    the catalog (:func:`record_written`), so reading it back runs no
+    footer job."""
     df = crawl_delimited(
         spark, raw_dataset_uri, classifier=CsvClassifier(delimiter="\t", quote_symbol='"')
     )
     mapped = apply_mapping(df, mappings)
     part_path = os.path.join(target_dataset_uri, "partitioned", dataset_path)
     flat_path = os.path.join(target_dataset_uri, "unpartitioned", dataset_path)
-    writer = mapped.write.mode("overwrite")
+    part_writer = mapped.write.mode("overwrite")
     if partition_keys:
-        writer.partitionBy(*partition_keys).parquet(part_path)
-    else:
-        mapped.write.mode("overwrite").parquet(part_path)
-    mapped.write.mode("overwrite").parquet(flat_path)
+        part_writer = part_writer.partitionBy(*partition_keys)
+    errors: list[tuple[str, Exception]] = []
+
+    def write(writer, path: str) -> None:
+        try:
+            writer.parquet(path)
+        except Exception as e:  # raised below, once both writes have ended
+            errors.append((path, e))
+
+    part = InheritableThread(target=write, args=(part_writer, part_path))
+    part.start()
+    write(mapped.write.mode("overwrite"), flat_path)
+    part.join()
+    if errors:
+        path, err = errors[0]
+        first = (str(err).splitlines() or [type(err).__name__])[0]
+        raise RuntimeError(f"tsv_to_parquet_job: writing {path!r} failed: {first}") from err
+    record_written(flat_path, mapped.schema)
     return {"partitioned": part_path, "unpartitioned": flat_path}
 
 
@@ -269,11 +298,16 @@ def merge_upsert(
     table format this is a single MERGE statement; the
     keep-newest-per-key shuffle shape is identical. The streaming
     twin is ``streaming.jobs.upsert_sink``. A target that exists but
-    cannot be read raises: only a missing target is a first load."""
+    cannot be read raises: only a missing target is a first load.
+
+    The target is read through the catalog's schema store, so a table
+    this engine wrote (the ETL job's output, an earlier upsert) is
+    read without a footer job; the swapped-in table's schema is
+    recorded for the next reader."""
     from pyspark.sql.window import Window
 
     if recover_dir(target_path):
-        merged = spark.read.parquet(target_path).unionByName(updates)
+        merged = _read_parquet_cached(spark, target_path).unionByName(updates)
     else:  # first load: target doesn't exist yet
         merged = updates
     w = Window.partitionBy(key_col).orderBy(F.desc(order_col))
@@ -284,6 +318,7 @@ def merge_upsert(
     )
     latest.write.mode("overwrite").parquet(target_path + "_staged")
     swap_dir(target_path, target_path + "_staged")
+    record_written(target_path, latest.schema)
 
 
 # ---------------------------------------------------------------- D10

@@ -17,7 +17,9 @@ reproduces both behaviors on Spark's readers:
 
 A delimited crawl is one bounded sample of raw lines, cached in the
 JVM; one inference over it (two only when no header is detected); and
-one typed scan of the dataset.
+one typed scan of the dataset. The inferred schema is catalog state, as
+a Glue crawler's is: a later crawl of the same unchanged files with the
+same dialect reuses it and runs no inference job.
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StringType, StructType
+
+from cdk_serverless_data_lake_sandbox_spark.catalog import schema_for
+from cdk_serverless_data_lake_sandbox_spark.operators._helpers import _input_version
 
 
 @dataclass(frozen=True)
@@ -103,6 +108,17 @@ def crawl_delimited(
     applied explicitly. A sample that infers no columns (empty input)
     raises ``ValueError`` naming ``path``.
 
+    Each inference is kept in the catalog's schema store
+    (:func:`~cdk_serverless_data_lake_sandbox_spark.catalog.schema_for`),
+    keyed on the (path, size, mtime) of every input file, stat'ed
+    through the Hadoop FileSystem, plus the delimiter, quote, header
+    setting and ``sample_rows``. Crawling the same unchanged files
+    again (the ETL job after the crawler, say) runs no inference job
+    and builds no sample; a file rewritten in place is inferred again,
+    and a path that cannot be stat'ed always is. An ``UNKNOWN`` crawl
+    runs the same first inference as a ``PRESENT`` one, so either
+    reuses the other's.
+
     A type that only widens past the sample horizon (e.g. ints that
     become floats after row 10k) fails to parse on those rows. The
     caller chooses how that surfaces:
@@ -119,16 +135,27 @@ def crawl_delimited(
     if classifier is not None:
         header = classifier.contains_header
         delimiter, quote = classifier.delimiter, classifier.quote_symbol
-    # cached: uncached, every inference job re-runs the limit scan
-    sample = _sample_lines(spark, path, sample_rows).cache()
+    sample = _sample_lines(spark, path, sample_rows)
+    version = _input_version(sample)
+    cached = []
+
+    def infer(use_header: bool) -> StructType:
+        def run() -> StructType:
+            if not cached:  # uncached, every inference job re-runs the limit scan
+                cached.append(sample.cache())
+            return _infer_from_sample(spark, sample, delimiter, quote, use_header)
+
+        return schema_for((path, delimiter, quote, use_header, sample_rows), version, run)
+
     try:
         use_header = header != "ABSENT"
-        schema = _infer_from_sample(spark, sample, delimiter, quote, use_header)
+        schema = infer(use_header)
         if header == "UNKNOWN" and all(isinstance(f.dataType, StringType) for f in schema.fields):
             use_header = False
-            schema = _infer_from_sample(spark, sample, delimiter, quote, False)
+            schema = infer(False)
     finally:
-        sample.unpersist()
+        if cached:
+            sample.unpersist()
     if not schema.fields:
         raise ValueError(f"crawl_delimited: no columns inferred from {path!r} (empty input?)")
     n_data_cols = len(schema.fields)

@@ -551,16 +551,20 @@ def idempotent_sink(stream: DataFrame, data_path: str, manifest_path: str):
     retry overwrites (mode=overwrite on the batch dir), never a
     duplicate in reader-visible state: readers go through the
     manifest-filtered view this function's companion
-    ``read_committed`` returns."""
+    ``read_committed`` returns. Each batch directory's schema is
+    recorded in the catalog's schema store once written, so
+    ``read_committed`` needs no footer job for it."""
     import os
+
+    from cdk_serverless_data_lake_sandbox_spark.catalog import record_written
 
     def write_once(batch: DataFrame, batch_id: int) -> None:
         marker = os.path.join(manifest_path, f"batch_{batch_id}")
         if os.path.exists(marker):
             return
-        batch.write.mode("overwrite").parquet(
-            os.path.join(data_path, f"batch_id={batch_id}")
-        )
+        batch_dir = os.path.join(data_path, f"batch_id={batch_id}")
+        batch.write.mode("overwrite").parquet(batch_dir)
+        record_written(batch_dir, batch.schema)
         os.makedirs(manifest_path, exist_ok=True)
         with open(marker, "w") as fh:
             fh.write("committed")
@@ -584,8 +588,16 @@ def read_committed(
     (uncommitted batches still reveal the sink's column layout), so
     downstream unions/column references behave identically in the
     empty and non-empty cases. Only with no schema hint and no data
-    at all does it fall back to a zero-column frame."""
+    at all does it fall back to a zero-column frame.
+
+    Committed batches are read with the schema their writer recorded
+    (:func:`idempotent_sink`), with no footer job, when every one of
+    them recorded the same schema; otherwise (a batch written by
+    another application, or batches of different schemas) the schema
+    is inferred from the files."""
     import os
+
+    from cdk_serverless_data_lake_sandbox_spark.catalog import recorded_schema
 
     committed = [
         int(f.split("_", 1)[1])
@@ -605,6 +617,9 @@ def read_committed(
         for b in sorted(committed)
         if os.path.isdir(os.path.join(data_path, f"batch_id={b}"))
     ]
+    recorded = [recorded_schema(p) for p in paths]
+    if recorded and recorded[0] is not None and all(s == recorded[0] for s in recorded):
+        return spark.read.schema(recorded[0]).parquet(*paths)
     return spark.read.parquet(*paths)
 
 

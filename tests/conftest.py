@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 
 import duckdb
 import pytest
@@ -85,6 +86,20 @@ def await_stream_done(q, timeout: float = 600.0) -> None:
     assert not q.isActive, (
         f"streaming query {q.name or q.id} still active after {timeout}s"
     )
+
+
+def count_jobs(spark, tag: str, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted
+    by a job group of its own (jobs started from threads that inherit
+    the caller's job group count too)."""
+    sc = spark.sparkContext
+    group = f"{tag}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -5,13 +5,21 @@ and the storage/scale ops (D1-D6)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import Lake, load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    _SCHEMA_CACHE,
+    Lake,
+    load_tables,
+    record_written,
+    recorded_schema,
+)
+from cdk_serverless_data_lake_sandbox_spark.operators import _helpers
 from cdk_serverless_data_lake_sandbox_spark.operators.etl import (
     IncrementalIngest,
     apply_mapping,
@@ -19,13 +27,14 @@ from cdk_serverless_data_lake_sandbox_spark.operators.etl import (
     dv_compact,
     dv_delete,
     dv_read,
+    merge_upsert,
     tsv_to_parquet_job,
 )
 from cdk_serverless_data_lake_sandbox_spark.plans import partition_filters, pushed_filters
 from cdk_serverless_data_lake_sandbox_spark.sources.crawler import CsvClassifier, crawl_delimited
 from cdk_serverless_data_lake_sandbox_spark.sources.kv import KVStore
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, count_jobs
 
 _NAME_BASICS_TSV = (
     "nconst\tprimaryName\tbirthYear\tdeathYear\tprimaryProfession\tknownForTitles\n"
@@ -41,11 +50,36 @@ _ALL_STRING_TSV = (
 )
 
 
+# a typed drop, shaped like the orders drops the ingest benchmark lands
+_DROP_TSV = "id\tname\tprice\tpriority\n" + "".join(
+    f"{i}\tn{i}\t{i * 1.5}\tP{i % 3}\n" for i in range(60)
+)
+_DROP_MAPPING = [
+    ("id", "int", "id", "bigint"),
+    ("name", "string", "name", "string"),
+    ("price", "double", "price", "double"),
+    ("priority", "string", "priority", "string"),
+]
+
+
 @pytest.fixture()
 def name_basics(tmp_path):
     p = tmp_path / "name.basics.tsv"
     p.write_text(_NAME_BASICS_TSV)
     return str(p)
+
+
+@pytest.fixture()
+def drop(tmp_path):
+    p = tmp_path / "drop.tsv"
+    p.write_text(_DROP_TSV)
+    return str(p)
+
+
+def _etl(spark, drop: str, out_dir, partition_keys=("priority",)) -> dict:
+    return tsv_to_parquet_job(
+        spark, drop, str(out_dir), "orders", _DROP_MAPPING, partition_keys=list(partition_keys)
+    )
 
 
 # ---------------------------------------------------------------- A3
@@ -309,6 +343,66 @@ def test_crawler_widening_rows_land_in_default_dlq_column(spark, tmp_path):
     assert len(df.where(F.col("_corrupt").isNull()).collect()) == 200
 
 
+# ---------------------------------------------------------------- A3 crawl memo
+def test_crawl_memo_reinfers_a_drop_rewritten_in_place(spark, tmp_path):
+    """The crawled schema is kept per file version: an unchanged drop
+    runs no inference job, a drop rewritten in place (new size, or the
+    same bytes with a new mtime) is inferred again."""
+    p = tmp_path / "drop.tsv"
+    p.write_text("id\tscore\n1\t2\n3\t4\n")
+
+    def crawl():
+        return crawl_delimited(spark, str(p), classifier=CsvClassifier()).schema
+
+    first, n = count_jobs(spark, "memo-first", crawl)
+    assert n >= 1 and first["score"].dataType.simpleString() == "int"
+    assert count_jobs(spark, "memo-same", crawl) == (first, 0)
+
+    p.write_text("id\tscore\n1\t2.5\n3\t4\n")  # new size
+    widened, n = count_jobs(spark, "memo-resized", crawl)
+    assert n >= 1 and widened["score"].dataType.simpleString() == "double"
+
+    st = os.stat(p)
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))  # same size
+    again, n = count_jobs(spark, "memo-touched", crawl)
+    assert n >= 1 and again == widened
+
+
+def test_crawl_after_etl_job_runs_no_inference_job(spark, drop, tmp_path):
+    """The crawler op's header-detecting crawl runs the same first
+    inference as the ETL job's header-PRESENT crawl: after the job, a
+    crawl of the unchanged drop runs no Spark job at all."""
+    _etl(spark, drop, tmp_path / "processed")
+    df, n = count_jobs(spark, "crawl-after-etl", lambda: crawl_delimited(spark, drop))
+    assert n == 0
+    assert df.columns == ["id", "name", "price", "priority", "_corrupt"]
+    assert len(df.where(F.col("_corrupt").isNull()).collect()) == 60
+
+
+def test_crawl_memo_keeps_all_string_unknown_headerless(spark, tmp_path):
+    """A remembered all-string crawl still falls back to headerless
+    ``col_N`` names, and the stored schema is not extended by the
+    ``_corrupt`` column the crawl appends to its copy."""
+    p = tmp_path / "allstr.tsv"
+    p.write_text(_ALL_STRING_TSV)
+    for k in range(3):
+        df, n = count_jobs(spark, f"all-string-{k}", lambda: crawl_delimited(spark, str(p)))
+        assert df.columns == ["col_0", "col_1", "col_2", "_corrupt"]
+        assert df.count() == 3
+    assert n == 0
+
+
+def test_crawl_and_etl_build_no_keyed_scratch(spark, drop, tmp_path):
+    """The crawl memo lives in the catalog's schema store: crawling and
+    the ETL job add no keyed-scratch entry, which the ingest benchmark
+    checks (``scratch.keys_built == 0``)."""
+    before = set(_helpers._MATERIALIZED)
+    crawl_delimited(spark, drop)
+    _etl(spark, drop, tmp_path / "processed")
+    crawl_delimited(spark, drop)
+    assert set(_helpers._MATERIALIZED) == before
+
+
 # ---------------------------------------------------------------- A4
 def test_apply_mapping_choice_resolution(spark):
     df = spark.createDataFrame([("1", "2.5"), ("3", "x")], ["a", "b"])
@@ -343,6 +437,35 @@ def test_tsv_to_parquet_job_partitioned_and_pruned(spark, name_basics, tmp_path)
     assert pruned.count() == 1
     flat = spark.read.parquet(out["unpartitioned"])
     assert flat.count() == 3
+
+
+def test_tsv_to_parquet_job_layouts_hold_the_same_rows(spark, drop, tmp_path):
+    out = _etl(spark, drop, tmp_path / "processed")
+    cols = [m[2] for m in _DROP_MAPPING]
+    part = spark.read.parquet(out["partitioned"]).select(*cols).collect()
+    flat = spark.read.parquet(out["unpartitioned"]).select(*cols).collect()
+    assert len(flat) == 60
+    assert sorted(part) == sorted(flat)
+
+
+def test_tsv_to_parquet_job_writes_carry_the_callers_job_group(spark, drop, tmp_path):
+    """Both layouts are written at once, the partitioned one from
+    another thread; its job must still belong to the caller's group.
+    With the drop already crawled, the job runs its two writes only."""
+    crawl_delimited(spark, drop)
+    _, n = count_jobs(spark, "etl-writes", lambda: _etl(spark, drop, tmp_path / "processed"))
+    assert n == 2
+
+
+def test_tsv_to_parquet_job_raises_a_failed_partitioned_write(spark, drop, tmp_path):
+    """A failing write raises, naming its output, instead of returning
+    the paths; the other write has ended by then."""
+    part = os.path.join(str(tmp_path / "processed"), "partitioned", "orders")
+    with pytest.raises(RuntimeError, match=re.escape(repr(part))) as failed:
+        _etl(spark, drop, tmp_path / "processed", partition_keys=("no_such_column",))
+    assert failed.value.__cause__ is not None
+    flat = os.path.join(str(tmp_path / "processed"), "unpartitioned", "orders")
+    assert spark.read.parquet(flat).count() == 60
 
 
 # ---------------------------------------------------------------- A6
@@ -656,6 +779,112 @@ def test_merge_upsert_refuses_unreadable_target(spark, tmp_path):
     with open(path, "wb") as fh:
         fh.write(intact)
     assert spark.read.parquet(target).count() == 1000
+
+
+def test_etl_and_upsert_record_the_schema_a_footer_read_returns(spark, drop, tmp_path):
+    """The writers that record their output's schema record exactly
+    what ``spark.read.parquet`` would infer from the footers."""
+    flat = _etl(spark, drop, tmp_path / "processed")["unpartitioned"]
+    assert recorded_schema(flat) == spark.read.parquet(flat).schema
+    updates = spark.read.parquet(flat).where("id < 5").withColumn("price", F.col("price") + 1)
+    merge_upsert(spark, flat, updates, "id", "price")
+    assert recorded_schema(flat) == spark.read.parquet(flat).schema
+    assert spark.read.parquet(flat).where("id < 5 AND price = id * 1.5 + 1").count() == 5
+
+
+def test_record_written_matches_footer_for_nested_non_nullable_fields(spark, tmp_path):
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    schema = StructType(
+        [
+            StructField("id", LongType(), False, {"comment": "key"}),
+            StructField("version", LongType(), False),
+            StructField("tags", ArrayType(StringType(), False), False),
+            StructField("attrs", MapType(StringType(), LongType(), False), True),
+            StructField("pt", StructType([StructField("x", IntegerType(), False)]), False),
+        ]
+    )
+    rows = [(1, 1, ["a"], {"k": 1}, (1,)), (2, 1, [], {}, (2,))]
+    target = str(tmp_path / "nested")
+    merge_upsert(spark, target, spark.createDataFrame(rows, schema), "id", "version")
+    assert recorded_schema(target) == spark.read.parquet(target).schema
+
+
+def test_merge_upsert_reads_a_recorded_target_without_a_footer_job(spark, tmp_path):
+    """Two identical targets, one with its schema recorded: the same
+    upsert runs one job fewer on it (the footer read), and the table
+    it swaps in is recorded for the next reader."""
+    v1 = spark.createDataFrame([(i, float(i), 1) for i in range(20)], "id long, v double, version long")
+    update = spark.createDataFrame([(3, 33.0, 2)], "id long, v double, version long")
+    recorded, unknown = str(tmp_path / "recorded"), str(tmp_path / "unknown")
+    for target in (recorded, unknown):
+        v1.write.parquet(target)
+    record_written(recorded, v1.schema)
+    _, n_recorded = count_jobs(
+        spark, "upsert-recorded", lambda: merge_upsert(spark, recorded, update, "id", "version")
+    )
+    _, n_unknown = count_jobs(
+        spark, "upsert-unknown", lambda: merge_upsert(spark, unknown, update, "id", "version")
+    )
+    assert n_unknown == n_recorded + 1
+    for target in (recorded, unknown):
+        assert recorded_schema(target) == spark.read.parquet(target).schema
+        assert spark.read.parquet(target).where("id = 3").first().v == 33.0
+    # the swapped-in version replaced the one recorded before the upsert
+    assert sum(k[0] == recorded for k in _SCHEMA_CACHE) == 1
+    # a table rewritten behind the store's back has a new mtime: unknown again
+    spark.range(3).selectExpr("id", "1L AS version").write.mode("overwrite").parquet(recorded)
+    assert recorded_schema(recorded) is None
+
+
+def test_schema_store_keeps_one_version_per_identity_under_threads():
+    """Streaming batches record from their own thread while the caller
+    reads and writes: concurrent stores of one identity must still
+    leave exactly its newest-stored version, never two."""
+    import sys
+    import threading
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from cdk_serverless_data_lake_sandbox_spark import catalog
+
+    schema = StructType([StructField("id", LongType())])
+    identities = [("store-stress", i) for i in range(3)]
+    errors = []
+
+    def hammer(t: int) -> None:
+        try:
+            for v in range(300):
+                catalog._store(identities[v % 3], (t, v), schema)
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        for ident in identities:
+            assert sum(k[0] == ident for k in catalog._SCHEMA_CACHE) == 1
+    finally:
+        for k in [k for k in catalog._SCHEMA_CACHE if k[0] in identities]:
+            del catalog._SCHEMA_CACHE[k]
 
 
 # ---------------------------------------------------------------- D9 (dynamic partition overwrite)

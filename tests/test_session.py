@@ -1,13 +1,19 @@
 """Costs that only show up as speed: the generated-code cache must hold
 a query mix's working set, so a warm round compiles nothing, and a
-warm round launches no more Spark jobs than its plans need."""
+warm curation or ingest round launches no more Spark jobs than its
+plans need."""
 
 from __future__ import annotations
 
-from perfbench.workloads import CURATION_MIX
-from tests.conftest import SF_SMALL
+import os
 
+from perfbench.workloads import CURATION_MIX
+from pyspark.sql import functions as F
+from tests.conftest import SF_SMALL, count_jobs
+
+from cdk_serverless_data_lake_sandbox_spark.operators.etl import merge_upsert, tsv_to_parquet_job
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
+from cdk_serverless_data_lake_sandbox_spark.sources.crawler import crawl_delimited
 
 # With the session's cache a warm curation round compiled 0-8 classes
 # at sf0.001 and sf0.01 (12 rounds); with Spark's default of 100
@@ -24,6 +30,19 @@ WARM_ROUND_MAX_COMPILES = 12
 # adds one broadcast job when AQE flips its build side at run time, so
 # the worst case is 27; the bound adds one job of margin.
 WARM_ROUND_MAX_JOBS = 28
+
+# A warm ingest round (crawl a drop and count it, ETL it to both
+# layouts, upsert a change batch into the flat table) launched 8 jobs:
+# crawl 4, ETL 2, upsert 2. It launched 11 when the ETL job inferred the
+# drop's schema again after the crawl (two jobs) and the upsert read its
+# target's footers (one). The bound adds one job of margin.
+INGEST_ROUND_MAX_JOBS = 9
+_INGEST_MAPPING = [
+    ("id", "int", "id", "bigint"),
+    ("name", "string", "name", "string"),
+    ("price", "double", "price", "double"),
+    ("priority", "string", "priority", "string"),
+]
 
 
 def _curation_round(spark, tag: str) -> tuple[int, dict[str, int]]:
@@ -58,3 +77,37 @@ def test_warm_curation_round_job_budget(spark):
     _curation_round(spark, "jobs-0")  # builds keyed scratch
     _, jobs = _curation_round(spark, "jobs-1")
     assert sum(jobs.values()) <= WARM_ROUND_MAX_JOBS, jobs
+
+
+def _ingest_round(spark, root: str, r: int) -> dict[str, int]:
+    """Land drop ``r`` the way the ingest benchmark does: the jobs of
+    each step, counted by its job group."""
+    drop = os.path.join(root, f"drop-{r}.tsv")
+    with open(drop, "w") as fh:
+        fh.write("id\tname\tprice\tpriority\n")
+        fh.writelines(f"{i}\tn{i}\t{i * 1.5 + r}\tP{i % 3}\n" for i in range(200))
+    updates = spark.createDataFrame(
+        [(i, f"n{i}", 1000.0 + i, "P0") for i in range(5)],
+        "id bigint, name string, price double, priority string",
+    )
+    jobs = {}
+    _, jobs["crawl"] = count_jobs(
+        spark, "crawl", lambda: crawl_delimited(spark, drop).select(F.count("*"), F.count("price")).collect()
+    )
+    out, jobs["etl"] = count_jobs(
+        spark,
+        "etl",
+        lambda: tsv_to_parquet_job(
+            spark, drop, os.path.join(root, "lake"), f"orders_r{r}", _INGEST_MAPPING, ["priority"]
+        ),
+    )
+    _, jobs["upsert"] = count_jobs(
+        spark, "upsert", lambda: merge_upsert(spark, out["unpartitioned"], updates, "id", "price")
+    )
+    return jobs
+
+
+def test_warm_ingest_round_job_budget(spark, tmp_path):
+    _ingest_round(spark, str(tmp_path), 0)
+    jobs = _ingest_round(spark, str(tmp_path), 1)
+    assert sum(jobs.values()) <= INGEST_ROUND_MAX_JOBS, jobs

@@ -15,7 +15,7 @@ from cdk_serverless_data_lake_sandbox_spark.streaming.jobs import (
     windowed_counts,
 )
 
-from tests.conftest import SF_SMALL, await_stream_done
+from tests.conftest import SF_SMALL, await_stream_done, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -791,6 +791,54 @@ def test_idempotent_sink_no_duplicates_on_replay(spark, tmp_path):
         os.path.join(data, "batch_id=999")
     )
     assert read_committed(spark, data, manifest).count() == 40
+
+
+def test_read_committed_uses_the_recorded_schema_of_every_batch(spark, tmp_path):
+    """Each batch directory's recorded schema is what a footer read of
+    it returns, so the committed view is built with no Spark job; one
+    committed batch of another schema sends it back to inference."""
+    import os
+
+    from cdk_serverless_data_lake_sandbox_spark.catalog import record_written, recorded_schema
+    from cdk_serverless_data_lake_sandbox_spark.streaming.jobs import (
+        idempotent_sink,
+        read_committed,
+    )
+
+    ev = load_tables(spark, SF_SMALL, ("events",))["events"].limit(40)
+    src = str(tmp_path / "src")
+    ev.repartition(2).write.parquet(src)
+    data, manifest = str(tmp_path / "data"), str(tmp_path / "manifest")
+    q = (
+        idempotent_sink(read_event_stream(spark, src, max_files_per_trigger=1), data, manifest)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream_done(q)
+    dirs = [os.path.join(data, d) for d in sorted(os.listdir(data))]
+    assert len(dirs) == 2
+    for d in dirs:
+        assert recorded_schema(d) == spark.read.parquet(d).schema
+
+    def committed(tag):
+        return count_jobs(spark, tag, lambda: read_committed(spark, data, manifest))
+
+    df, n = committed("committed-recorded")
+    assert n == 0
+    assert df.schema == spark.read.parquet(*dirs).schema
+    assert df.count() == 40
+
+    other = os.path.join(data, "batch_id=99")
+    narrow = spark.range(3).selectExpr("id AS event_id")
+    narrow.write.parquet(other)
+    record_written(other, narrow.schema)
+    with open(os.path.join(manifest, "batch_99"), "w") as fh:
+        fh.write("committed")
+    df, n = committed("committed-mixed")
+    assert n >= 1
+    assert df.schema == spark.read.parquet(*dirs, other).schema
+    assert df.count() == 43
 
 
 def test_backfill_handoff_no_seam_dup_or_gap(spark, tmp_path):
