@@ -9,8 +9,10 @@ queryable through ``spark.sql`` exactly like Athena over Glue.
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
@@ -113,17 +115,100 @@ def recorded_schema(path: str) -> StructType | None:
         return None
 
 
-def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+class Resolved(NamedTuple):
+    """A parquet scan a session has resolved: the analyzed relation,
+    which holds the file listing and the schema. :func:`reuse` hands
+    out new frames over it without resolving the path again."""
+
+    session: SparkSession
+    plan: object  # the analyzed LogicalRelation, on the JVM
+
+
+def resolved(df: DataFrame) -> Resolved:
+    """The resolved scan of ``df``, a frame from ``spark.read...parquet``."""
+    return Resolved(df.sparkSession, df._jdf.queryExecution().analyzed())
+
+
+def reuse(spark: SparkSession, r: Resolved) -> DataFrame | None:
+    """A new frame over the scan ``r``, or None when ``r`` belongs to
+    another session or ``spark`` is stopped. The frame's columns get
+    new attribute ids (``newInstance``), as a second ``spark.read``
+    of the path would: two frames handed out for one table join on
+    Column references without an ambiguous self-join."""
+    if r.session is not spark or spark.sparkContext._jsc is None:
+        return None
+    plan = r.plan.newInstance()
+    return DataFrame(_dataset_class(spark._jvm).ofRows(spark._jsparkSession, plan), spark)
+
+
+@functools.cache
+def _dataset_class(jvm):
+    """Spark's Dataset class: resolving it through the gateway costs a
+    reflection round trip per package name."""
+    return jvm.org.apache.spark.sql.classic.Dataset
+
+
+# The lake's relation store, next to the schema store: the scan a
+# session resolved for a parquet path, so that a repeated read lists no
+# files and builds no relation (the catalog keeps a table's metadata;
+# a query does not work it out again). Keyed on (session, path); an
+# entry holds the path's file version (:func:`_file_version`: size,
+# mtime and inode of the path and of every file under it), and a read
+# whose version differs resolves again and replaces it. Entries of a
+# stopped session are dropped when the next entry is stored.
+_RELATIONS: dict[tuple, tuple] = {}  # (id(session), path) -> (version, schema, Resolved)
+
+
+def _file_version(path: str) -> tuple | None:
+    """(name, size, mtime_ns, inode) of ``path`` and, for a directory,
+    of every file under it; None when one cannot be stat'ed."""
     try:
-        mtime = os.path.getmtime(path)
+        st = os.stat(path)
+        out = [("", st.st_size, st.st_mtime_ns, st.st_ino)]
+        for root, _, files in os.walk(path):  # nothing for a file
+            for f in files:
+                fp = os.path.join(root, f)
+                st = os.stat(fp)
+                out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns, st.st_ino))
     except OSError:
-        return spark.read.parquet(path)  # missing path: surface Spark's error
+        return None
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """The parquet table at ``path`` and its schema, through the
+    relation store, else the schema store (no footer job for a schema
+    the lake knows)."""
+    key = (id(spark), path)
+    version = _file_version(path)
+    if version is None:
+        with _SCHEMA_LOCK:
+            _RELATIONS.pop(key, None)
+        df = spark.read.parquet(path)  # missing path: surface Spark's error
+        return df, df.schema
+    hit = _RELATIONS.get(key)
+    if hit is not None and hit[0] == version:
+        df = reuse(spark, hit[2])
+        if df is not None:
+            return df, hit[1]
+    mtime = os.path.getmtime(path)
     schema = _SCHEMA_CACHE.get((path, mtime))
     if schema is None:
         df = spark.read.parquet(path)
-        _store(path, mtime, df.schema)
-        return df
-    return spark.read.schema(schema).parquet(path)
+        schema = df.schema
+        _store(path, mtime, schema)
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    entry = (version, schema, resolved(df))
+    with _SCHEMA_LOCK:
+        for k in [k for k, e in _RELATIONS.items() if e[2].session.sparkContext._jsc is None]:
+            del _RELATIONS[k]
+        _RELATIONS[key] = entry
+    return df, schema
+
+
+def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+    return _read_parquet(spark, path)[0]
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -141,8 +226,8 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import types as T
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _read_parquet_cached(spark, path)
-    ts_type = df.schema["ts"].dataType
+    df, schema = _read_parquet(spark, path)
+    ts_type = schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(ts_type, T.TimestampNTZType):
@@ -304,7 +389,7 @@ class Lake:
                     # single-file parquet is a file, a written table a dir
                     if not os.path.exists(path):
                         continue
-                    lake.register(zone, table, path, spark.read.parquet(path))
+                    lake.register(zone, table, path, _read_parquet_cached(spark, path))
         finally:
             lake._restoring = False
         lake._save_manifest()
@@ -540,7 +625,9 @@ class Lake:
                 f"principal {principal!r} may not write {zone}.{table}"
             )
         df.write.mode(mode).parquet(path)
-        self.register(zone, table, path, self.spark.read.parquet(path))
+        if mode in ("overwrite", "error", "errorifexists"):  # the files are df's alone
+            record_written(path, df.schema)
+        self.register(zone, table, path, _read_parquet_cached(self.spark, path))
         return path
 
     def delete_table(self, principal: str, zone: str, table: str) -> None:
@@ -626,7 +713,8 @@ class Lake:
         version = self._latest_version(base) + 1
         path = os.path.join(base, f"v={version}")
         df.write.mode("errorifexists").parquet(path)
-        self.register(zone, table, path, self.spark.read.parquet(path))
+        record_written(path, df.schema)
+        self.register(zone, table, path, _read_parquet_cached(self.spark, path))
         return version
 
     def read_version(self, zone: str, table: str, version: int) -> DataFrame:
@@ -692,6 +780,7 @@ class Lake:
             df.write.mode("errorifexists").parquet(
                 os.path.join(zroot, rel)
             )
+            record_written(os.path.join(zroot, rel), df.schema)
             staged[table] = rel
         tmp = os.path.join(cdir, f"_tmp_{txid}.json")
         try:
@@ -725,7 +814,7 @@ class Lake:
                 os.unlink(tmp)
         for table, rel in staged.items():
             path = os.path.join(zroot, rel)
-            self.register(zone, table, path, self.spark.read.parquet(path))
+            self.register(zone, table, path, _read_parquet_cached(self.spark, path))
         return commit_id
 
     def read_published(self, zone: str, table: str) -> DataFrame:

@@ -115,7 +115,7 @@ from typing import NamedTuple as _NamedTuple
 
 from py4j.protocol import Py4JJavaError
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import spread
+from cdk_serverless_data_lake_sandbox_spark.catalog import Resolved, resolved, reuse, spread
 
 _SCRATCH_ROOT = _os.environ.get(
     "SPARK_GRAFT_SCRATCH",
@@ -160,7 +160,14 @@ def vacuum_scratch(root: str | None = None, stale_secs: int | None = None) -> li
 class _Entry(_NamedTuple):
     reads: object  # the frame the build read; confirms a bucket hit
     version: tuple  # (path, size, mtime) of every input file of reads
-    value: object  # scratch: (path, schema, splits); memo: the value
+    value: object  # scratch: a _Written; memo: the value
+
+
+class _Written(_NamedTuple):
+    path: str
+    schema: object
+    splits: int
+    read: Resolved  # the scan of path the split probe resolved
 
 
 # (application, name, semanticHash of reads) -> _Entry
@@ -246,12 +253,12 @@ def scratch(name: str, reads, build, fan_out: bool = True):
     spark = reads.sparkSession
     key, version, hit = _lookup(_MATERIALIZED, name, reads)
     if hit is not None:
-        return _scratch_read(spark, *hit.value, fan_out)
+        return _scratch_read(spark, hit.value, fan_out)
     if key is None:
         return build()
     written = _write(build(), name)
     _record(_MATERIALIZED, key, reads, version, written)
-    return _scratch_read(spark, *written, fan_out)
+    return _scratch_read(spark, written, fan_out)
 
 
 def remember(name: str, reads, compute):
@@ -279,14 +286,14 @@ def materialize(df, fan_out: bool = True):
     dimension-sized intermediate whose consumers are broadcast builds
     or one-row aggregates, the exchange is pure overhead — the fan-out
     exists for CPU-heavy per-row consumers, not for these."""
-    return _scratch_read(df.sparkSession, *_write(df), fan_out)
+    return _scratch_read(df.sparkSession, _write(df), fan_out)
 
 
-def _write(df, name: str = "tmp") -> tuple:
-    """Write ``df`` under this application's scratch directory; return
-    (path, schema, splits). The split count is probed here, once:
-    scratch files are immutable after the write, and the probe plans a
-    physical scan on the Spark driver."""
+def _write(df, name: str = "tmp") -> _Written:
+    """Write ``df`` under this application's scratch directory. The
+    split count is probed here, once: scratch files are immutable after
+    the write, and the probe plans a physical scan on the Spark driver.
+    Every later read reuses the scan the probe resolved."""
     spark = df.sparkSession
     app = spark.sparkContext.applicationId
     app_dir = _os.path.join(_SCRATCH_ROOT, app)
@@ -299,19 +306,22 @@ def _write(df, name: str = "tmp") -> tuple:
     # write-once read-few and deleted at exit — cheap encode beats
     # compression ratio here.
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
-    splits = spark.read.schema(df.schema).parquet(path).rdd.getNumPartitions()
-    return path, df.schema, splits
+    read = spark.read.schema(df.schema).parquet(path)
+    return _Written(path, df.schema, read.rdd.getNumPartitions(), resolved(read))
 
 
-def _scratch_read(spark, path, schema, splits, fan_out: bool = True):
+def _scratch_read(spark, written: _Written, fan_out: bool = True):
     """Scan a scratch intermediate through the one fan-out policy,
     ``catalog.spread``: Spark bin-packs small files into few splits,
     which would serialize every stage consuming the materialized
     frame, so an under-split scan is repartitioned to
     ``defaultParallelism``. At real scale the files split properly and
-    the gate never fires."""
-    out = spark.read.schema(schema).parquet(path)
-    return spread(out, splits) if fan_out else out
+    the gate never fires. The scan is the one the write resolved,
+    unless ``spark`` is another session of the application."""
+    out = reuse(spark, written.read)
+    if out is None:
+        out = spark.read.schema(written.schema).parquet(written.path)
+    return spread(out, written.splits) if fan_out else out
 
 
 def _pins_to_executors(master: str) -> bool:
@@ -362,11 +372,11 @@ class RoundPins:
     def materialize(self, df):
         """:func:`materialize` under every master (state too large for
         executor blocks), reclaiming this loop's old rounds."""
-        path, schema, splits = _write(df, "round")
-        self._written.append(path)
+        written = _write(df, "round")
+        self._written.append(written.path)
         if len(self._written) > 2:
             _shutil.rmtree(self._written.pop(0), ignore_errors=True)
-        return _scratch_read(df.sparkSession, path, schema, splits)
+        return _scratch_read(df.sparkSession, written)
 
 
 def swap_dir(target: str, staged: str) -> None:

@@ -767,6 +767,8 @@ def _kmeans_centroids(e: DataFrame, k: int, iters: int) -> list[tuple[int, list[
         assigned = e.select(
             _kmeans_argmin(cents)["cid"].alias("cid"), "embedding"
         )  # only .cid referenced -> the argmin fold runs once per row
+        # k x d per-dimension means, cast to FLOAT on the executors;
+        # the driver orders them into centroids (no second shuffle)
         rows = (
             assigned.select("cid", F.posexplode_outer("embedding").alias("pos", "val"))
             .where(F.col("val").isNotNull())
@@ -775,17 +777,16 @@ def _kmeans_centroids(e: DataFrame, k: int, iters: int) -> list[tuple[int, list[
                 (
                     F.sum(F.col("val").cast("double").cast("decimal(18,9)")).cast("double")
                     / F.count("*")
-                ).alias("c")
-            )
-            .groupBy("cid")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, c))), x -> CAST(x.c AS FLOAT))"
-                ).alias("ce")
+                )
+                .cast("float")
+                .alias("c")
             )
             .collect()
         )
-        cents = sorted((int(r["cid"]), list(r["ce"])) for r in rows)
+        by_cid: dict[int, list] = {}
+        for cid, pos, c in sorted((int(r["cid"]), r["pos"], r["c"]) for r in rows):
+            by_cid.setdefault(cid, []).append(c)
+        cents = sorted(by_cid.items())
     return cents
 
 

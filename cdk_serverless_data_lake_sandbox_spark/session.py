@@ -83,6 +83,17 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # PySpark's call-site capture, off. When on (the default), every
+        # Column and DataFrame method records the Python caller for error
+        # messages: a class lookup, a conf read, a set and a clear on the
+        # JVM plus a failed IPython import, ~0.7 ms per F.col on 4 vCPUs
+        # (0.24-0.32 ms off), and about half the py4j round trips of a
+        # warm curation round (4,400-4,900 on, 2,200-2,300 off, sf0.01).
+        # Errors keep their class, message and the column, path or value
+        # they name; only the Python "was called from <file>:<line>" of
+        # a run-time error goes. PySpark reads the setting once per
+        # process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     for k, v in (extra_conf or {}).items():

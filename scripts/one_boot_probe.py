@@ -11,8 +11,12 @@ Each process runs one untimed pass over the queries, then three timed
 round-robin passes, and keeps each query's best of three. The queries
 are interleaved, not repeated back to back, so the timed calls see
 whatever the other queries evict from shared caches (keyed scratch,
-the generated-code cache). ``codegen_compiles`` counts the classes
-Spark compiled during a query's timed calls (CodegenMetrics); a warm
+the generated-code cache). Each timed call is split in two:
+``build_s``, building the query's frame on the driver (Python, py4j
+round trips, eager analysis, keyed-scratch lookups), and ``exec_s``,
+running it (``noop`` write); ``s`` is their sum, and all three come
+from the call whose sum is the best. ``codegen_compiles`` counts the
+classes Spark compiled during a query's timed calls (CodegenMetrics); a warm
 query should compile none. ``jobs`` counts the Spark jobs of each
 timed call, tagged with its own job group; every AQE query stage and
 broadcast is one job, so this is the fixed driver cost of a warm call.
@@ -40,8 +44,12 @@ tracker = spark.sparkContext.statusTracker()
 qs = all_queries()
 
 
-def run(name):
-    qs[name](spark, "/root/testdata/sf0.1").write.format("noop").mode("overwrite").save()
+def run(name):  # (build seconds, execution seconds) of one call
+    t0 = time.perf_counter()
+    df = qs[name](spark, "/root/testdata/sf0.1")
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t1
 
 
 for name in names:
@@ -53,15 +61,20 @@ for k in range(3):
     for name in names:
         group = f"{name}#{k}"
         spark.sparkContext.setJobGroup(group, name)
-        c0, t0 = compilation.getCount(), time.perf_counter()
-        run(name)
-        times[name].append(time.perf_counter() - t0)
+        c0 = compilation.getCount()
+        times[name].append(run(name))
         compiles[name] += compilation.getCount() - c0
         jobs[name].append(len(tracker.getJobIdsForGroup(group)))
-out = {
-    n: {"s": round(min(times[n]), 3), "codegen_compiles": compiles[n], "jobs": jobs[n]}
-    for n in names
-}
+out = {}
+for n in names:
+    build_s, exec_s = min(times[n], key=sum)
+    out[n] = {
+        "s": round(build_s + exec_s, 3),
+        "build_s": round(build_s, 3),
+        "exec_s": round(exec_s, 3),
+        "codegen_compiles": compiles[n],
+        "jobs": jobs[n],
+    }
 print("PROBE_RESULT " + json.dumps(out))
 spark.stop()
 """
@@ -99,6 +112,12 @@ def main() -> None:
             n: {
                 "old": min(r[n]["s"] for r in rounds["old"]),
                 "new": min(r[n]["s"] for r in rounds["new"]),
+                "build_s": {
+                    side: [r[n]["build_s"] for r in rs] for side, rs in rounds.items()
+                },
+                "exec_s": {
+                    side: [r[n]["exec_s"] for r in rs] for side, rs in rounds.items()
+                },
                 "codegen_compiles": {
                     side: [r[n]["codegen_compiles"] for r in rs]
                     for side, rs in rounds.items()

@@ -102,6 +102,22 @@ def count_jobs(spark, tag: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def parquet_calls(monkeypatch) -> list:
+    """Every ``DataFrameReader.parquet`` call from now on, by its paths:
+    each one resolves its paths (lists the files, builds a relation)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        calls.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return calls
+
+
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with the driver's view registration."""
     con = duckdb.connect()

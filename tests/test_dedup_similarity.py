@@ -5,9 +5,16 @@ from __future__ import annotations
 
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
-from tests.conftest import SF_MEDIUM
+from tests.conftest import SF_MEDIUM, SF_SMALL, count_jobs
 
 _Q = all_queries()
+
+# A cold Lloyd fit (k=8, 4 rounds) at sf0.001 and sf0.01 ran 9 jobs: the
+# seed collect, then per round the per-(cid, pos) mean aggregate's
+# shuffle stage and its collect. It ran 13 when each round grouped the
+# means by cid again to build the centroid arrays on the executors. The
+# bound adds one job of margin.
+KMEANS_COLD_FIT_MAX_JOBS = 10
 
 
 def _pairs(df, a="a_id", b="b_id"):
@@ -141,6 +148,17 @@ def test_kmeans_deterministic_and_complete(spark):
     ).collect()[0][0]
     assert n_total == corpus  # every vector assigned exactly once
     assert 1 <= len(a) <= 8
+
+
+def test_kmeans_cold_fit_job_budget(spark):
+    from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+    from cdk_serverless_data_lake_sandbox_spark.operators.similarity import _kmeans_centroids
+
+    e = load_tables(spark, SF_SMALL, ("embeddings",))["embeddings"].select("vec_id", "embedding")
+    cents, jobs = count_jobs(spark, "kmeans-fit", lambda: _kmeans_centroids(e, 8, 4))
+    assert jobs <= KMEANS_COLD_FIT_MAX_JOBS
+    assert [cid for cid, _ in cents] == list(range(1, 9))
+    assert len({len(ce) for _, ce in cents}) == 1
 
 
 def test_scalable_quartiles_approximate_exact_ntile(spark):

@@ -34,7 +34,7 @@ from cdk_serverless_data_lake_sandbox_spark.plans import partition_filters, push
 from cdk_serverless_data_lake_sandbox_spark.sources.crawler import CsvClassifier, crawl_delimited
 from cdk_serverless_data_lake_sandbox_spark.sources.kv import KVStore
 
-from tests.conftest import SF_SMALL, count_jobs
+from tests.conftest import SF_SMALL, count_jobs, parquet_calls
 
 _NAME_BASICS_TSV = (
     "nconst\tprimaryName\tbirthYear\tdeathYear\tprimaryProfession\tknownForTitles\n"
@@ -885,6 +885,129 @@ def test_schema_store_keeps_one_version_per_identity_under_threads():
     finally:
         for k in [k for k in catalog._SCHEMA_CACHE if k[0] in identities]:
             del catalog._SCHEMA_CACHE[k]
+
+
+# ---------------------------------------------------------------- relation store
+def test_relation_store_rereads_a_table_rewritten_in_place(spark, tmp_path, monkeypatch):
+    """A file rewritten in place (same name and inode, new size and
+    mtime) is resolved again, whether the table is a single file or a
+    directory whose own mtime the rewrite leaves alone."""
+    import shutil
+
+    lake = str(tmp_path / "lake")
+    os.makedirs(lake)
+    small, big = str(tmp_path / "small"), str(tmp_path / "big")
+    for path, n in ((small, 5), (big, 9)):
+        spark.range(n).selectExpr("id", "id * 2 AS v").coalesce(1).write.parquet(path)
+    (part,) = [f for f in os.listdir(small) if f.endswith(".parquet")]
+    single = os.path.join(lake, "t.parquet")
+    directory = os.path.join(lake, "d.parquet")
+    os.makedirs(directory)
+    dpart = os.path.join(directory, part)  # no .crc sibling to go stale
+    shutil.copyfile(os.path.join(small, part), single)
+    shutil.copyfile(os.path.join(small, part), dpart)
+    calls = parquet_calls(monkeypatch)
+    assert {t: df.count() for t, df in load_tables(spark, lake, ("t", "d")).items()} == {"t": 5, "d": 5}
+    assert {t: df.count() for t, df in load_tables(spark, lake, ("t", "d")).items()} == {"t": 5, "d": 5}
+    assert len(calls) == 2  # the second load reused both scans
+    dir_mtime = os.stat(directory).st_mtime_ns
+    (big_part,) = [f for f in os.listdir(big) if f.endswith(".parquet")]
+    for target in (single, dpart):
+        ino = os.stat(target).st_ino
+        shutil.copyfile(os.path.join(big, big_part), target)
+        assert os.stat(target).st_ino == ino
+    assert os.stat(directory).st_mtime_ns == dir_mtime
+    tables = load_tables(spark, lake, ("t", "d"))
+    assert len(calls) == 4
+    assert {t: sorted(r.v for r in df.collect()) for t, df in tables.items()} == {
+        "t": [2 * i for i in range(9)],
+        "d": [2 * i for i in range(9)],
+    }
+
+
+def test_relation_store_frames_self_join_on_column_references(spark, monkeypatch):
+    """Two frames the store hands out for one table are two scans with
+    their own attribute ids: a join on Column references of both is not
+    an ambiguous self-join, and matches the join of two fresh reads."""
+    path = f"{SF_SMALL}/nation.parquet"
+    load_tables(spark, SF_SMALL, ("nation",))
+    calls = parquet_calls(monkeypatch)
+    a = load_tables(spark, SF_SMALL, ("nation",))["nation"]
+    b = load_tables(spark, SF_SMALL, ("nation",))["nation"]
+    assert calls == []  # both from the store
+
+    def pairs(x, y):
+        joined = x.join(y, x.n_nationkey == y.n_regionkey)
+        return sorted((r[0], r[1]) for r in joined.select(x.n_name, y.n_name).collect())
+
+    want = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    assert len(want) == 25
+    assert pairs(a, b) == want
+
+
+def test_relation_store_never_hands_a_stopped_sessions_frame_to_a_new_one(tmp_path):
+    """In one process: read a table, stop the application, start a new
+    one and read it again. The new read is bound to the new session and
+    runs, and no entry of the stopped session stays in the store."""
+    import subprocess
+    import sys
+
+    script = f"""
+from cdk_serverless_data_lake_sandbox_spark import catalog
+from cdk_serverless_data_lake_sandbox_spark.session import get_spark
+
+conf = {{"spark.driver.memory": "1g", "spark.sql.warehouse.dir": {str(tmp_path / "wh")!r}}}
+old = get_spark(app_name="relation-store-old", extra_conf=conf)
+assert catalog.load_tables(old, {SF_SMALL!r}, ("nation",))["nation"].count() == 25
+old.stop()
+new = get_spark(app_name="relation-store-new", extra_conf=conf)
+assert new is not old
+df = catalog.load_tables(new, {SF_SMALL!r}, ("nation",))["nation"]
+assert df.sparkSession is new
+assert df.count() == 25
+assert [e for e in catalog._RELATIONS.values() if e[2].session is old] == []
+new.stop()
+print("OK")
+"""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("OK"), proc.stderr[-3000:]
+
+
+def test_relation_store_serves_another_session_its_own_scan(spark):
+    """A second session of the application gets a frame bound to
+    itself, never the first session's scan."""
+    load_tables(spark, SF_SMALL, ("nation",))
+    other = spark.newSession()
+    df = load_tables(other, SF_SMALL, ("nation",))["nation"]
+    assert df.sparkSession is other
+    assert df.count() == 25
+
+
+def test_registering_a_table_the_lake_wrote_runs_no_footer_job(spark, tmp_path):
+    """``Lake.write``, ``write_version`` and ``publish_tables`` record
+    what they wrote, so registering the table runs only the write's
+    jobs; reopening the lake registers every table with no job."""
+    df = spark.createDataFrame([(i, f"n{i}") for i in range(20)], "id long, name string")
+    _, plain = count_jobs(spark, "plain-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    root = str(tmp_path / "lake")
+    lake = Lake(spark, root)
+    lake.add_zone("processed")
+    lake.grant("etl", "processed", actions=("write",))
+    _, written = count_jobs(spark, "lake-write", lambda: lake.write("etl", "processed", "t", df))
+    _, versioned = count_jobs(spark, "lake-version", lambda: lake.write_version("processed", "v", df))
+    _, published = count_jobs(
+        spark, "lake-publish", lambda: lake.publish_tables("processed", {"p": df})
+    )
+    assert (written, versioned, published) == (plain, plain, plain)
+    reopened, opened = count_jobs(spark, "lake-open", lambda: Lake.open(spark, root))
+    assert opened == 0
+    assert sorted(reopened.list_tables("processed")) == ["p", "t", "v"]
+    for t in ("p", "t", "v"):
+        assert reopened.table("processed", t).count() == 20
 
 
 # ---------------------------------------------------------------- D9 (dynamic partition overwrite)

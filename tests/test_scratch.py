@@ -19,7 +19,7 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import lake_splits, load_tab
 from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
-from .conftest import SF_SMALL, await_stream_done
+from .conftest import SF_SMALL, await_stream_done, parquet_calls
 
 
 def _rows(df):
@@ -205,3 +205,53 @@ def test_two_corpora_through_one_gate(spark, tmp_path):
         assert want, half
         # exact copies of the corpus half are gone, the other half stays
         assert all((i - 900000) % 2 != half for i in want), (half, want)
+
+
+def test_scratch_hit_reuses_its_scan_until_the_entry_goes(spark, tmp_path, monkeypatch):
+    """A hit returns the scan recorded with its entry (no path is
+    resolved again). An entry that was dropped, or replaced because its
+    input changed, never hands out its old scan: the next call builds
+    and reads the new directory."""
+    from urllib.parse import urlparse
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path)
+    src = {"reads": spark.read.parquet(path)}
+    reads = src["reads"]
+    builds = []
+
+    def build():
+        builds.append(1)
+        return src["reads"].selectExpr("id * 3 AS v")
+
+    def entry_dir():
+        app = spark.sparkContext.applicationId
+        (d,) = [e.value.path for k, e in H._MATERIALIZED.items() if k[:2] == (app, "relscan")]
+        return d
+
+    def read_dirs(df):
+        return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+
+    first = H.scratch("relscan", reads, build, fan_out=False)
+    built = entry_dir()
+    calls = parquet_calls(monkeypatch)
+    hit = H.scratch("relscan", reads, build, fan_out=False)
+    assert calls == [] and len(builds) == 1
+    assert read_dirs(hit) == {built} and _rows(hit) == _rows(first)
+    # a hit is a new scan: it joins the first frame on Column references
+    assert hit.join(first, hit.v == first.v).count() == 10
+
+    key = next(k for k in H._MATERIALIZED if k[1] == "relscan")
+    H._drop(H._MATERIALIZED, key)
+    again = H.scratch("relscan", reads, build, fan_out=False)
+    rebuilt = entry_dir()
+    assert len(builds) == 2 and rebuilt != built and not os.path.exists(built)
+    assert read_dirs(again) == {rebuilt}
+
+    spark.range(4).write.mode("overwrite").parquet(path)  # the input changes
+    src["reads"] = spark.read.parquet(path)
+    changed = H.scratch("relscan", src["reads"], build, fan_out=False)
+    assert len(builds) == 3 and entry_dir() not in (built, rebuilt)
+    assert not os.path.exists(rebuilt)
+    assert read_dirs(changed) == {entry_dir()}
+    assert _rows(changed) == [(0,), (3,), (6,), (9,)]

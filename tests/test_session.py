@@ -9,7 +9,7 @@ import os
 
 from perfbench.workloads import CURATION_MIX
 from pyspark.sql import functions as F
-from tests.conftest import SF_SMALL, count_jobs
+from tests.conftest import SF_SMALL, count_jobs, parquet_calls
 
 from cdk_serverless_data_lake_sandbox_spark.operators.etl import merge_upsert, tsv_to_parquet_job
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
@@ -79,6 +79,17 @@ def test_warm_curation_round_job_budget(spark):
     assert sum(jobs.values()) <= WARM_ROUND_MAX_JOBS, jobs
 
 
+def test_warm_curation_round_resolves_no_parquet_path(spark, monkeypatch):
+    """A warm round reuses the scans the catalog's relation store and
+    keyed scratch already resolved: no ``DataFrameReader.parquet`` call
+    (16 per round when every lake table and scratch hit was read
+    again)."""
+    _curation_round(spark, "reads-0")
+    calls = parquet_calls(monkeypatch)
+    _curation_round(spark, "reads-1")
+    assert calls == []
+
+
 def _ingest_round(spark, root: str, r: int) -> dict[str, int]:
     """Land drop ``r`` the way the ingest benchmark does: the jobs of
     each step, counted by its job group."""
@@ -111,3 +122,32 @@ def test_warm_ingest_round_job_budget(spark, tmp_path):
     _ingest_round(spark, str(tmp_path), 0)
     jobs = _ingest_round(spark, str(tmp_path), 1)
     assert sum(jobs.values()) <= INGEST_ROUND_MAX_JOBS, jobs
+
+
+def test_errors_keep_their_class_and_name_the_failing_input(spark):
+    """The session turns PySpark's call-site capture off, which drops
+    the Python file and line from a run-time error's DataFrame context.
+    A failing query must still raise with its error class and name the
+    column, path or value it failed on."""
+    from pyspark.errors import PySparkException
+
+    from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+
+    nation = load_tables(spark, SF_SMALL, ("nation",))["nation"]
+    missing = os.path.join(SF_SMALL, "no_such_dir")
+    failures = {
+        "UNRESOLVED_COLUMN.WITH_SUGGESTION": ("`n_nam`", lambda: nation.select(F.col("n_nam"))),
+        "PATH_NOT_FOUND": (missing, lambda: load_tables(spark, missing, ("nation",))),
+        "CAST_INVALID_INPUT": (
+            "'NATION_0'",
+            lambda: nation.where("n_nationkey = 0").select(F.col("n_name").cast("int")).collect(),
+        ),
+    }
+    for condition, (named, fail) in failures.items():
+        try:
+            fail()
+        except PySparkException as e:
+            assert e.getCondition() == condition, str(e)[:500]
+            assert named in str(e), str(e)[:500]
+        else:
+            raise AssertionError(f"{condition}: nothing raised")
