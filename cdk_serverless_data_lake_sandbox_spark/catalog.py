@@ -13,7 +13,10 @@ import functools
 import os
 import threading
 from typing import NamedTuple
+from urllib.parse import unquote, urlsplit
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
@@ -35,6 +38,59 @@ class AccessDenied(Exception):
     """A governed read without a covering grant (catalog ACL)."""
 
 
+def table_version(path: str) -> tuple | None:
+    """The version of the table at ``path`` (a file or a directory
+    tree): the one answer the schema store, the relation store and
+    keyed scratch give to "has this table changed?", as a Glue table
+    gets a new version on every ``UpdateTable``. It is the sorted
+    (relative name, size, mtime, ...) of ``path`` and of every file
+    under it, so a file rewritten in place, whose directory's own mtime
+    does not move, still gives a new version.
+
+    A plain path or a ``file:`` URI is stat'ed through ``os``
+    (mtime_ns and inode; no JVM call). Any other scheme (``s3a:``,
+    ``hdfs:``) is listed through its Hadoop FileSystem
+    (:func:`_hadoop_version`). None when the tree cannot be stat'ed."""
+    url = urlsplit(path)
+    if url.scheme not in ("", "file"):
+        return _hadoop_version(path)
+    root = unquote(url.path) if url.scheme else path
+    try:
+        st = os.stat(root)
+        out = [("", st.st_size, st.st_mtime_ns, st.st_ino)]
+        for d, _, files in os.walk(root):  # nothing for a file
+            for f in files:
+                fp = os.path.join(d, f)
+                st = os.stat(fp)
+                out.append((os.path.relpath(fp, root), st.st_size, st.st_mtime_ns, st.st_ino))
+    except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def _hadoop_version(path: str) -> tuple | None:
+    """:func:`table_version` through the Hadoop FileSystem of
+    ``path``'s scheme: the sorted (name relative to ``path``, size,
+    mtime in ms) of every file of the tree, or None when no Spark
+    application runs or the tree cannot be listed. A recursive listing
+    costs about six JVM round trips per file."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return None
+    try:
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+        root = fs.makeQualified(p).toString()
+        files = fs.listFiles(p, True)  # a file lists itself
+        out = []
+        while files.hasNext():
+            f = files.next()
+            out.append((f.getPath().toString()[len(root):], f.getLen(), f.getModificationTime()))
+    except Py4JJavaError:
+        return None
+    return tuple(sorted(out))
+
+
 # The lake's schema store — the Glue-catalog analog of a table's
 # registered schema, so that no read re-derives what the lake already
 # knows. Without it every ``spark.read.parquet`` fires a one-task
@@ -43,15 +99,16 @@ class AccessDenied(Exception):
 # at sf0.1; at production scale the same jobs list object-store
 # prefixes, which is why Glue keeps schemas in the catalog instead of
 # re-crawling per query — optimization guide §6 "file listing" / §7.3
-# driver-side work). Keys are (identity, version):
+# driver-side work). Keys are (identity, :func:`table_version` of the
+# input):
 #
-# - (parquet directory, its mtime): recorded by the first footer read
+# - a parquet table's path: recorded by the first footer read
 #   (:func:`_read_parquet_cached`) or by the writer that just wrote the
-#   directory (:func:`record_written`);
-# - ((path, delimiter, quote, use_header, sample_rows), (path, size,
-#   mtime) of every input file): a delimited crawl's sampled inference
-#   (``sources.crawler.crawl_delimited``), so the ETL job reuses the
-#   schema the crawler just inferred for the same drop.
+#   table (:func:`record_written`);
+# - (path, delimiter, quote, use_header, sample_rows): a delimited
+#   crawl's sampled inference (``sources.crawler.crawl_delimited``), so
+#   the ETL job reuses the schema the crawler just inferred for the
+#   same drop.
 #
 # A rewritten input has a new version and misses; storing it drops the
 # identity's older versions, so the store holds one entry per table or
@@ -95,24 +152,20 @@ def _as_nullable(t):
 
 
 def record_written(path: str, schema: StructType) -> None:
-    """Record that the parquet directory ``path`` was just written from
-    a frame of ``schema``, so the next read of it runs no footer job.
-    The entry is keyed on the directory's mtime after the write, and
+    """Record that the parquet table ``path`` was just written from a
+    frame of ``schema``, so the next read of it runs no footer job.
+    The entry is keyed on the table's version after the write, and
     holds what a footer read returns: the same fields, all nullable."""
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        return
-    _store(path, mtime, _as_nullable(schema))
+    version = table_version(path)
+    if version is not None:
+        _store(path, version, _as_nullable(schema))
 
 
 def recorded_schema(path: str) -> StructType | None:
-    """The stored schema of the parquet directory ``path`` as it is
-    now, or None."""
-    try:
-        return _SCHEMA_CACHE.get((path, os.path.getmtime(path)))
-    except OSError:
-        return None
+    """The stored schema of the parquet table ``path`` as it is now,
+    or None."""
+    version = table_version(path)
+    return None if version is None else _SCHEMA_CACHE.get((path, version))
 
 
 class Resolved(NamedTuple):
@@ -152,35 +205,18 @@ def _dataset_class(jvm):
 # session resolved for a parquet path, so that a repeated read lists no
 # files and builds no relation (the catalog keeps a table's metadata;
 # a query does not work it out again). Keyed on (session, path); an
-# entry holds the path's file version (:func:`_file_version`: size,
-# mtime and inode of the path and of every file under it), and a read
-# whose version differs resolves again and replaces it. Entries of a
+# entry holds the :func:`table_version` it was resolved at, and a read
+# at another version resolves again and replaces it. Entries of a
 # stopped session are dropped when the next entry is stored.
 _RELATIONS: dict[tuple, tuple] = {}  # (id(session), path) -> (version, schema, Resolved)
-
-
-def _file_version(path: str) -> tuple | None:
-    """(name, size, mtime_ns, inode) of ``path`` and, for a directory,
-    of every file under it; None when one cannot be stat'ed."""
-    try:
-        st = os.stat(path)
-        out = [("", st.st_size, st.st_mtime_ns, st.st_ino)]
-        for root, _, files in os.walk(path):  # nothing for a file
-            for f in files:
-                fp = os.path.join(root, f)
-                st = os.stat(fp)
-                out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns, st.st_ino))
-    except OSError:
-        return None
-    return tuple(sorted(out))
 
 
 def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
     """The parquet table at ``path`` and its schema, through the
     relation store, else the schema store (no footer job for a schema
-    the lake knows)."""
+    the lake knows). Both are keyed on one :func:`table_version`."""
     key = (id(spark), path)
-    version = _file_version(path)
+    version = table_version(path)
     if version is None:
         with _SCHEMA_LOCK:
             _RELATIONS.pop(key, None)
@@ -191,12 +227,11 @@ def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType
         df = reuse(spark, hit[2])
         if df is not None:
             return df, hit[1]
-    mtime = os.path.getmtime(path)
-    schema = _SCHEMA_CACHE.get((path, mtime))
+    schema = _SCHEMA_CACHE.get((path, version))
     if schema is None:
         df = spark.read.parquet(path)
         schema = df.schema
-        _store(path, mtime, schema)
+        _store(path, version, schema)
     else:
         df = spark.read.schema(schema).parquet(path)
     entry = (version, schema, resolved(df))
@@ -225,8 +260,19 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df, schema = _read_parquet(spark, path)
+    # Spark takes nanosAsLong from the session conf only (no reader
+    # option), and only while it resolves the schema: the resolved scan
+    # keeps reading ``ts`` as bigint once the caller's value is back.
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(nanos, None)
+    spark.conf.set(nanos, "true")
+    try:
+        df, schema = _read_parquet(spark, path)
+    finally:
+        if prior is None:
+            spark.conf.unset(nanos)
+        else:
+            spark.conf.set(nanos, prior)
     ts_type = schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

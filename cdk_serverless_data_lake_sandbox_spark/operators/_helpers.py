@@ -97,25 +97,28 @@ def sql_round_rat(num_sql: str, den_sql: str, dp: int, wide: bool = False) -> st
 # build reads (bucketed on ``semanticHash()``, confirmed with
 # ``sameSemantics()`` — the rule Spark's CacheManager applies), so two
 # sf_dirs, a filtered corpus and an in-memory corpus each get their own
-# entry without a hand-made key. Each entry also records the content
-# version of ``reads``: (path, size, mtime) of every input file, read
-# through Hadoop's FileSystem. A lookup whose version differs rebuilds,
-# and the rebuilt entry replaces every entry of the same name that
-# recorded another state of the directories it read (their scratch
-# directories are deleted). An input whose version cannot be
-# read is a miss, never a hit, and its build is returned unwritten.
-# Driver-side values derived from the same inputs (:func:`remember`)
-# go through the same key into one sibling memo.
+# entry without a hand-made key. Each entry also records the version of
+# ``reads``: each input file's path with its ``catalog.table_version``,
+# the version the schema and relation stores key on. A lookup whose
+# version differs rebuilds, and the rebuilt entry replaces every entry
+# of the same name that recorded another state of the directories it
+# read (their scratch directories are deleted). An input whose version
+# cannot be read is a miss, never a hit, and its build is returned
+# unwritten. Driver-side values derived from the same inputs
+# (:func:`remember`) go through the same key into one sibling memo.
 import atexit as _atexit
-import functools as _functools
 import os as _os
 import shutil as _shutil
 import uuid as _uuid
 from typing import NamedTuple as _NamedTuple
 
-from py4j.protocol import Py4JJavaError
-
-from cdk_serverless_data_lake_sandbox_spark.catalog import Resolved, resolved, reuse, spread
+from cdk_serverless_data_lake_sandbox_spark.catalog import (
+    Resolved,
+    resolved,
+    reuse,
+    spread,
+    table_version,
+)
 
 _SCRATCH_ROOT = _os.environ.get(
     "SPARK_GRAFT_SCRATCH",
@@ -159,7 +162,7 @@ def vacuum_scratch(root: str | None = None, stale_secs: int | None = None) -> li
 
 class _Entry(_NamedTuple):
     reads: object  # the frame the build read; confirms a bucket hit
-    version: tuple  # (path, size, mtime) of every input file of reads
+    version: tuple  # (path, table_version(path)) of every input file of reads
     value: object  # scratch: a _Written; memo: the value
 
 
@@ -175,40 +178,16 @@ _MATERIALIZED: dict[tuple, _Entry] = {}
 _MEMO: dict[tuple, _Entry] = {}
 
 
-def _input_version(reads) -> tuple | None:
-    """(path, size, mtime) of every input file of ``reads``, read
-    through the Hadoop FileSystem of each path (file:, hdfs:, s3a:
-    alike), or None when one of them cannot be stat'ed."""
-    spark = reads.sparkSession
-    conf = spark._jsc.hadoopConfiguration()
-    path_cls = _hadoop_path(spark._jvm)
-    out = []
-    try:
-        for f in sorted(reads.inputFiles()):
-            p = path_cls(f)
-            st = p.getFileSystem(conf).getFileStatus(p)
-            out.append((f, st.getLen(), st.getModificationTime()))
-    except Py4JJavaError:
-        return None
-    return tuple(out)
-
-
-@_functools.cache
-def _hadoop_path(jvm):
-    """Hadoop's Path class: resolving it through the gateway costs a
-    reflection round trip (~1.4 ms), more than the stat itself."""
-    return jvm.org.apache.hadoop.fs.Path
-
-
 def _lookup(store: dict, name: str, reads) -> tuple:
     """The one keyed lookup behind :func:`scratch` and
     :func:`remember`: (key, version, hit entry or None). ``key`` is
-    None when a miss must not be recorded: the input version cannot be
-    read, or the hash bucket holds another plan."""
+    None when a miss must not be recorded: the version of an input
+    file cannot be read, or the hash bucket holds another plan."""
     key = (reads.sparkSession.sparkContext.applicationId, name, reads.semanticHash())
-    version = _input_version(reads)
+    version = tuple((f, table_version(f)) for f in sorted(reads.inputFiles()))
     old = store.get(key)
-    if version is None or (old is not None and not reads.sameSemantics(old.reads)):
+    unreadable = any(v is None for _, v in version)
+    if unreadable or (old is not None and not reads.sameSemantics(old.reads)):
         return None, version, None
     return key, version, old if old is not None and old.version == version else None
 

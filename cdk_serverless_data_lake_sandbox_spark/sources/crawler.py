@@ -29,8 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StringType, StructType
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import schema_for
-from cdk_serverless_data_lake_sandbox_spark.operators._helpers import _input_version
+from cdk_serverless_data_lake_sandbox_spark.catalog import schema_for, table_version
 
 
 @dataclass(frozen=True)
@@ -110,14 +109,15 @@ def crawl_delimited(
 
     Each inference is kept in the catalog's schema store
     (:func:`~cdk_serverless_data_lake_sandbox_spark.catalog.schema_for`),
-    keyed on the (path, size, mtime) of every input file, stat'ed
-    through the Hadoop FileSystem, plus the delimiter, quote, header
-    setting and ``sample_rows``. Crawling the same unchanged files
-    again (the ETL job after the crawler, say) runs no inference job
-    and builds no sample; a file rewritten in place is inferred again,
-    and a path that cannot be stat'ed always is. An ``UNKNOWN`` crawl
-    runs the same first inference as a ``PRESENT`` one, so either
-    reuses the other's.
+    keyed on the path's
+    :func:`~cdk_serverless_data_lake_sandbox_spark.catalog.table_version`
+    plus the delimiter, quote, header setting and ``sample_rows``.
+    Crawling the same unchanged files again (the ETL job after the
+    crawler, say) runs no inference job and builds no sample; a file
+    rewritten in place is inferred again, and a path that cannot be
+    stat'ed (a glob) always is. An ``UNKNOWN`` crawl runs the same
+    first inference as a ``PRESENT`` one, so either reuses the
+    other's.
 
     A type that only widens past the sample horizon (e.g. ints that
     become floats after row 10k) fails to parse on those rows. The
@@ -136,7 +136,7 @@ def crawl_delimited(
         header = classifier.contains_header
         delimiter, quote = classifier.delimiter, classifier.quote_symbol
     sample = _sample_lines(spark, path, sample_rows)
-    version = _input_version(sample)
+    version = table_version(path)
     cached = []
 
     def infer(use_header: bool) -> StructType:

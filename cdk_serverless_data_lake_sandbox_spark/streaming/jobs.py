@@ -1239,19 +1239,14 @@ def stream_cms_monitor(stream: DataFrame, cells_dir: str):
     )
 
     def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                cms_cells(word_counts(batch))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(cells_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        (
+            cms_cells(word_counts(batch))
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(cells_dir)
+        )
 
     return (
         stream.writeStream.outputMode("append")
@@ -1335,24 +1330,20 @@ def stream_ivf_ingest(stream: DataFrame, index_dir: str):
                 F.first("embedding").alias("embedding"),
             )
         )
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                assign.select(
-                    "vec_id",
-                    "embedding",
-                    _norm("embedding").alias("nrm"),
-                    F.lit(batch_id).alias("batch_id"),
-                    "cell",
-                )
-                .repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("batch_id", "cell")
-                .parquet(members_dir)
+        (
+            assign.select(
+                "vec_id",
+                "embedding",
+                _norm("embedding").alias("nrm"),
+                F.lit(batch_id).alias("batch_id"),
+                "cell",
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+            .repartition("cell")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", "cell")
+            .parquet(members_dir)
+        )
 
     return (
         stream.writeStream.outputMode("append")
@@ -1379,30 +1370,25 @@ def stream_hll_monitor(stream: DataFrame, registers_dir: str):
     )
 
     def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch.select(
-                    "event_type",
-                    _hll_hash_spark("CAST(user_id AS STRING)").alias("hv"),
-                )
-                .select(
-                    "event_type",
-                    (F.col("hv") % _HLL_M).alias("bucket"),
-                    F.expr(f"hv div {_HLL_M}").alias("w"),
-                )
-                .withColumn("rho", F.expr(_RHO_SQL))
-                .groupBy("event_type", "bucket")
-                .agg(F.max("rho").alias("m_j"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(registers_dir)
+        (
+            batch.select(
+                "event_type",
+                _hll_hash_spark("CAST(user_id AS STRING)").alias("hv"),
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+            .select(
+                "event_type",
+                (F.col("hv") % _HLL_M).alias("bucket"),
+                F.expr(f"hv div {_HLL_M}").alias("w"),
+            )
+            .withColumn("rho", F.expr(_RHO_SQL))
+            .groupBy("event_type", "bucket")
+            .agg(F.max("rho").alias("m_j"))
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(registers_dir)
+        )
 
     return (
         stream.writeStream.outputMode("append")
@@ -1438,19 +1424,14 @@ def stream_baseline_monitor(stream: DataFrame, cells_dir: str):
     from cdk_serverless_data_lake_sandbox_spark.operators.events import hourly_cells
 
     def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                hourly_cells(batch)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(cells_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        (
+            hourly_cells(batch)
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(cells_dir)
+        )
 
     return (
         stream.writeStream.outputMode("append")
@@ -1547,28 +1528,24 @@ def stream_image_dedup_gate(
             )
         fresh = sigs if dup_ids is None else sigs.join(dup_ids, "doc_id", "left_anti")
         admitted = batch.join(fresh.select("doc_id"), "doc_id", "left_semi")
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            admitted.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(os.path.join(out_dir, "admitted"))
-            (
-                fresh.select(
-                    "doc_id", "dhash",
-                    F.explode(F.expr(f"array({chunk_expr})")).alias("b"),
-                )
-                .select(
-                    "doc_id", "dhash",
-                    F.col("b.chunk").alias("chunk"), F.col("b.key").alias("key"),
-                    F.lit(batch_id).alias("batch_id"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(idx_path)
+        admitted.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(os.path.join(out_dir, "admitted"))
+        (
+            fresh.select(
+                "doc_id", "dhash",
+                F.explode(F.expr(f"array({chunk_expr})")).alias("b"),
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+            .select(
+                "doc_id", "dhash",
+                F.col("b.chunk").alias("chunk"), F.col("b.key").alias("key"),
+                F.lit(batch_id).alias("batch_id"),
+            )
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(idx_path)
+        )
 
     return (
         stream.writeStream.outputMode("append")
@@ -1645,17 +1622,12 @@ def stream_graph_edges(stream: DataFrame, graph_dir: str):
             deltas = within.unionByName(cross).unionByName(
                 cross.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            deltas.distinct().withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(os.path.join(graph_dir, "edges"))
-            lp_new.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(lp_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        deltas.distinct().withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(os.path.join(graph_dir, "edges"))
+        lp_new.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(lp_dir)
 
     return (
         stream.writeStream.outputMode("append")
@@ -1717,24 +1689,19 @@ def stream_key_erasure(
             "file", "pos"
         )
         hits = hits.localCheckpoint()
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            hits.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(os.path.join(table_path, "_dv"))
-            # audit rows share the batch_id-partition dynamic-overwrite
-            # discipline: a crash replay re-overwrites its own row
-            # instead of appending a duplicate to the compliance log
-            audit = spark.createDataFrame(
-                [(keys.count(), hits.count(), batch_id)],
-                "n_keys long, n_positions long, batch_id long",
-            )
-            audit.coalesce(1).write.mode("overwrite").partitionBy(
-                "batch_id"
-            ).parquet(os.path.join(table_path, "_erasure_audit"))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        hits.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(os.path.join(table_path, "_dv"))
+        # audit rows share the batch_id-partition dynamic-overwrite
+        # discipline: a crash replay re-overwrites its own row
+        # instead of appending a duplicate to the compliance log
+        audit = spark.createDataFrame(
+            [(keys.count(), hits.count(), batch_id)],
+            "n_keys long, n_positions long, batch_id long",
+        )
+        audit.coalesce(1).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(os.path.join(table_path, "_erasure_audit"))
 
     return (
         requests.writeStream.outputMode("append")
@@ -2685,23 +2652,14 @@ def stream_source_tvd_monitor(stream: DataFrame, counts_dir: str):
             source_word_counts,
         )
 
-        spark = batch.sparkSession
-        prior = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        (
+            source_word_counts(batch.dropDuplicates(["doc_id"]))
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(counts_dir)
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                source_word_counts(batch.dropDuplicates(["doc_id"]))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(counts_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prior
-            )
 
     return (
         stream.writeStream.outputMode("append")

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from cdk_serverless_data_lake_sandbox_spark.catalog import (
     _SCHEMA_CACHE,
     Lake,
+    _hadoop_version,
+    _read_parquet_cached,
     load_tables,
     record_written,
     recorded_schema,
@@ -891,8 +893,12 @@ def test_schema_store_keeps_one_version_per_identity_under_threads():
 def test_relation_store_rereads_a_table_rewritten_in_place(spark, tmp_path, monkeypatch):
     """A file rewritten in place (same name and inode, new size and
     mtime) is resolved again, whether the table is a single file or a
-    directory whose own mtime the rewrite leaves alone."""
+    directory whose own mtime the rewrite leaves alone; a rewrite that
+    changes the schema reads the new schema, not a stored one."""
     import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -923,6 +929,52 @@ def test_relation_store_rereads_a_table_rewritten_in_place(spark, tmp_path, monk
         "t": [2 * i for i in range(9)],
         "d": [2 * i for i in range(9)],
     }
+
+    changed = str(tmp_path / "changed")
+    os.makedirs(changed)
+    cpart = os.path.join(changed, "part-0.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), cpart)
+    assert _read_parquet_cached(spark, changed).columns == ["a", "b"]
+    dir_mtime = os.stat(changed).st_mtime_ns
+    pq.write_table(pa.table({"a": [3, 4], "c": [7.0, 8.0]}), cpart)
+    assert os.stat(changed).st_mtime_ns == dir_mtime
+    df = _read_parquet_cached(spark, changed)
+    assert df.columns == ["a", "c"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, 7.0), (4, 8.0)]
+
+
+def test_relation_and_schema_stores_serve_a_file_uri_like_a_plain_path(spark, tmp_path, monkeypatch):
+    """A ``file:`` URI has a table version: a second read of it resolves
+    nothing, and the schema a writer records under it is found again."""
+    uri = (tmp_path / "uri_table").as_uri()
+    df = spark.range(6).selectExpr("id", "id * 2 AS v")
+    df.write.parquet(uri)
+    record_written(uri, df.schema)
+    assert recorded_schema(uri) == spark.read.parquet(uri).schema
+    calls = parquet_calls(monkeypatch)
+    assert _read_parquet_cached(spark, uri).count() == 6
+    assert len(calls) == 1
+    assert _read_parquet_cached(spark, uri).count() == 6
+    assert len(calls) == 1
+
+
+def test_hadoop_table_version_sees_a_file_rewritten_in_place(spark, tmp_path):
+    """The Hadoop FileSystem branch of ``table_version`` (the one that
+    runs on ``s3a:`` and ``hdfs:``), called on a ``file:`` URI: a file
+    rewritten in place, in a directory whose mtime stays, is a new
+    version, and a path that does not exist has none."""
+    d = tmp_path / "hv"
+    spark.range(5).coalesce(1).write.parquet(str(d))
+    (part,) = [p for p in d.iterdir() if p.name.endswith(".parquet")]
+    st = part.stat()
+    assert _hadoop_version(part.as_uri()) == (("", st.st_size, st.st_mtime_ns // 1_000_000),)
+    before = _hadoop_version(d.as_uri())
+    assert ("/" + part.name, st.st_size, st.st_mtime_ns // 1_000_000) in before
+    dir_mtime = d.stat().st_mtime_ns
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))  # same size
+    assert d.stat().st_mtime_ns == dir_mtime
+    assert _hadoop_version(d.as_uri()) != before
+    assert _hadoop_version((tmp_path / "missing").as_uri()) is None
 
 
 def test_relation_store_frames_self_join_on_column_references(spark, monkeypatch):

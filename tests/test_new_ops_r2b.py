@@ -27,7 +27,9 @@ def test_events_loader_handles_both_ts_encodings(spark, tmp_path, unit):
     TimestampType) and as TIMESTAMP(MICROS) (which reads back as
     TIMESTAMP_NTZ and breaks ``unix_micros`` / interval arithmetic
     downstream). ``load_tables`` must normalize BOTH to the
-    session-zoned TimestampType with identical values."""
+    session-zoned TimestampType with identical values, and leave the
+    session's conf as it found it: the values are collected after the
+    nanos read's conf is restored."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -47,7 +49,9 @@ def test_events_loader_handles_both_ts_encodings(spark, tmp_path, unit):
     d = tmp_path / unit
     os.makedirs(d)
     pq.write_table(table, str(d / "events.parquet"))
+    conf = spark.conf.getAll
     ev = load_tables(spark, str(d), ("events",))["events"]
+    assert spark.conf.getAll == conf
     assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
     got = ev.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()
     want = [int(t.value // 1000) for t in ts]

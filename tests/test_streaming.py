@@ -1795,3 +1795,65 @@ def test_stream_tokenize_gate_matches_batch_apply(spark, tmp_path):
     )
     assert got == want
     assert run("b") == got
+
+
+def test_table_loads_and_dynamic_overwrite_sinks_leave_the_session_conf_as_found(spark, tmp_path):
+    """Loading every table, and one micro-batch of each sink that
+    overwrites its batch's partition dynamically, leave the session's
+    conf exactly as found: the overwrite mode is a per-write option,
+    and the events loader restores the conf it reads nanos with."""
+    from cdk_serverless_data_lake_sandbox_spark.operators.multimodal import attach_image_variants
+    from cdk_serverless_data_lake_sandbox_spark.streaming.jobs import (
+        DOCS_STREAM_SCHEMA,
+        stream_baseline_monitor,
+        stream_cms_monitor,
+        stream_graph_edges,
+        stream_hll_monitor,
+        stream_image_dedup_gate,
+        stream_ivf_ingest,
+        stream_key_erasure,
+        stream_source_tvd_monitor,
+    )
+
+    conf = spark.conf.getAll
+    t = load_tables(spark, SF_SMALL)
+    assert spark.conf.getAll == conf
+
+    def written(name, df):
+        path = str(tmp_path / name)
+        df.coalesce(1).write.parquet(path)
+        return path
+
+    def one_batch(name, df):
+        return spark.readStream.schema(df.schema).parquet(written(name, df))
+
+    docs = t["documents"].select(*DOCS_STREAM_SCHEMA.fieldNames()).limit(30)
+    events = written("events", t["events"].limit(200))
+    orders = written("orders", t["orders"].select("o_orderkey", "o_custkey"))
+    sinks = [
+        lambda: stream_cms_monitor(one_batch("cms_in", docs), str(tmp_path / "cms")),
+        lambda: stream_ivf_ingest(
+            one_batch("ivf_in", t["embeddings"].select("vec_id", "embedding").limit(20)),
+            str(tmp_path / "ivf"),
+        ),
+        lambda: stream_hll_monitor(read_event_stream(spark, events), str(tmp_path / "hll")),
+        lambda: stream_baseline_monitor(read_event_stream(spark, events), str(tmp_path / "base")),
+        lambda: stream_image_dedup_gate(
+            one_batch("img_in", attach_image_variants(docs.limit(6)).select("doc_id", "media")),
+            str(tmp_path / "img"),
+            str(tmp_path / "img_idx"),
+        ),
+        lambda: stream_graph_edges(
+            one_batch("li_in", t["lineitem"].select("l_orderkey", "l_partkey").limit(50)),
+            str(tmp_path / "graph"),
+        ),
+        lambda: stream_key_erasure(
+            one_batch("req_in", t["orders"].select("o_orderkey").limit(3)), orders, "o_orderkey"
+        ),
+        lambda: stream_source_tvd_monitor(one_batch("tvd_in", docs), str(tmp_path / "tvd")),
+    ]
+    for start in sinks:
+        await_stream_done(start())
+    assert spark.conf.getAll == conf
+    for out in ("cms", "ivf/members", "hll", "base", "img/admitted", "graph/edges", "orders/_dv", "tvd"):
+        assert spark.read.parquet(str(tmp_path / out)).count() > 0, out
