@@ -292,74 +292,67 @@ def _size_bytes(v: str) -> int:
     return int(s)
 
 
-def under_split(splits: int | None, par: int) -> bool:
+def _under_split(splits: int, par: int) -> bool:
     """The fan-out gate: True when an input scans in fewer than
-    ``max(par // 2, 2)`` splits on a cluster of ``par`` cores.
-    ``None`` (split count unknown: multi-file dir or remote path)
-    counts as splittable. The floor of 2 keeps the gate live on 2- and
-    3-core hosts, where ``par // 2`` would never exceed one split."""
-    return splits is not None and splits < max(par // 2, 2)
+    ``max(par // 2, 2)`` splits on a cluster of ``par`` cores. The
+    floor of 2 keeps the gate live on 2- and 3-core hosts, where
+    ``par // 2`` would never exceed one split."""
+    return splits < max(par // 2, 2)
 
 
-def lake_splits(spark: SparkSession, sf_dir: str, table: str) -> int | None:
-    """Split-count estimate for ``table``'s single parquet file, from
-    its size and ``maxPartitionBytes`` — no scan is planned. ``None``
-    when the table is not one local file (multi-file dir or remote)."""
+def _table_path(sf_dir: str, table: str) -> str:
+    """Where lake table ``table`` lives under ``sf_dir``."""
+    return os.path.join(sf_dir, f"{table}.parquet")
+
+
+def spread(df: DataFrame, sf_dir: str, table: str, *keys: str) -> DataFrame:
+    """The one fan-out entry point: ``df``, a frame over lake table
+    ``table`` under ``sf_dir``, repartitioned to ``defaultParallelism``
+    when the table's file is under-split (:func:`_under_split`),
+    hashing on ``keys`` when given so a downstream join or aggregate on
+    them reuses the partitioning; otherwise ``df`` unchanged.
+
+    Lake tables fan out where ``spread`` is called, and nowhere else:
+    scratch intermediates are read back as written. Parquet
+    parallelism is capped by row-group count, and the sandbox tables
+    are one row group per file, so their scans run as one task whatever
+    the split config says. The split count is estimated from the file's
+    size and ``maxPartitionBytes``: asking ``df`` for its partition
+    count would plan a physical scan on the Spark driver. Only a table
+    stored as one local file is estimated; any other table (a directory
+    of part files, a remote URI, a missing path) is left alone. At real
+    scale tables split properly and the plan is unchanged."""
+    spark = df.sparkSession
     max_split = _size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        return None
-    return max(1, size // max_split)
-
-
-def spread(df: DataFrame, splits: int | None, *keys: str) -> DataFrame:
-    """The one fan-out policy: repartition ``df`` to
-    ``defaultParallelism`` when its input is under-split
-    (:func:`under_split`), hashing on ``keys`` when given so a
-    downstream join or aggregate on them reuses the partitioning;
-    otherwise return ``df`` unchanged.
-
-    Parquet parallelism is capped by row-group count, and the sandbox
-    tables and small scratch intermediates are one row group per file,
-    so their scans run as one task whatever the split config says.
-    ``splits`` comes from :func:`lake_splits` for lake tables or from
-    the probe taken once when a scratch intermediate is written
-    (``_helpers._write``);
-    never from a per-call ``df.rdd.getNumPartitions()``, which plans a
-    physical scan on the Spark driver. At real scale inputs split
-    properly and the plan is unchanged."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *keys) if under_split(splits, par) else df
+    path = _table_path(sf_dir, table)
+    if not os.path.isfile(path):
+        return df
+    size = os.path.getsize(path)
+    splits = max(1, size // max_split)
+    par = spark.sparkContext.defaultParallelism
+    return df.repartition(par, *keys) if _under_split(splits, par) else df
 
 
 def load_tables(
     spark: SparkSession,
     sf_dir: str,
     names: tuple[str, ...] = ALL_TABLES,
-    fan_out: tuple[str, ...] = (),
 ) -> dict[str, DataFrame]:
-    """Load the driver's parquet tables as DataFrames keyed by name.
-
-    ``fan_out`` names tables whose scan goes through :func:`spread`
-    with the :func:`lake_splits` byte estimate: an under-split file is
-    repartitioned round-robin to ``defaultParallelism``, a splittable
-    one keeps the classic scan plan. Only callers whose downstream work
-    is CPU-heavy per row opt in — for a scan feeding a shuffle join or
-    a cheap map-side aggregate the extra exchange is pure loss."""
+    """Load the driver's parquet tables as DataFrames keyed by name,
+    each a plain scan. A caller whose downstream work is CPU-heavy per
+    row fans a table out with :func:`spread`; for a scan feeding a
+    shuffle join or a cheap map-side aggregate the extra exchange is
+    pure loss."""
     out: dict[str, DataFrame] = {}
     for t in names:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        df = (
+        path = _table_path(sf_dir, t)
+        out[t] = (
             _read_events(spark, path)
             if t == "events"
             else _read_parquet_cached(spark, path)
         )
-        if t in fan_out:
-            df = spread(df, lake_splits(spark, sf_dir, t))
-        out[t] = df
     return out
 
 

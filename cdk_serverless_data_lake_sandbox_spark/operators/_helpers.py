@@ -116,7 +116,6 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import (
     Resolved,
     resolved,
     reuse,
-    spread,
     table_version,
 )
 
@@ -169,8 +168,7 @@ class _Entry(_NamedTuple):
 class _Written(_NamedTuple):
     path: str
     schema: object
-    splits: int
-    read: Resolved  # the scan of path the split probe resolved
+    read: Resolved  # the scan of path the write resolved
 
 
 # (application, name, semanticHash of reads) -> _Entry
@@ -220,7 +218,7 @@ def _drop(store: dict, key: tuple) -> None:
         _shutil.rmtree(e.value[0], ignore_errors=True)
 
 
-def scratch(name: str, reads, build, fan_out: bool = True):
+def scratch(name: str, reads, build):
     """Keyed scratch: the frame ``build()`` returns, written once per
     (application, ``name``, identity and version of ``reads``) and
     re-scanned on every later call. ``reads`` is the frame the build
@@ -228,16 +226,17 @@ def scratch(name: str, reads, build, fan_out: bool = True):
     carries their parameters. On a hit ``build`` never runs (eager
     builders such as k-means collect while constructing their frame)
     and no Spark job runs. A miss that cannot be recorded returns
-    ``build()`` unwritten. ``fan_out`` as in :func:`materialize`."""
+    ``build()`` unwritten. The entry is read back as written, with no
+    fan-out (:func:`_scratch_read`)."""
     spark = reads.sparkSession
     key, version, hit = _lookup(_MATERIALIZED, name, reads)
     if hit is not None:
-        return _scratch_read(spark, hit.value, fan_out)
+        return _scratch_read(spark, hit.value)
     if key is None:
         return build()
     written = _write(build(), name)
     _record(_MATERIALIZED, key, reads, version, written)
-    return _scratch_read(spark, written, fan_out)
+    return _scratch_read(spark, written)
 
 
 def remember(name: str, reads, compute):
@@ -252,27 +251,20 @@ def remember(name: str, reads, compute):
     return value
 
 
-def materialize(df, fan_out: bool = True):
+def materialize(df):
     """Write ``df`` to a fresh scratch parquet path and return a frame
     that scans it, truncating lineage so downstream multi-branch plans
     pay for the derivation exactly once. Use :func:`scratch` to share
-    the write across calls.
-
-    The read applies the writer's schema explicitly so an empty frame
-    round-trips, and goes through the one fan-out policy
-    (``catalog.spread``: an under-split scan is repartitioned to
-    ``defaultParallelism``). ``fan_out=False`` skips it: for a tiny
-    dimension-sized intermediate whose consumers are broadcast builds
-    or one-row aggregates, the exchange is pure overhead — the fan-out
-    exists for CPU-heavy per-row consumers, not for these."""
-    return _scratch_read(df.sparkSession, _write(df), fan_out)
+    the write across calls. The frame scans the files as written, with
+    no fan-out (:func:`_scratch_read`)."""
+    return _scratch_read(df.sparkSession, _write(df))
 
 
 def _write(df, name: str = "tmp") -> _Written:
-    """Write ``df`` under this application's scratch directory. The
-    split count is probed here, once: scratch files are immutable after
-    the write, and the probe plans a physical scan on the Spark driver.
-    Every later read reuses the scan the probe resolved."""
+    """Write ``df`` under this application's scratch directory and
+    resolve the scan of what was written, once: scratch files are
+    immutable after the write, so every later read reuses that scan
+    and lists no files."""
     spark = df.sparkSession
     app = spark.sparkContext.applicationId
     app_dir = _os.path.join(_SCRATCH_ROOT, app)
@@ -286,21 +278,20 @@ def _write(df, name: str = "tmp") -> _Written:
     # compression ratio here.
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
     read = spark.read.schema(df.schema).parquet(path)
-    return _Written(path, df.schema, read.rdd.getNumPartitions(), resolved(read))
+    return _Written(path, df.schema, resolved(read))
 
 
-def _scratch_read(spark, written: _Written, fan_out: bool = True):
-    """Scan a scratch intermediate through the one fan-out policy,
-    ``catalog.spread``: Spark bin-packs small files into few splits,
-    which would serialize every stage consuming the materialized
-    frame, so an under-split scan is repartitioned to
-    ``defaultParallelism``. At real scale the files split properly and
-    the gate never fires. The scan is the one the write resolved,
-    unless ``spark`` is another session of the application."""
+def _scratch_read(spark, written: _Written):
+    """Scan a scratch intermediate as written, applying the writer's
+    schema so an empty frame round-trips. Scratch never fans out: lake
+    tables fan out where ``catalog.spread`` is called, and an
+    intermediate is split as its files allow. The scan is the one the
+    write resolved, unless ``spark`` is another session of the
+    application."""
     out = reuse(spark, written.read)
     if out is None:
         out = spark.read.schema(written.schema).parquet(written.path)
-    return spread(out, written.splits) if fan_out else out
+    return out
 
 
 def _pins_to_executors(master: str) -> bool:

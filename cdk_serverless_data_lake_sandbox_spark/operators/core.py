@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import dec, money, money_sum
 from cdk_serverless_data_lake_sandbox_spark.registry import register
 
@@ -144,9 +144,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-column projection push into the parquet scan; partial aggregation
     happens map-side so the shuffle carries only 6 grouped rows per
     partition regardless of input size. The scan fans out
-    (``load_tables`` fan_out): the chained decimal arithmetic is the
-    cost here."""
-    li = load_tables(spark, sf_dir, ("lineitem",), fan_out=("lineitem",))["lineitem"]
+    (``catalog.spread``): the chained decimal arithmetic is the cost
+    here."""
+    li = spread(load_tables(spark, sf_dir, ("lineitem",))["lineitem"], sf_dir, "lineitem")
     one = F.lit(1).cast("decimal(18,4)")
     disc_price = dec("l_extendedprice") * (one - dec("l_discount"))
     charge = disc_price.cast("decimal(18,6)") * (one + dec("l_tax"))

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     round_rat,
     sql_round_rat,
@@ -277,9 +277,9 @@ def decontaminate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     position lists."""
     # fan out: the gram explode and the in-row strip fold are this
     # query's CPU
-    d = load_tables(
-        spark, sf_dir, ("documents",), fan_out=("documents",)
-    )["documents"].select(
+    d = spread(
+        load_tables(spark, sf_dir, ("documents",))["documents"], sf_dir, "documents"
+    ).select(
         "doc_id",
         (F.pmod("doc_id", F.lit(20)) == 0).alias("is_bench"),
         F.split(F.col("text"), " ").alias("_w"),

@@ -15,11 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import (
-    lake_splits,
-    load_tables,
-    spread,
-)
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
     remember,
@@ -112,12 +108,12 @@ _BAND_ROWS = 4
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents through the one fan-out policy (``catalog.spread``),
-    hashed on the stable key: an under-split scan (the sandbox tables
-    are one parquet file) would pin the shingle explode and pair
-    generation to a single task."""
+    """documents through the one fan-out entry point
+    (``catalog.spread``), hashed on the stable key: an under-split scan
+    (the sandbox tables are one parquet file) would pin the shingle
+    explode and pair generation to a single task."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return spread(docs, lake_splits(spark, sf_dir, "documents"), "doc_id")
+    return spread(docs, sf_dir, "documents", "doc_id")
 
 
 # ---------------------------------------------------------------- C1
@@ -131,9 +127,10 @@ FROM documents GROUP BY md5(text)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on md5(text), keep the lowest doc_id
     per content hash. One shuffle on the hash; map-side partial
-    aggregation keeps the exchange tiny even with heavy duplication."""
+    aggregation keeps the exchange tiny even with heavy duplication,
+    so the scan is not fanned out."""
     return (
-        _docs(spark, sf_dir)
+        load_tables(spark, sf_dir, ("documents",))["documents"]
         .groupBy(F.md5(F.col("text")).alias("content_hash"))
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
@@ -1270,7 +1267,7 @@ def cdc_chunk_dedup_frame(docs: DataFrame, mod: int = _CDC_MOD) -> DataFrame:
             )
         )
 
-    chunks = scratch(f"cdc-chunks:{mod}", docs, build, fan_out=False)
+    chunks = scratch(f"cdc-chunks:{mod}", docs, build)
     # one row per (source, chunk_hash), so the rows sharing a hash
     # count its distinct sources
     per = (

@@ -33,11 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import (
-    lake_splits,
-    load_tables,
-    spread,
-)
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     round_rat,
     scratch,
@@ -61,7 +57,7 @@ _TOP_PAIRS = 50
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents through the fan-out policy (``catalog.spread``)."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return spread(docs, lake_splits(spark, sf_dir, "documents"))
+    return spread(docs, sf_dir, "documents")
 
 
 def _fingerprints(docs: DataFrame, k: int = _K, w: int = _W) -> DataFrame:

@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.registry import register
 
 _FRAME_BYTES = 16  # fake video frame size
@@ -2331,9 +2331,9 @@ def framehash_jaccard_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of the perceptual video dedup hash-exact driver-gated (the
     frame decode stays pytest-pinned — C110)."""
     # fan out: 10 md5s per doc map-side (see _planted_band_sigs)
-    docs = load_tables(
-        spark, sf_dir, ("documents",), fan_out=("documents",)
-    )["documents"]
+    docs = spread(
+        load_tables(spark, sf_dir, ("documents",))["documents"], sf_dir, "documents"
+    )
     frames = F.expr(
         f"""transform(sequence(1, {_VFG_N}), i ->
           CASE WHEN i <= doc_id % {_VFG_N + 1}

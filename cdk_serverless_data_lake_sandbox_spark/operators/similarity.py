@@ -14,11 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import (
-    lake_splits,
-    load_tables,
-    spread,
-)
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     RoundPins,
     pin,
@@ -923,10 +919,7 @@ def _kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"kmeans-assign-fixed:{_KMEANS_K}x{_KMEANS_ITERS}",
         e,
         lambda: kmeans_assign(
-            spread(
-                e.select("vec_id", "embedding"),
-                lake_splits(spark, sf_dir, "embeddings"),
-            ),
+            spread(e.select("vec_id", "embedding"), sf_dir, "embeddings"),
             _KMEANS_K,
             _KMEANS_ITERS,
         ).select("vec_id", "cluster", "d2"),
@@ -1106,7 +1099,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # are unchanged; at larger corpora pair work stays O(n * 500).
         n = e.count()
         k = max(_KMEANS_K, min(256, n // 500))
-        fanned = spread(e, lake_splits(spark, sf_dir, "embeddings"))
+        fanned = spread(e, sf_dir, "embeddings")
         return kmeans_assign(fanned, k, _KMEANS_ITERS).select(
             "vec_id", "embedding", "cluster", _norm("embedding").alias("nrm")
         )
@@ -2169,7 +2162,7 @@ def embedding_dim_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d=64 cosine doubles as cos_full, so no separate full-dim pass.
     One max_by aggregation per (dim, query) — no windows over the
     corpus, shuffle carries |dims| x |queries| rows. The corpus side
-    fans out (``load_tables`` fan_out: the |dims| prefix dots per pair
+    fans out (``catalog.spread``: the |dims| prefix dots per pair
     are the cost), and the |dims| x |queries| pick frame is
     pinned — it feeds BOTH the dim=64 reference branch and the
     agreement join, and unpinned Spark executed the whole scoring
@@ -2183,9 +2176,9 @@ def embedding_dim_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             dims=", ".join(str(d) for d in _ABLATION_DIMS)
         )
     )
-    e = load_tables(spark, sf_dir, ("embeddings",), fan_out=("embeddings",))[
-        "embeddings"
-    ].select("vec_id", "embedding", norms.alias("pnorm"))
+    e = spread(
+        load_tables(spark, sf_dir, ("embeddings",))["embeddings"], sf_dir, "embeddings"
+    ).select("vec_id", "embedding", norms.alias("pnorm"))
     q = _emb(spark, sf_dir).where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),

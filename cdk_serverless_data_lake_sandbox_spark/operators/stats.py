@@ -15,11 +15,7 @@ from pyspark.sql.window import Window
 
 from decimal import Decimal
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import (
-    lake_splits,
-    load_tables,
-    spread,
-)
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     dec,
     materialize,
@@ -2611,11 +2607,11 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab^2-/vocab-bounded), and the pair/token totals are summed
     FROM them — the previous plan re-ran the pair explode for
     ``pp = pr.count()`` and the token explode for ``tt``, four corpus
-    passes where two suffice. The scan fans out (``load_tables``
-    fan_out): the windowed pair transform is the cost."""
-    docs = load_tables(spark, sf_dir, ("documents",), fan_out=("documents",))[
-        "documents"
-    ]
+    passes where two suffice. The scan fans out (``catalog.spread``):
+    the windowed pair transform is the cost."""
+    docs = spread(
+        load_tables(spark, sf_dir, ("documents",))["documents"], sf_dir, "documents"
+    )
     d = docs.select(F.split(F.col("text"), " ").alias("ws"))
     pairs_expr = f"""
     flatten(transform(sequence(1, size(ws)), i ->
@@ -2733,11 +2729,11 @@ def skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r11: the frequency table PINS (vocab-bounded, consumed by the keep
     join AND the total — unpinned it re-ran the corpus token explode
-    per consumer), and the scan fans out (``load_tables`` fan_out):
-    the posexplode is the cost."""
-    docs = load_tables(spark, sf_dir, ("documents",), fan_out=("documents",))[
-        "documents"
-    ]
+    per consumer), and the scan fans out (``catalog.spread``): the
+    posexplode is the cost."""
+    docs = spread(
+        load_tables(spark, sf_dir, ("documents",))["documents"], sf_dir, "documents"
+    )
     toks = (
         docs.select(
             "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "w")
@@ -2899,7 +2895,7 @@ def bootstrap_ci_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU, and spreading after the text column is projected away
     # shuffles 16-byte rows, not documents. The stats branch below
     # keeps the un-fanned frame.
-    rep_src = spread(x, lake_splits(spark, sf_dir, "documents"))
+    rep_src = spread(x, sf_dir, "documents")
     u = _boot_u_spark("doc_id", "r")
     # hash ONCE per (doc, replicate); the 6-way CDF CASE then reads
     # the u COLUMN instead of re-inlining the hash per branch
@@ -2993,14 +2989,12 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     medians are nearest-rank element picks of in-row sorted arrays,
     so no cross-row float summation exists anywhere; slope/intercept
     are single IEEE-identical values, hash-exact vs the oracle."""
-    # fan_out: the two broadcast-join probes, the month/decimal
+    # fan out lineitem: the two broadcast-join probes, the month/decimal
     # projection and the partial aggregation are the cost, and the scan
     # feeds exactly one shuffle consumer (the brand-month groupBy).
-    t = load_tables(
-        spark, sf_dir, ("lineitem", "orders", "part"), fan_out=("lineitem",)
-    )
+    t = load_tables(spark, sf_dir, ("lineitem", "orders", "part"))
     r = (
-        t["lineitem"]
+        spread(t["lineitem"], sf_dir, "lineitem")
         .join(
             t["orders"].select("o_orderkey", "o_orderdate"),
             F.col("o_orderkey") == F.col("l_orderkey"),
@@ -3130,7 +3124,7 @@ def mann_whitney_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-group divisions/sqrt on identical integer inputs. The
     global rank table is one window over DISTINCT latency VALUES —
     value-domain-bounded (~130 day values), never corpus-sized."""
-    # no fan_out: the per-row work (one datediff + broadcast probe) is
+    # no fan-out: the per-row work (one datediff + broadcast probe) is
     # below the exchange's cost.
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
     lat = t["lineitem"].join(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     RoundPins,
     pin,
@@ -875,8 +875,7 @@ def _bm25_index(d: DataFrame) -> DataFrame:
     The token explode is filtered to the query vocabulary on the
     Generate output, so off-vocabulary tokens never leave the scan
     stage. Rows are at most docs x |query vocab|; the only consumer
-    is a join to a broadcast query table feeding a hash aggregate,
-    which shuffles anyway, so the scan is not fanned out."""
+    is a join to a broadcast query table feeding a hash aggregate."""
 
     def build() -> DataFrame:
         ws = d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("ws"))
@@ -895,7 +894,7 @@ def _bm25_index(d: DataFrame) -> DataFrame:
             .crossJoin(F.broadcast(stats))
         )
 
-    return scratch("bm25-index", d, build, fan_out=False)
+    return scratch("bm25-index", d, build)
 
 
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2971,9 +2970,9 @@ def unigram_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = scratch("ulm-final-seg", docs, lambda: _ulm_final_seg(docs))
     # fan out the stitch scan: the map-stitch path is one corpus pass
     # whose per-doc rebuild fold is CPU-heavy
-    stitch_docs = load_tables(
-        spark, sf_dir, ("documents",), fan_out=("documents",)
-    )["documents"]
+    stitch_docs = spread(
+        load_tables(spark, sf_dir, ("documents",))["documents"], sf_dir, "documents"
+    )
     return _ulm_assemble(stitch_docs, seg)
 
 

@@ -94,6 +94,11 @@ def get_spark(
         # a run-time error goes. PySpark reads the setting once per
         # process.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python data sources may push filters down (off by default in
+        # Spark 4.1): the ``kvscan`` reader prunes segments with them,
+        # and a reader that implements pushFilters refuses to start
+        # without this.
+        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -224,9 +224,15 @@ def register_kvscan(spark: SparkSession) -> None:
     """Register the ``kvscan`` format on this session:
     ``spark.read.format('kvscan').option('path', dir).load()``.
 
-    Python-source filter pushdown ships DISABLED by default (Spark
-    4.1); a reader implementing pushFilters REFUSES to initialize
-    without the conf, so registration enables it — a runtime SQL conf,
-    safe to set per-session."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    The reader pushes filters down, so the session needs
+    ``spark.sql.python.filterPushdown.enabled`` on, as
+    ``session.get_spark`` sets it. Registration leaves the session's
+    conf as found and refuses a session with the setting off: there the
+    reader would fail only once a query first scans it."""
+    conf = "spark.sql.python.filterPushdown.enabled"
+    if spark.conf.get(conf, "false").strip().lower() != "true":
+        raise ValueError(
+            f"kvscan pushes filters down: set {conf}=true on the session "
+            "(session.get_spark does) before registering it"
+        )
     spark.dataSource.register(make_kvscan_source())

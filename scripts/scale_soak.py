@@ -165,7 +165,7 @@ def winnowing_hot_check(spark, sf1: str) -> None:
     would go quadratic (round-6 verdict item 6)."""
     from pyspark.sql import functions as F
 
-    from cdk_serverless_data_lake_sandbox_spark.catalog import lake_splits, spread
+    from cdk_serverless_data_lake_sandbox_spark.catalog import spread
     from cdk_serverless_data_lake_sandbox_spark.operators.fingerprint import (
         _MAX_POSTING,
         _MIN_SHARED,
@@ -176,7 +176,8 @@ def winnowing_hot_check(spark, sf1: str) -> None:
         spark.read.parquet(os.path.join(sf1, "documents.parquet"))
         .where("doc_id % 4 = 0")
         .select("doc_id", "text"),
-        lake_splits(spark, sf1, "documents"),
+        sf1,
+        "documents",
     )
     t = time.time()
     dh = _fingerprints(docs).select("doc_id", "h").distinct()

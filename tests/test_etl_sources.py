@@ -34,7 +34,7 @@ from cdk_serverless_data_lake_sandbox_spark.operators.etl import (
 )
 from cdk_serverless_data_lake_sandbox_spark.plans import partition_filters, pushed_filters
 from cdk_serverless_data_lake_sandbox_spark.sources.crawler import CsvClassifier, crawl_delimited
-from cdk_serverless_data_lake_sandbox_spark.sources.kv import KVStore
+from cdk_serverless_data_lake_sandbox_spark.sources.kv import KVStore, register_kvscan
 
 from tests.conftest import SF_SMALL, count_jobs, parquet_calls
 
@@ -1586,3 +1586,18 @@ def test_crawl_xml_partition_discovery_and_pruning(spark, tmp_path):
         "PartitionFilters:"
     )[1].split("]")[0]
     assert len(pruned.collect()) == 2
+
+
+def test_register_kvscan_refuses_a_session_without_filter_pushdown(spark):
+    """``kvscan`` pushes filters down, and Spark refuses to start such a
+    reader unless the session allows it. Registration names the setting
+    up front instead of leaving the failure to the first scan."""
+    conf = "spark.sql.python.filterPushdown.enabled"
+    assert spark.conf.get(conf) == "true"
+    try:
+        spark.conf.set(conf, "false")
+        with pytest.raises(ValueError, match=re.escape(conf)):
+            register_kvscan(spark)
+    finally:
+        spark.conf.set(conf, "true")
+    register_kvscan(spark)

@@ -246,7 +246,8 @@ def test_doc_chunking_is_shuffle_free(spark):
 def test_plan_profile_counters(spark):
     """plan_profile must count what the plan actually contains: q5 has
     broadcast dim joins and a shuffle; q6 is scan+agg with pushdown
-    and no join at all; dedup_exact pins one fan-out exchange."""
+    and no join at all; dedup_simhash pins one fan-out exchange, and
+    dedup_exact, whose hash aggregate combines map-side, pins none."""
     from cdk_serverless_data_lake_sandbox_spark.plans import plan_profile
     from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
@@ -258,5 +259,6 @@ def test_plan_profile_counters(spark):
     assert q6["bhj"] == 0 and q6["smj"] == 0
     assert q6["pinned"] == []
     # the one-file documents scan fans out to the core count, keyed
-    dx = plan_profile(qs["dedup_exact"](spark, SF_MEDIUM))
-    assert dx["pinned"] == [spark.sparkContext.defaultParallelism]
+    sh = plan_profile(qs["dedup_simhash"](spark, SF_MEDIUM))
+    assert sh["pinned"] == [spark.sparkContext.defaultParallelism]
+    assert plan_profile(qs["dedup_exact"](spark, SF_MEDIUM))["pinned"] == []

@@ -56,6 +56,23 @@ def test_bm25_matches_python_reference(spark):
     assert got == want
 
 
+def test_bm25_query_table_is_local_relation(spark):
+    from cdk_serverless_data_lake_sandbox_spark.operators.text import (
+        _BM25_QUERIES,
+        _bm25_query_table,
+    )
+
+    qt = _bm25_query_table(spark)
+    assert [f.name for f in qt.schema.fields] == ["query_id", "token"]
+    assert qt.schema["query_id"].dataType.simpleString() == "int"
+    rows = {(r.query_id, r.token) for r in qt.collect()}
+    assert rows == {
+        (qid, t) for qid, ts in _BM25_QUERIES.items() for t in ts
+    }
+    # LocalRelation, not a Python-RDD scan
+    assert "ExistingRDD" not in qt._jdf.queryExecution().executedPlan().toString()
+
+
 def test_bm25_broadcasts_and_filters_before_shuffle(spark):
     """Query terms / df / corpus stats must be broadcast (no shuffle
     of term-count-sized sides) and the vocabulary filter must sit on

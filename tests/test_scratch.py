@@ -15,7 +15,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from cdk_serverless_data_lake_sandbox_spark.catalog import lake_splits, load_tables, under_split
+from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables, spread
 from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
 from cdk_serverless_data_lake_sandbox_spark.registry import all_queries
 
@@ -24,6 +24,12 @@ from .conftest import SF_SMALL, await_stream_done, parquet_calls
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _fans_out(spark, sf_dir: str) -> bool:
+    """Whether ``catalog.spread`` fans out the documents table."""
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    return spread(docs, sf_dir, "documents") is not docs
 
 
 def _entries(spark, table_path: str) -> list[tuple[str, str]]:
@@ -77,17 +83,6 @@ def test_hybrid_rrf_scratch_hit_path_identical(spark):
     assert len(first) > 0
 
 
-def test_materialize_fan_out_off_skips_repartition_keeps_values(spark):
-    src = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).alias("k")
-    )
-    on = H.materialize(src, fan_out=True)
-    off = H.materialize(src, fan_out=False)
-    assert _rows(on) == _rows(off)
-    off_plan = off._jdf.queryExecution().executedPlan().toString()
-    assert "RoundRobinPartitioning" not in off_plan
-
-
 @pytest.mark.parametrize(
     "copied, split_at_gate",
     [("doc_id < 5", False), ("true", True)],
@@ -123,11 +118,11 @@ def test_table_change_mid_application_rebuilds(spark, tmp_path, copied, split_at
     names = ("dedup_ngram_jaccard", "containment_dedup", "bm25_retrieval")
     qs = all_queries()
     try:
-        gated_before = under_split(lake_splits(spark, lake, "documents"), par)
+        gated_before = _fans_out(spark, lake)
         before = {n: _rows(qs[n](spark, lake)) for n in names}
         built = _entries(spark, doc_path)
         os.replace(staged, doc_path)
-        gated_after = under_split(lake_splits(spark, lake, "documents"), par)
+        gated_after = _fans_out(spark, lake)
         assert gated_before and gated_after != split_at_gate
         shutil.copytree(lake, fresh)
         after = {n: _rows(qs[n](spark, lake)) for n in names}
@@ -232,10 +227,10 @@ def test_scratch_hit_reuses_its_scan_until_the_entry_goes(spark, tmp_path, monke
     def read_dirs(df):
         return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
 
-    first = H.scratch("relscan", reads, build, fan_out=False)
+    first = H.scratch("relscan", reads, build)
     built = entry_dir()
     calls = parquet_calls(monkeypatch)
-    hit = H.scratch("relscan", reads, build, fan_out=False)
+    hit = H.scratch("relscan", reads, build)
     assert calls == [] and len(builds) == 1
     assert read_dirs(hit) == {built} and _rows(hit) == _rows(first)
     # a hit is a new scan: it joins the first frame on Column references
@@ -243,14 +238,14 @@ def test_scratch_hit_reuses_its_scan_until_the_entry_goes(spark, tmp_path, monke
 
     key = next(k for k in H._MATERIALIZED if k[1] == "relscan")
     H._drop(H._MATERIALIZED, key)
-    again = H.scratch("relscan", reads, build, fan_out=False)
+    again = H.scratch("relscan", reads, build)
     rebuilt = entry_dir()
     assert len(builds) == 2 and rebuilt != built and not os.path.exists(built)
     assert read_dirs(again) == {rebuilt}
 
     spark.range(4).write.mode("overwrite").parquet(path)  # the input changes
     src["reads"] = spark.read.parquet(path)
-    changed = H.scratch("relscan", src["reads"], build, fan_out=False)
+    changed = H.scratch("relscan", src["reads"], build)
     assert len(builds) == 3 and entry_dir() not in (built, rebuilt)
     assert not os.path.exists(rebuilt)
     assert read_dirs(changed) == {entry_dir()}

@@ -1798,11 +1798,14 @@ def test_stream_tokenize_gate_matches_batch_apply(spark, tmp_path):
 
 
 def test_table_loads_and_dynamic_overwrite_sinks_leave_the_session_conf_as_found(spark, tmp_path):
-    """Loading every table, and one micro-batch of each sink that
-    overwrites its batch's partition dynamically, leave the session's
-    conf exactly as found: the overwrite mode is a per-write option,
-    and the events loader restores the conf it reads nanos with."""
+    """Loading every table, registering the ``kvscan`` source, and one
+    micro-batch of each sink that overwrites its batch's partition
+    dynamically, leave the session's conf exactly as found: the
+    overwrite mode is a per-write option, the events loader restores
+    the conf it reads nanos with, and the session already allows the
+    filter pushdown ``kvscan`` needs."""
     from cdk_serverless_data_lake_sandbox_spark.operators.multimodal import attach_image_variants
+    from cdk_serverless_data_lake_sandbox_spark.sources.kv import register_kvscan
     from cdk_serverless_data_lake_sandbox_spark.streaming.jobs import (
         DOCS_STREAM_SCHEMA,
         stream_baseline_monitor,
@@ -1817,6 +1820,7 @@ def test_table_loads_and_dynamic_overwrite_sinks_leave_the_session_conf_as_found
 
     conf = spark.conf.getAll
     t = load_tables(spark, SF_SMALL)
+    register_kvscan(spark)
     assert spark.conf.getAll == conf
 
     def written(name, df):
